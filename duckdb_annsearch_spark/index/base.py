@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
 from duckdb_annsearch_spark.index import kernels
+from duckdb_annsearch_spark.session import estimated_bytes
 
 
 def with_labels(df: DataFrame, row_id_col: str, vector_col: str) -> DataFrame:
@@ -54,18 +55,16 @@ def with_labels(df: DataFrame, row_id_col: str, vector_col: str) -> DataFrame:
     # every build paid them regardless of size).  Estimate errors only
     # move task sizing, never results.
     cores = max(1, df.sparkSession.sparkContext.defaultParallelism)
-    try:
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        # 16 MB of ESTIMATED bytes per range partition: for parquet scans
-        # the optimizer estimate is the on-disk (compressed+encoded) size,
-        # commonly ~4x below in-memory row size — a 64 MB divisor could
-        # funnel a genuinely large input into 1-2 partitions (ADVICE r9).
-        # Estimate errors only move task sizing, never results.
-        n_parts = max(1, min(cores, -(-est_bytes // (16 << 20))))
-    except Exception:
-        n_parts = cores
+    est_bytes = estimated_bytes(df)
+    # 16 MB of ESTIMATED bytes per range partition: for parquet scans the
+    # optimizer estimate is the on-disk (compressed+encoded) size, commonly
+    # ~4x below in-memory row size — a 64 MB divisor could funnel a
+    # genuinely large input into 1-2 partitions (ADVICE r9).  Estimate
+    # errors only move task sizing, never results; no estimate -> cores.
+    n_parts = (
+        cores if est_bytes is None
+        else max(1, min(cores, -(-est_bytes // (16 << 20))))
+    )
     srt = (
         base.repartitionByRange(n_parts, "row_id")
         .sortWithinPartitions("row_id")

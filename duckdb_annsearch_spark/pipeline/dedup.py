@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from duckdb_annsearch_spark.operators.fts import tokenize
 from duckdb_annsearch_spark.pipeline.fanout import fan_out_small
 from duckdb_annsearch_spark.pipeline.text import HASH_MOD, bind, token_hash
+from duckdb_annsearch_spark.session import estimated_bytes, job_label
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -153,15 +154,17 @@ def band_buckets(
     signature rows of that band).  The shared banding primitive of
     :func:`lsh_duplicate_pairs` and the streaming near-dedup sink.
 
-    Map-only per row; the signature pipeline is lazily localCheckpointed
-    (not ``.persist()`` — checkpoint blocks are reclaimed by the
-    ContextCleaner once the DataFrame is dropped) so multi-consumer plans
-    (self-joins, bucket-min aggregates) run it once."""
+    Map-only per row; the signature pipeline is localCheckpointed (not
+    ``.persist()`` — checkpoint blocks are reclaimed by the ContextCleaner
+    once the DataFrame is dropped) so multi-consumer plans (self-joins,
+    bucket-min aggregates) run it once.  ``eager=False`` defers only the
+    signature stage itself: under AQE the call runs every shuffle stage
+    upstream of it (e.g. the fan-out exchange) right away."""
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     # fan the md5-per-shingle signature pass across cores when the input
-    # is a small single-split scan (no-op at scale — pipeline/fanout.py);
-    # the checkpoint then materializes in parallel too
+    # is small (no-op at scale — pipeline/fanout.py); the checkpoint then
+    # materializes in parallel too
     sigs = minhash_signatures(
         fan_out_small(df), text_col, id_col, num_hashes, shingle_k
     ).localCheckpoint(eager=False)
@@ -580,9 +583,10 @@ def verify_jaccard_pairs(
     array onto the pairs and computes intersection/union per pair, so cost
     is O(|pairs| · shingles-per-doc), never a posting-list blow-up.
 
-    The shingle relation feeds BOTH join sides — lazy-checkpointed so the
+    The shingle relation feeds BOTH join sides — localCheckpointed so the
     md5 shingle pass runs once, not once per side (the band_buckets
-    reasoning), and fanned out of single-split scans (no-op at scale)."""
+    reasoning: the call itself runs the upstream shuffle stages), and
+    fanned out of small inputs (no-op at scale)."""
     sh = (
         fan_out_small(df)
         .select(
@@ -640,24 +644,26 @@ def duplicate_clusters(
 
     Determinism contract (ADVICE r9): ``pairs`` must be a deterministic
     relation of its inputs (every in-repo producer is — md5/xxhash64
-    keyed joins, no sampling).  The lazy checkpoint below freezes ONE
+    keyed joins, no sampling).  The edge checkpoint below freezes ONE
     execution only at first materialization; if a caller ever passes a
     nondeterministic pair source, the ``take``-based fast-path gate and
     the distributed loop could observe different edge sets — pass
     ``max_driver_edges=None`` for such sources.  The gate measures
     id-filtered edges (edges whose endpoints exist in ``ids``), which is
     exactly the set the loop itself would propagate over."""
-    # lazy checkpoint (r9): eager ran a dedicated materialization job, then
-    # the cap gate ran a count job, then the fast path collected — three
-    # actions over one tiny relation.  Lazy materializes inside whichever
-    # action runs first; the loop rounds (the multi-consumer case) still
-    # reuse the same blocks.
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # eager=False (r9): eager=True added a dedicated job for the last
+    # (post-distinct) stage; deferred, that stage runs inside the gate's
+    # take and the loop rounds (the multi-consumer case) reuse the same
+    # blocks.  The call itself still runs every shuffle stage of the pair
+    # plan: AQE materializes them to plan the checkpointed RDD.
+    sc = ids.sparkSession.sparkContext
+    with job_label(sc, "duplicate_clusters: edges"):
+        edges = (
+            pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+            .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
     rows = None
     if max_driver_edges is not None:
         # match the distributed loop exactly: labels exist only for ids, so
@@ -670,11 +676,13 @@ def duplicate_clusters(
         )
         # ONE capped take replaces the count-gate job + the collect job:
         # at most cap+1 rows ever reach the driver, and > cap falls through
-        # to the distributed loop untouched.  (r10 examined: the take's 5
-        # bench jobs are AQE stage materializations of the semi-join
-        # broadcasts + the checkpoint, not a CollectLimit ramp — a
-        # coalesce(1) was A/B'd and changed nothing; left as-is.)
-        rows = edges_in.take(int(max_driver_edges) + 1)
+        # to the distributed loop untouched.  Its jobs are AQE stage
+        # materializations, not a CollectLimit ramp: the edge checkpoint's
+        # last stage plus the stages of the two id semi-joins — fewer when
+        # ``ids`` broadcasts than when it shuffles (each execution re-runs
+        # a shuffled side's stages).
+        with job_label(sc, "duplicate_clusters: cluster gate"):
+            rows = edges_in.take(int(max_driver_edges) + 1)
         if len(rows) > int(max_driver_edges):
             rows = None
     if rows is not None:
@@ -706,9 +714,10 @@ def duplicate_clusters(
                 F.coalesce("__root", F.col("id")).alias("cluster"),
             )
         )
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("cluster")
-    ).localCheckpoint()
+    with job_label(sc, "duplicate_clusters: labels"):
+        labels = ids.select(
+            F.col(id_col).alias("id"), F.col(id_col).alias("cluster")
+        ).localCheckpoint()
     converged = False
     for it in range(max_iterations):
         nbr = (
@@ -736,13 +745,14 @@ def duplicate_clusters(
                 F.coalesce("root_cluster", F.col("cluster")),
             ).alias("cluster"),
         )
-        new = hop.localCheckpoint()
-        changed = (
-            new.withColumnRenamed("cluster", "new_cluster")
-            .join(labels, "id")
-            .where(F.col("new_cluster") != F.col("cluster"))
-            .count()
-        )
+        with job_label(sc, f"duplicate_clusters: round {it}"):
+            new = hop.localCheckpoint()
+            changed = (
+                new.withColumnRenamed("cluster", "new_cluster")
+                .join(labels, "id")
+                .where(F.col("new_cluster") != F.col("cluster"))
+                .count()
+            )
         labels = new
         if changed == 0:
             converged = True
@@ -784,26 +794,38 @@ def dedup_fuzzy(
     # row its own key so it survives as its own singleton cluster
     from pyspark.sql import Window
 
+    sc = df.sparkSession.sparkContext
     hexp = _content_key(text_col, id_col).alias("__h")
     # per-group min via ONE window over the content-hash exchange (r9: the
     # groupBy + join-back shape exchanged the id/hash relation twice);
-    # lazy-checkpointed because mapping feeds both the unique-text filter
-    # and the final cluster join — without it the md5 pass runs twice
-    mapping = (
-        df.select(F.col(id_col), hexp)
-        .withColumn("__rep", F.min(id_col).over(Window.partitionBy("__h")))
-        .select(id_col, "__rep")
-        .localCheckpoint(eager=False)
-    )
+    # checkpointed because mapping feeds both the unique-text filter and
+    # the final cluster join — without it the md5 pass runs twice.  The
+    # call runs the content-hash exchange at once (AQE); the window stage
+    # itself materializes in the first action that reads it.
+    with job_label(sc, "dedup_fuzzy: mapping"):
+        mapping = (
+            df.select(F.col(id_col), hexp)
+            .withColumn("__rep", F.min(id_col).over(Window.partitionBy("__h")))
+            .select(id_col, "__rep")
+            .localCheckpoint(eager=False)
+        )
+    # a semi-join: the right side only filters df to representative ids.
+    # As an inner join the optimizer estimates this input at the product
+    # of both sides (GBs for a few hundred KB), which declines fan_out_small
+    # and stops the join from broadcasting
     uniq = df.join(
-        mapping.where(F.col(id_col) == F.col("__rep")).select(id_col), id_col
+        mapping.where(F.col(id_col) == F.col("__rep")).select(id_col),
+        id_col,
+        "left_semi",
     )
-    cand = lsh_duplicate_pairs(
-        uniq, text_col, id_col, num_hashes, bands, shingle_k, max_bucket
-    )
-    verified = verify_jaccard_pairs(
-        uniq, cand, text_col, id_col, threshold, shingle_k
-    )
+    with job_label(sc, "dedup_fuzzy: signatures"):
+        cand = lsh_duplicate_pairs(
+            uniq, text_col, id_col, num_hashes, bands, shingle_k, max_bucket
+        )
+    with job_label(sc, "dedup_fuzzy: verify shingles"):
+        verified = verify_jaccard_pairs(
+            uniq, cand, text_col, id_col, threshold, shingle_k
+        )
     # components over representatives; reps are per-group min ids, so the
     # component min over reps equals the component min over all members
     clusters = duplicate_clusters(uniq.select(id_col), verified, id_col)
@@ -828,16 +850,14 @@ def _bloom_worth_it(right: DataFrame) -> bool:
     count; when either number is unavailable the guard stays on
     (exactness never depends on this decision — the Bloom has no false
     negatives either way)."""
+    est = estimated_bytes(right)
     try:
-        est = int(
-            right._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
         thresh = int(
             right.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
         )
     except Exception:
         return True
-    return est > thresh if thresh >= 0 else True
+    return est is None or thresh < 0 or est > thresh
 
 
 def dedup_against(
@@ -902,6 +922,7 @@ def dedup_against(
     is skipped outright (``_bloom_worth_it``; ``ref_bloom_force=True``
     re-engages it unconditionally, for tests and for callers whose
     estimates are unavailable-but-known-big)."""
+    sc = df.sparkSession.sparkContext
     if mode == "exact":
         ref_keys = (
             ref.where(F.col(text_col).isNotNull())
@@ -930,15 +951,16 @@ def dedup_against(
             key64 = F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10).cast(
                 "long"
             )
-            bf = bloom_from_df(
-                ref.where(F.col(text_col).isNotNull()).select(
-                    F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10)
-                    .cast("long")
-                    .alias("__k64")
-                ),
-                "__k64",
-                fpp=ref_bloom_fpp,
-            )
+            with job_label(sc, "dedup_against: content bloom"):
+                bf = bloom_from_df(
+                    ref.where(F.col(text_col).isNotNull()).select(
+                        F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10)
+                        .cast("long")
+                        .alias("__k64")
+                    ),
+                    "__k64",
+                    fpp=ref_bloom_fpp,
+                )
             keyed = df.withColumn("__k64", key64)
             sure = bloom_filter_df(keyed, "__k64", bf, "definitely_not")
             maybe = bloom_filter_df(keyed, "__k64", bf, "maybe")
@@ -963,12 +985,13 @@ def dedup_against(
     )
 
     nonempty = F.size(word_shingles(F.col(text_col), shingle_k)) > 0
-    left = band_buckets(
-        df.where(nonempty), text_col, id_col, num_hashes, bands, shingle_k
-    )
-    right = band_buckets(
-        ref.where(nonempty), text_col, id_col, num_hashes, bands, shingle_k
-    ).withColumnRenamed("doc_id", "ref_id")
+    with job_label(sc, "dedup_against: signatures"):
+        left = band_buckets(
+            df.where(nonempty), text_col, id_col, num_hashes, bands, shingle_k
+        )
+        right = band_buckets(
+            ref.where(nonempty), text_col, id_col, num_hashes, bands, shingle_k
+        ).withColumnRenamed("doc_id", "ref_id")
     if max_bucket is not None:
         keep = (
             right.groupBy("band", "band_hash")
@@ -990,9 +1013,10 @@ def dedup_against(
         # the candidate equi-join is already map-side and the guard
         # cannot save a shuffle.
         bkey = F.xxhash64("band", "band_hash")
-        bf = bloom_from_df(
-            right.select(bkey.alias("__bk")), "__bk", fpp=ref_bloom_fpp
-        )
+        with job_label(sc, "dedup_against: band bloom"):
+            bf = bloom_from_df(
+                right.select(bkey.alias("__bk")), "__bk", fpp=ref_bloom_fpp
+            )
         left = bloom_filter_df(
             left.withColumn("__bk", bkey), "__bk", bf, "maybe"
         ).drop("__bk")
@@ -1003,8 +1027,7 @@ def dedup_against(
     )
     # exact cross-corpus Jaccard verify: shingles of each side joined on
     # the candidate pair (cost O(|cand| * shingles/doc)); fan_out_small
-    # parallelizes the shingle recompute off single-split inputs (no-op
-    # at scale)
+    # parallelizes the shingle recompute off small inputs (no-op at scale)
     sh_l = fan_out_small(df).select(
         F.col(id_col).alias("doc_id"),
         word_shingles(F.col(text_col), shingle_k).alias("__sa"),

@@ -28,6 +28,18 @@ def job_label(sc, text: str):
         sc.setJobDescription(prev)
 
 
+def estimated_bytes(df) -> int | None:
+    """The optimizer's size estimate of ``df`` (``sizeInBytes`` of its
+    optimized plan) — the one answer to "is this relation small?" that the
+    planner itself uses for broadcast decisions.  Planning only: no Spark
+    job runs.  ``None`` when the plan offers no estimate; each caller
+    chooses its own fallback."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def get_spark(app_name: str = "duckdb_annsearch_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
