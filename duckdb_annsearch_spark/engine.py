@@ -214,10 +214,10 @@ class AnnEngine:
         # clusters it burns planning/coalesce work and on local mode it
         # means 200-way tiny exchanges before coalesce.  Derive the same
         # core-based default the engine session uses — but ONLY when the
-        # host left the stock default in place (an explicit host setting
-        # wins, whatever it is).
+        # host never set the key (an explicit host setting wins, whatever
+        # it is, 200 included; ``getAll`` lists only explicitly set keys).
         try:
-            if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+            if "spark.sql.shuffle.partitions" not in spark.conf.getAll:
                 cores = max(1, spark.sparkContext.defaultParallelism)
                 spark.conf.set(
                     "spark.sql.shuffle.partitions", str(max(cores, 8))

@@ -1,5 +1,6 @@
 """LLM-training-data pipeline operators (beyond-reference scope, SURVEY §7.1
-M9): deduplication, text analysis, similarity self-join, multimodal columns.
+M9): deduplication, text analysis, similarity self-join, and multimodal
+column plumbing (md5 byte features; no media codecs).
 
 All operators are pure DataFrame transforms built from JVM-side expressions
 (no Python UDFs in the hot paths) so they scale with the cluster.

@@ -64,14 +64,6 @@ def word_frequencies(
     )
 
 
-def _pair_counts(word_syms: list[tuple], freqs: list[int]) -> dict:
-    pairs: dict = {}
-    for syms, f in zip(word_syms, freqs):
-        for a, b in zip(syms, syms[1:]):
-            pairs[(a, b)] = pairs.get((a, b), 0) + f
-    return pairs
-
-
 def _merge_word(syms: tuple, pair: tuple) -> tuple:
     out = []
     i = 0

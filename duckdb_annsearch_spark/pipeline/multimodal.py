@@ -1,38 +1,14 @@
 """Multimodal columns: image/audio/video as opaque BINARY + typed metadata.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, ``mapInPandas``
-signatures, partitioning) is real and tested.  Four codecs are REAL and
-pure-stdlib+numpy (the container has no PIL/soundfile/av):
-
-- WAV (RIFF/WAVE PCM, 8/16/32-bit int + 32-bit IEEE float, incl.
-  WAVE_FORMAT_EXTENSIBLE) via the stdlib ``wave`` module with a manual
-  RIFF fallback -> real audio features (duration, RMS, peak, zero
-  crossings, 8 FFT band energies).
-- BMP (BITMAPINFOHEADER, uncompressed 24/32-bit BI_RGB) via ``struct`` ->
-  real image features (dims, RGB means, gray std, 8-bin gray histogram),
-  plus a real nearest-neighbor resize that re-encodes 24-bit BMP.
-- PNG (non-interlaced 8-bit gray/palette/RGB/RGBA) via ``zlib`` +
-  ``struct`` with per-row filter reversal (None/Sub/Up/Average/Paeth) ->
-  the same image features, plus resize that re-encodes 8-bit RGB PNG.
-- JPEG (ITU T.81 BASELINE sequential DCT, 8-bit, gray or YCbCr with
-  arbitrary integer sampling factors, restart markers): full marker
-  parse, canonical Huffman decode with byte-unstuffing, dequant +
-  dezigzag + orthonormal IDCT, chroma upsample, YCbCr->RGB -> the same
-  image features.  Progressive / arithmetic / 12-bit raise -> fallback.
-  An encoder (``encode_jpeg_baseline``) exists for tests: it emits
-  valid baseline JFIF with self-describing canonical Huffman tables.
-
-MP3 and MP4 get REAL container parses (MP3: frame-header walk →
-duration, sample rate, bitrate, frame count, VBR-ness; MP4/ISO-BMFF:
-box-tree walk → duration, track inventory, video dimensions — the
-curation-relevant metadata) with content stats explicitly zeroed; full
-Layer-III PCM / video-frame decode keep the documented fake + the
-library call that replaces them (``soundfile`` / ``av``).
-
-Unrecognized or corrupt payloads fall back to the deterministic md5 fake
-(documented below) instead of failing the batch: at 100 TB one corrupt
-file must never kill a stage, and the fallback keeps features
-deterministic for oracle checks.
+The Spark-side plumbing is real: the media schema, Arrow-batched
+``mapInPandas`` feature extraction per executor partition, payload bytes
+never on the driver.  The features are NOT decoded media: for every
+payload, whatever its kind or leading bytes, the feature vector is the
+payload's md5 digest as ``FEATURE_DIM`` bytes / 255 (NULL hashes as
+``b""``).  No codec decodes images, audio or video here; a real pipeline
+swaps :func:`decode_features` for a library decoder (PIL, ``soundfile``,
+``av``) behind the same signature.  The md5 contract is what the
+``media_features`` query's DuckDB oracle checks.
 
 Schema conventions:
   media(media_id long, kind string, payload binary, meta map<string,string>)
@@ -42,16 +18,12 @@ Schema conventions:
 from __future__ import annotations
 
 import hashlib
-import io
-import struct
-import wave
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_SCHEMA = "media_id long, kind string, payload binary, meta map<string,string>"
 FEATURE_DIM = 16
@@ -61,1454 +33,15 @@ def make_media_df(spark, rows: list[tuple[int, str, bytes, dict]]) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-# --------------------------------------------------------------- WAV codec
-
-
-def _wav_chunks(payload: bytes):
-    """Manual RIFF walk: ({tag, nch, rate, bits}, data_bytes).  The format
-    tag (1 = int PCM, 3 = IEEE float) is resolved through
-    WAVE_FORMAT_EXTENSIBLE's SubFormat GUID when present.  Raises
-    ValueError when the payload is not a parseable WAVE."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    fmt, data = None, None
-    pos = 12
-    try:
-        while pos + 8 <= len(payload):
-            cid = payload[pos:pos + 4]
-            size = struct.unpack_from("<I", payload, pos + 4)[0]
-            if cid == b"fmt " and size >= 16:
-                tag, nch, rate, _br, _ba, bits = struct.unpack_from(
-                    "<HHIIHH", payload, pos + 8
-                )
-                if tag == 0xFFFE and size >= 40:  # EXTENSIBLE: real tag is
-                    # the first 2 bytes of the SubFormat GUID at offset 24
-                    tag = struct.unpack_from("<H", payload, pos + 8 + 24)[0]
-                fmt = {"tag": tag, "nch": nch, "rate": rate, "bits": bits}
-            elif cid == b"data":
-                data = payload[pos + 8:pos + 8 + size]
-            pos += 8 + size + (size & 1)  # chunks are word-aligned
-    except struct.error as exc:
-        raise ValueError(f"truncated WAVE chunk at {pos}") from exc
-    if fmt is None or data is None:
-        raise ValueError("WAVE payload missing fmt/data chunk")
-    return fmt, data
-
-
-def _wav_format_tag(payload: bytes) -> int | None:
-    """The 'fmt ' chunk's format tag (1 = int PCM, 3 = IEEE float) or None
-    when the chunk walk fails — callers then fall back to a value
-    heuristic."""
-    try:
-        return _wav_chunks(payload)[0]["tag"]
-    except (ValueError, IndexError):
-        return None
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """(samples float32 in [-1, 1] mono-mixed, sample_rate) from a RIFF/WAVE
-    payload.  Stdlib ``wave`` handles the chunk walk where it can; payloads
-    it rejects (format-3 IEEE float and WAVE_FORMAT_EXTENSIBLE on this
-    Python) fall back to a manual RIFF parse.  8-bit unsigned, 16/32-bit
-    signed PCM, and 32-bit IEEE float frames are normalized here.  Raises
-    on anything unrecognizable (callers fall back)."""
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            nch, sw, rate, nframes = (
-                w.getnchannels(), w.getsampwidth(), w.getframerate(),
-                w.getnframes(),
-            )
-            raw = w.readframes(nframes)
-    except (wave.Error, EOFError):
-        fmt, raw = _wav_chunks(payload)
-        if fmt["tag"] not in (1, 3) or fmt["bits"] not in (8, 16, 32):
-            raise ValueError(
-                f"unsupported WAV format tag {fmt['tag']} / {fmt['bits']}-bit"
-            ) from None
-        nch, sw, rate = fmt["nch"], fmt["bits"] // 8, fmt["rate"]
-    if sw == 1:  # 8-bit WAV is unsigned
-        x = (np.frombuffer(raw, dtype=np.uint8).astype(np.float32) - 128.0) / 128.0
-    elif sw == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.float32) / 32768.0
-    elif sw == 4:
-        xi = np.frombuffer(raw, dtype="<i4")
-        xf = xi.view("<f4")
-        # int PCM vs IEEE float: trust the fmt chunk's format tag (parsed
-        # directly — stdlib wave maps EXTENSIBLE float here too).  Only when
-        # the tag is unreadable fall back to a value heuristic, where any
-        # NaN/Inf viewed as float32 is proof of int PCM (the old
-        # range-only heuristic misread quiet int PCM as denormal floats).
-        tag = _wav_format_tag(payload)
-        if tag == 3:
-            is_float = True
-        elif tag == 1:
-            is_float = False
-        else:
-            finite = np.isfinite(xf)
-            asf = np.abs(xf[finite])
-            is_float = bool(finite.all() and asf.size and float(asf.max()) <= 4.0)
-        if is_float:
-            x = xf.astype(np.float32)
-        else:
-            x = xi.astype(np.float32) / 2147483648.0
-    else:
-        raise ValueError(f"unsupported WAV sample width {sw}")
-    if nch > 1:
-        x = x[: (len(x) // nch) * nch].reshape(-1, nch).mean(axis=1)
-    return np.clip(x, -1.0, 1.0), rate
-
-
-def wav_features(payload: bytes) -> np.ndarray:
-    """FEATURE_DIM real audio features: [1 (audio tag), channels-agnostic
-    duration s, rate/48k, rms, peak, mean_abs, zero-crossing rate, dc
-    offset, 8 normalized FFT band energies]."""
-    x, rate = decode_wav(payload)
-    n = len(x)
-    dur = n / float(rate) if rate else 0.0
-    if n == 0:
-        head = [1.0, 0.0, rate / 48000.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-        return np.asarray(head + [0.0] * 8, dtype=np.float32)
-    rms = float(np.sqrt(np.mean(x * x)))
-    peak = float(np.max(np.abs(x)))
-    mean_abs = float(np.mean(np.abs(x)))
-    zcr = float(np.mean(np.signbit(x[1:]) != np.signbit(x[:-1]))) if n > 1 else 0.0
-    dc = float(np.mean(x))
-    spec = np.abs(np.fft.rfft(x.astype(np.float64)))
-    bands = np.array_split(spec, 8)
-    be = np.asarray([float(np.sum(b * b)) for b in bands], dtype=np.float64)
-    tot = float(be.sum())
-    be = be / tot if tot > 0 else be
-    head = [1.0, dur, rate / 48000.0, rms, peak, mean_abs, zcr, dc]
-    return np.asarray(head + be.tolist(), dtype=np.float32)
-
-
-def encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """16-bit mono PCM WAV bytes from float samples in [-1, 1] (test/fixture
-    helper and the write half of the round-trip contract)."""
-    pcm = (np.clip(samples, -1.0, 1.0) * 32767.0).astype("<i2")
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(int(rate))
-        w.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-# --------------------------------------------------------------- BMP codec
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """(h, w, 3) uint8 RGB from an uncompressed 24/32-bit BI_RGB BMP
-    (BITMAPINFOHEADER or larger).  Raises on anything else."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size = struct.unpack_from("<I", payload, 14)[0]
-    if hdr_size < 40:
-        raise ValueError(f"unsupported DIB header size {hdr_size}")
-    width, height = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if compression != 0 or bpp not in (24, 32):
-        raise ValueError(f"unsupported BMP: bpp={bpp} compression={compression}")
-    if width <= 0 or height == 0:
-        raise ValueError(f"bad BMP dims {width}x{height}")
-    bottom_up = height > 0
-    h = abs(height)
-    nbytes = bpp // 8
-    stride = ((bpp * width + 31) // 32) * 4
-    need = data_off + stride * h
-    if len(payload) < need:
-        raise ValueError("truncated BMP pixel data")
-    rows = np.frombuffer(payload, dtype=np.uint8, count=stride * h, offset=data_off)
-    rows = rows.reshape(h, stride)[:, : width * nbytes].reshape(h, width, nbytes)
-    if bottom_up:
-        rows = rows[::-1]
-    # BMP stores BGR(A); return RGB
-    return np.ascontiguousarray(rows[:, :, 2::-1])
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """24-bit BI_RGB bottom-up BMP bytes from an (h, w, 3) uint8 RGB array."""
-    h, w = img.shape[:2]
-    stride = ((24 * w + 31) // 32) * 4
-    pad = stride - w * 3
-    body = np.zeros((h, stride), dtype=np.uint8)
-    body[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)  # bottom-up BGR
-    pixels = body.tobytes()
-    file_size = 54 + len(pixels)
-    header = struct.pack("<2sIHHI", b"BM", file_size, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0
-    )
-    assert pad >= 0
-    return header + pixels
-
-
-def bmp_features(payload: bytes) -> np.ndarray:
-    return _image_features(decode_bmp(payload))
-
-
-def _image_features(img: np.ndarray) -> np.ndarray:
-    """FEATURE_DIM real image features: [2 (image tag), w/1000, h/1000,
-    aspect, mean_r, mean_g, mean_b, gray std, 8-bin gray histogram
-    (fraction of pixels)] — shared by every image codec (BMP, PNG)."""
-    h, w = img.shape[:2]
-    f = img.astype(np.float32) / 255.0
-    gray = f @ np.asarray([0.299, 0.587, 0.114], dtype=np.float32)
-    hist, _ = np.histogram(gray, bins=8, range=(0.0, 1.0))
-    hist = hist.astype(np.float64) / max(1, gray.size)
-    head = [
-        2.0, w / 1000.0, h / 1000.0, w / float(h),
-        float(f[:, :, 0].mean()), float(f[:, :, 1].mean()),
-        float(f[:, :, 2].mean()), float(gray.std()),
-    ]
-    return np.asarray(head + hist.tolist(), dtype=np.float32)
-
-
-# --------------------------------------------------------------- PNG codec
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    """PNG Paeth predictor (RFC 2083 §6.6): pick whichever of left/up/
-    up-left is closest to a+b-c."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """(h, w, 3) uint8 RGB from a non-interlaced 8-bit PNG (color types
-    0 gray / 2 RGB / 3 palette / 4 gray+alpha / 6 RGBA; alpha dropped,
-    gray replicated).  Pure zlib + struct — same pattern as the BMP codec;
-    raises on anything else (callers fall back).  Per-row filter reversal
-    (None/Sub/Up/Average/Paeth); Up is vectorized, the x-sequential
-    filters run a per-byte loop — fine for feature extraction, not a
-    high-throughput decoder (that is PIL's job when present)."""
-    import zlib
-
-    if not payload.startswith(PNG_SIG):
-        raise ValueError("not a PNG payload")
-    ihdr, plte, idat = None, None, []
-    pos = 8
-    while pos + 8 <= len(payload):
-        ln = int.from_bytes(payload[pos:pos + 4], "big")
-        typ = payload[pos + 4:pos + 8]
-        data = payload[pos + 8:pos + 8 + ln]
-        if len(data) < ln:
-            raise ValueError("truncated PNG chunk")
-        if typ == b"IHDR":
-            ihdr = data
-        elif typ == b"PLTE":
-            plte = data
-        elif typ == b"IDAT":
-            idat.append(data)
-        elif typ == b"IEND":
-            break
-        pos += 12 + ln  # length + type + data + crc
-    if ihdr is None or len(ihdr) < 13 or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, depth, ctype, comp, filt, interlace = struct.unpack(
-        ">IIBBBBB", ihdr[:13]
-    )
-    if depth != 8 or interlace != 0 or comp != 0 or filt != 0:
-        raise ValueError(
-            f"unsupported PNG: depth={depth} interlace={interlace}"
-        )
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-    if channels is None:
-        raise ValueError(f"unsupported PNG color type {ctype}")
-    if w <= 0 or h <= 0 or w * h > 64_000_000:
-        raise ValueError(f"bad PNG dims {w}x{h}")
-    stride = w * channels
-    need = h * (stride + 1)
-    # bounded inflate: a zlib-bomb IDAT must not allocate past the size
-    # IHDR promises (one corrupt file must never kill a stage)
-    dec = zlib.decompressobj()
-    raw = dec.decompress(b"".join(idat), need + 1)
-    if len(raw) != need or not (dec.eof or dec.flush() == b""):
-        raise ValueError("bad PNG scanline data size")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    bpp = channels
-    posr = 0
-    for y in range(h):
-        ftype = raw[posr]
-        row = np.frombuffer(raw, np.uint8, stride, posr + 1).copy()
-        posr += stride + 1
-        if ftype == 0:
-            pass
-        elif ftype == 2:  # Up: uint8 addition wraps mod 256, per spec
-            row += prev
-        elif ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                row[i] = (int(row[i]) + int(row[i - bpp])) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = int(row[i - bpp]) if i >= bpp else 0
-                row[i] = (int(row[i]) + ((left + int(prev[i])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = int(row[i - bpp]) if i >= bpp else 0
-                c = int(prev[i - bpp]) if i >= bpp else 0
-                row[i] = (int(row[i]) + _paeth(a, int(prev[i]), c)) & 0xFF
-        else:
-            raise ValueError(f"bad PNG filter type {ftype}")
-        out[y] = row
-        prev = row
-    px = out.reshape(h, w, channels)
-    if ctype == 3:
-        if plte is None or len(plte) % 3:
-            raise ValueError("palette PNG missing/odd PLTE")
-        pal = np.frombuffer(plte, np.uint8).reshape(-1, 3)
-        if int(px.max()) >= pal.shape[0]:
-            raise ValueError("palette index out of range")
-        return np.ascontiguousarray(pal[px[:, :, 0]])
-    if ctype in (0, 4):  # gray (+alpha): replicate, drop alpha
-        return np.repeat(px[:, :, :1], 3, axis=2)
-    return np.ascontiguousarray(px[:, :, :3])  # RGB / RGBA minus alpha
-
-
-def encode_png(img: np.ndarray) -> bytes:
-    """8-bit RGB non-interlaced PNG bytes (filter 0 rows, one zlib IDAT)
-    from an (h, w, 3) uint8 array — the write half of the round-trip
-    contract and the resize re-encode target."""
-    import zlib
-
-    h, w = img.shape[:2]
-    if img.ndim == 2:
-        img = np.repeat(img[:, :, None], 3, axis=2)
-    body = b"".join(
-        b"\x00" + np.ascontiguousarray(img[y, :, :3], dtype=np.uint8).tobytes()
-        for y in range(h)
-    )
-
-    def chunk(typ: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + typ + data
-            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
-        )
-
-    return (
-        PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(body, 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def png_features(payload: bytes) -> np.ndarray:
-    return _image_features(decode_png(payload))
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample (the classic index map — deterministic,
-    no interpolation kernel to disagree about across platforms)."""
-    h, w = img.shape[:2]
-    yi = (np.arange(height) * (h / height)).astype(np.int64).clip(0, h - 1)
-    xi = (np.arange(width) * (w / width)).astype(np.int64).clip(0, w - 1)
-    return img[yi][:, xi]
-
-
-# -------------------------------------------------------------- JPEG codec
-#
-# Baseline sequential DCT per ITU T.81 (the public JPEG spec) — the same
-# decode the reference gets from its image library; here pure stdlib +
-# numpy because the container has no PIL.  Feature-extraction grade: the
-# entropy decode is a per-block Python loop (fine for features; a
-# high-throughput decoder is PIL's job when present).
-
-JPEG_SOI = b"\xff\xd8"
-
-# zigzag scan order (T.81 fig. 5): anti-diagonals, alternating direction
-_ZZ = []
-for _s in range(15):
-    _diag = [(_k, _s - _k) for _k in range(max(0, _s - 7), min(8, _s + 1))]
-    _ZZ += _diag[::-1] if _s % 2 == 0 else _diag
-_ZZ_R = np.asarray([r for r, _ in _ZZ])
-_ZZ_C = np.asarray([c for _, c in _ZZ])
-
-# orthonormal 8x8 DCT-II matrix: forward F = A @ f @ A.T equals T.81's
-# definition exactly; inverse f = A.T @ F @ A
-_DCT_A = np.asarray(
-    [
-        [
-            (np.sqrt(0.125) if u == 0 else 0.5)
-            * np.cos((2 * x + 1) * u * np.pi / 16)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ],
-    dtype=np.float64,
-)
-
-
-def _is_jpeg(p: bytes) -> bool:
-    return len(p) >= 4 and p[:2] == JPEG_SOI and p[2] == 0xFF
-
-
-def _build_huff(counts: list, symbols: list) -> dict:
-    """Canonical Huffman per T.81 C.2: (length, code) -> symbol."""
-    t, code, k = {}, 0, 0
-    for ln in range(1, 17):
-        for _ in range(counts[ln - 1]):
-            t[(ln, code)] = symbols[k]
-            k += 1
-            code += 1
-        code <<= 1
-    return t
-
-
-class _JpegBits:
-    """Entropy-segment bit reader with 0xFF00 byte-unstuffing."""
-
-    __slots__ = ("d", "i", "buf", "n")
-
-    def __init__(self, d: bytes, i: int):
-        self.d, self.i, self.buf, self.n = d, i, 0, 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            b = self.d[self.i]
-            if b == 0xFF:
-                if self.d[self.i + 1] != 0x00:
-                    raise ValueError("marker inside entropy-coded data")
-                self.i += 2
-            else:
-                self.i += 1
-            self.buf, self.n = b, 8
-        self.n -= 1
-        return (self.buf >> self.n) & 1
-
-    def receive(self, s: int) -> int:
-        v = 0
-        for _ in range(s):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume the expected RSTn marker."""
-        self.n = 0
-        if self.d[self.i] != 0xFF or not (0xD0 <= self.d[self.i + 1] <= 0xD7):
-            raise ValueError("expected restart marker")
-        self.i += 2
-
-
-def _huff_read(br: _JpegBits, table: dict) -> int:
-    code, ln = 0, 0
-    while ln < 16:
-        code = (code << 1) | br.bit()
-        ln += 1
-        sym = table.get((ln, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid huffman code")
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.12: map the s received magnitude bits to a signed value."""
-    return v - (1 << s) + 1 if s and v < (1 << (s - 1)) else v
-
-
-def _entropy_end(d: bytes, i: int) -> int:
-    """Index of the first true marker (not a stuffed 0xFF00, not RSTn)
-    after entropy-coded data starting at ``i`` — the next scan/segment."""
-    while i < len(d) - 1:
-        if d[i] == 0xFF and d[i + 1] != 0x00 and not (0xD0 <= d[i + 1] <= 0xD7):
-            return i
-        i += 1
-    return len(d)
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """(h, w, 3) uint8 RGB from a BASELINE sequential (SOF0/SOF1) or
-    PROGRESSIVE (SOF2, spectral selection + successive approximation,
-    T.81 G.1.2) JPEG: 8-bit, 1 or 3 components, any integer sampling
-    factors that divide the max, DRI/RSTn honored.  Raises on
-    hierarchical/lossless modes, arithmetic coding, 12-bit precision, or
-    corrupt streams — callers fall back to the deterministic fake."""
-    d = payload
-    if not _is_jpeg(d):
-        raise ValueError("not a JPEG payload")
-    qt: dict = {}
-    hts: dict = {}
-    comps = None
-    h = w = 0
-    ri = 0
-    progressive = False
-    scan = None  # baseline: (scomp, data_pos)
-    scans: list[tuple] = []  # progressive: per-scan records
-    i = 2
-    while i + 2 <= len(d):
-        if d[i] != 0xFF:
-            raise ValueError("bad marker segment")
-        m = d[i + 1]
-        if m == 0xFF:  # fill byte
-            i += 1
-            continue
-        i += 2
-        if m in (0xD8, 0x01) or 0xD0 <= m <= 0xD7:
-            continue
-        if m == 0xD9:
-            break
-        ln = int.from_bytes(d[i:i + 2], "big")
-        seg = d[i + 2:i + ln]
-        if m == 0xDB:  # DQT (tables stored in zigzag order)
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 15
-                p += 1
-                if pq == 0:
-                    qt[tq] = np.frombuffer(
-                        seg[p:p + 64], np.uint8
-                    ).astype(np.float64)
-                    p += 64
-                else:
-                    qt[tq] = np.frombuffer(
-                        seg[p:p + 128], ">u2"
-                    ).astype(np.float64)
-                    p += 128
-        elif m in (0xC0, 0xC1, 0xC2):  # SOF0/SOF1 sequential, SOF2 progressive
-            if seg[0] != 8:
-                raise ValueError("only 8-bit precision supported")
-            progressive = m == 0xC2
-            h = int.from_bytes(seg[1:3], "big")
-            w = int.from_bytes(seg[3:5], "big")
-            comps = [
-                (seg[6 + 3 * c], seg[7 + 3 * c] >> 4,
-                 seg[7 + 3 * c] & 15, seg[8 + 3 * c])
-                for c in range(seg[5])
-            ]
-        elif m in (0xC3, 0xC5, 0xC6, 0xC7,
-                   0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("only sequential/progressive huffman JPEG supported")
-        elif m == 0xC4:  # DHT
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                p += 1
-                counts = list(seg[p:p + 16])
-                p += 16
-                ns = sum(counts)
-                hts[(tc, th)] = _build_huff(counts, list(seg[p:p + ns]))
-                p += ns
-        elif m == 0xDD:  # DRI
-            ri = int.from_bytes(seg[:2], "big")
-        elif m == 0xDA:  # SOS — entropy data follows the segment
-            nsc = seg[0]
-            scomp = [
-                (seg[1 + 2 * c], seg[2 + 2 * c] >> 4, seg[2 + 2 * c] & 15)
-                for c in range(nsc)
-            ]
-            if not progressive:
-                scan = (scomp, i + ln)
-                break
-            ss, se = seg[1 + 2 * nsc], seg[2 + 2 * nsc]
-            ah, al = seg[3 + 2 * nsc] >> 4, seg[3 + 2 * nsc] & 15
-            # tables and DRI can be redefined between scans: snapshot now
-            scans.append((scomp, ss, se, ah, al, i + ln, dict(hts), ri))
-            i = _entropy_end(d, i + ln)
-            continue
-        i += ln
-    if comps is None or not h or not w:
-        raise ValueError("missing SOF/SOS")
-    if progressive:
-        if not scans:
-            raise ValueError("missing SOF/SOS")
-        return _finish_jpeg(
-            _progressive_planes(d, comps, scans, qt, h, w), comps, h, w
-        )
-    if scan is None:
-        raise ValueError("missing SOF/SOS")
-    scomp, dpos = scan
-    tbl = {cid: (hts[(0, td)], hts[(1, ta)]) for cid, td, ta in scomp}
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for _, ch, cv, _tq in comps:
-        if not ch or not cv or hmax % ch or vmax % cv:
-            raise ValueError("unsupported sampling factors")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = {
-        cid: np.zeros((mcuy * cv * 8, mcux * ch * 8), np.float64)
-        for cid, ch, cv, _tq in comps
-    }
-    pred = {cid: 0 for cid, *_ in comps}
-    br = _JpegBits(d, dpos)
-    A = _DCT_A
-    for mi in range(mcux * mcuy):
-        if ri and mi and mi % ri == 0:
-            br.restart()
-            pred = {cid: 0 for cid, *_ in comps}
-        my, mx = divmod(mi, mcux)
-        for cid, ch, cv, tq in comps:
-            dc_t, ac_t = tbl[cid]
-            q = qt[tq]
-            for by in range(cv):
-                for bx in range(ch):
-                    s = _huff_read(br, dc_t)
-                    pred[cid] += _extend(br.receive(s), s)
-                    coef = np.zeros(64, np.float64)
-                    coef[0] = pred[cid]
-                    k = 1
-                    while k < 64:
-                        rs = _huff_read(br, ac_t)
-                        r, sz = rs >> 4, rs & 15
-                        if sz == 0:
-                            if r != 15:
-                                break  # EOB
-                            k += 16
-                            continue
-                        k += r
-                        if k > 63:
-                            raise ValueError("AC index overflow")
-                        coef[k] = _extend(br.receive(sz), sz)
-                        k += 1
-                    blk = np.zeros((8, 8), np.float64)
-                    blk[_ZZ_R, _ZZ_C] = coef * q
-                    px = A.T @ blk @ A + 128.0
-                    y0 = (my * cv + by) * 8
-                    x0 = (mx * ch + bx) * 8
-                    planes[cid][y0:y0 + 8, x0:x0 + 8] = px
-    return _finish_jpeg(planes, comps, h, w)
-
-
-def _finish_jpeg(planes: dict, comps: list, h: int, w: int) -> np.ndarray:
-    """Shared decode tail: upsample subsampled planes, crop to (h, w),
-    YCbCr -> RGB (ITU T.871 constants) or replicate grayscale."""
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    out = []
-    for cid, ch, cv, _tq in comps:
-        pl = np.repeat(
-            np.repeat(planes[cid], vmax // cv, axis=0), hmax // ch, axis=1
-        )
-        out.append(pl[:h, :w])
-    if len(out) == 1:
-        g = np.clip(np.round(out[0]), 0, 255).astype(np.uint8)
-        return np.dstack([g, g, g])
-    if len(out) != 3:
-        raise ValueError("expected 1 or 3 components")
-    y, cb, cr = out
-    rgb = np.dstack(
-        [
-            y + 1.402 * (cr - 128.0),
-            y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0),
-            y + 1.772 * (cb - 128.0),
-        ]
-    )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _ac_first_block(br, actab, coef, ss, se, al, eobrun) -> int:
-    """Progressive AC first-scan block (T.81 G.1.2.2): run-length coded
-    band with EOBn run codes; returns the updated EOB run."""
-    if eobrun:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _huff_read(br, actab)
-        s, r = rs & 15, rs >> 4
-        if s == 0:
-            if r < 15:
-                eobrun = (1 << r) - 1
-                if r:
-                    eobrun += br.receive(r)
-                break  # EOBn: rest of the band is zero
-            k += 16  # ZRL
-        else:
-            k += r
-            if k > 63:
-                raise ValueError("AC index overflow")
-            coef[k] = _extend(br.receive(s), s) << al
-            k += 1
-    return eobrun
-
-
-def _ac_refine_block(br, actab, coef, ss, se, al, eobrun) -> int:
-    """Progressive AC refinement block (T.81 G.1.2.3, the libjpeg /
-    stb_image control flow): newly-nonzero coefficients arrive as +-1
-    at bit ``al``; coefficients with nonzero history consume one
-    correction bit each as the run skips over them."""
-    bit = 1 << al
-    if eobrun:
-        for k in range(ss, se + 1):
-            c = coef[k]
-            if c != 0 and br.bit() and (c & bit) == 0:
-                coef[k] = c + (bit if c > 0 else -bit)
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _huff_read(br, actab)
-        s, r = rs & 15, rs >> 4
-        if s == 0:
-            if r < 15:
-                eobrun = (1 << r) - 1
-                if r:
-                    eobrun += br.receive(r)
-                r = 64  # no new coefficient: sweep the rest of the band
-            val = 0
-        else:
-            if s != 1:
-                raise ValueError("bad AC refinement code")
-            val = bit if br.bit() else -bit
-        while k <= se:
-            c = coef[k]
-            if c != 0:
-                if br.bit() and (c & bit) == 0:
-                    coef[k] = c + (bit if c > 0 else -bit)
-            else:
-                if r == 0:
-                    if val:
-                        coef[k] = val
-                    k += 1
-                    break
-                r -= 1
-            k += 1
-    return eobrun
-
-
-def _progressive_planes(
-    d: bytes, comps: list, scans: list, qt: dict, h: int, w: int
-) -> dict:
-    """Accumulate every scan's spectral/approximation contribution into
-    per-component coefficient grids, then dequantize + IDCT whole planes
-    vectorized.  DC scans may be interleaved (MCU order over all scan
-    components); AC scans are single-component by construction (T.81
-    G.1.1.1.1) and walk the component's own block grid."""
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    for _, ch, cv, _tq in comps:
-        if not ch or not cv or hmax % ch or vmax % cv:
-            raise ValueError("unsupported sampling factors")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    geo = {}  # cid -> (ch, cv, tq, blocks_w_noninterleaved, blocks_h)
-    coefs = {}
-    for cid, ch, cv, tq in comps:
-        comp_w = -(-(w * ch) // hmax)  # ceil(w * ch / hmax)
-        comp_h = -(-(h * cv) // vmax)
-        bw = -(-comp_w // 8)  # non-interleaved scans walk this grid
-        bh = -(-comp_h // 8)
-        geo[cid] = (ch, cv, tq, bw, bh)
-        coefs[cid] = np.zeros((mcuy * cv, mcux * ch, 64), dtype=np.int32)
-    for scomp, ss, se, ah, al, dpos, tables, ri in scans:
-        br = _JpegBits(d, dpos)
-        eobrun = 0
-        if ss == 0 and se != 0:
-            # T.81 G.1.1.1.1: progressive DC scans have Se=0 — a baseline
-            # stream with its SOF marker flipped to SOF2 lands here and
-            # must refuse rather than mis-decode as DC-only
-            raise ValueError("bad progressive spectral selection")
-        if ss == 0:  # DC scan (first or refinement), possibly interleaved
-            pred = {cid: 0 for cid, _td, _ta in scomp}
-            dc_t = {cid: tables.get((0, td)) for cid, td, _ta in scomp}
-            if len(scomp) > 1:  # interleaved: MCU order over all comps
-                for mi in range(mcux * mcuy):
-                    if ri and mi and mi % ri == 0:
-                        br.restart()
-                        pred = dict.fromkeys(pred, 0)
-                    my, mx = divmod(mi, mcux)
-                    for cid, _td, _ta in scomp:
-                        ch, cv = geo[cid][0], geo[cid][1]
-                        for by in range(cv):
-                            for bx in range(ch):
-                                coef = coefs[cid][my * cv + by, mx * ch + bx]
-                                if ah == 0:
-                                    s = _huff_read(br, dc_t[cid])
-                                    pred[cid] += _extend(br.receive(s), s)
-                                    coef[0] = pred[cid] << al
-                                elif br.bit():
-                                    coef[0] |= 1 << al
-            else:
-                cid = scomp[0][0]
-                _ch, _cv, _tq, bw, bh = geo[cid]
-                for bi in range(bw * bh):
-                    if ri and bi and bi % ri == 0:
-                        br.restart()
-                        pred[cid] = 0
-                    by, bx = divmod(bi, bw)
-                    coef = coefs[cid][by, bx]
-                    if ah == 0:
-                        s = _huff_read(br, dc_t[cid])
-                        pred[cid] += _extend(br.receive(s), s)
-                        coef[0] = pred[cid] << al
-                    elif br.bit():
-                        coef[0] |= 1 << al
-        else:  # AC scan: exactly one component
-            if len(scomp) != 1:
-                raise ValueError("progressive AC scan must be single-component")
-            cid, _td, ta = scomp[0]
-            actab = tables.get((1, ta))
-            _ch, _cv, _tq, bw, bh = geo[cid]
-            block_fn = _ac_first_block if ah == 0 else _ac_refine_block
-            for bi in range(bw * bh):
-                if ri and bi and bi % ri == 0:
-                    br.restart()
-                    eobrun = 0
-                by, bx = divmod(bi, bw)
-                eobrun = block_fn(
-                    br, actab, coefs[cid][by, bx], ss, se, al, eobrun
-                )
-    planes = {}
-    for cid, ch, cv, tq in comps:
-        cf = coefs[cid].astype(np.float64) * qt[tq][None, None, :]
-        rows, cols = cf.shape[:2]
-        blk = np.zeros((rows, cols, 8, 8), np.float64)
-        blk[:, :, _ZZ_R, _ZZ_C] = cf
-        A = _DCT_A
-        px = np.einsum("ij,rcjk,kl->rcil", A.T, blk, A) + 128.0
-        planes[cid] = px.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
-    return planes
-
-
-class _JpegBitWriter:
-    __slots__ = ("out", "acc", "n")
-
-    def __init__(self):
-        self.out, self.acc, self.n = bytearray(), 0, 0
-
-    def write(self, code: int, ln: int) -> None:
-        for i in range(ln - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:  # byte stuffing
-                    self.out.append(0x00)
-                self.acc, self.n = 0, 0
-
-    def pad(self) -> None:
-        while self.n:
-            self.write(1, 1)
-
-
-def _mag_bits(v: int) -> tuple:
-    """(category, extra-bit value) for a signed coefficient (T.81 F.1.2)."""
-    s = abs(v).bit_length()
-    return s, (v if v >= 0 else v + (1 << s) - 1)
-
-
-def encode_jpeg_baseline(
-    img: np.ndarray,
-    q: int = 2,
-    subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """Valid baseline JFIF bytes for an ``(h, w, 3)`` RGB or ``(h, w)``
-    gray uint8 image — the test-harness encoder that exercises
-    :func:`decode_jpeg` end-to-end (quant tables ``1 + (1+u+v)*q``, the
-    classic distance-weighted form; canonical Huffman tables built from
-    the image's own symbol set and emitted in DHT, so any spec decoder
-    reads them).  ``subsample=True`` writes 4:2:0 (Y at 2x2, averaged
-    chroma); ``restart_interval`` emits DRI + RSTn markers."""
-    img = np.asarray(img, dtype=np.uint8)
-    gray = img.ndim == 2
-    if gray:
-        planes = [img.astype(np.float64) - 128.0]
-        samps = [(1, 1)]
-        tq_of = [0]
-    else:
-        f = img.astype(np.float64)
-        r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        if subsample:
-            h2, w2 = (y.shape[0] + 1) // 2 * 2, (y.shape[1] + 1) // 2 * 2
-            cbp = np.pad(cb, ((0, h2 - cb.shape[0]), (0, w2 - cb.shape[1])),
-                         mode="edge")
-            crp = np.pad(cr, ((0, h2 - cr.shape[0]), (0, w2 - cr.shape[1])),
-                         mode="edge")
-            cb = cbp.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-            cr = crp.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-            samps = [(2, 2), (1, 1), (1, 1)]
-        else:
-            samps = [(1, 1), (1, 1), (1, 1)]
-        planes = [y - 128.0, cb - 128.0, cr - 128.0]
-        tq_of = [0, 1, 1]
-    h, w = img.shape[:2]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # quant tables in natural order, emitted zigzag
-    uu, vv = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
-    # clip at creation so quantization and the emitted DQT use the SAME
-    # values (8-bit DQT caps entries at 255)
-    qtabs = [
-        np.clip(1.0 + (1.0 + uu + vv) * q, 1, 255),
-        np.clip(1.0 + (1.0 + uu + vv) * q * 2.0, 1, 255),
-    ]
-    A = _DCT_A
-    # pad planes to full MCU coverage (edge replicate)
-    padded = []
-    for pl, (sh, sv) in zip(planes, samps):
-        ph, pw = mcuy * sv * 8, mcux * sh * 8
-        padded.append(
-            np.pad(pl, ((0, ph - pl.shape[0]), (0, pw - pl.shape[1])),
-                   mode="edge")
-        )
-    # pass 1: quantized zigzag blocks in interleaved MCU order + symbol ops
-    ops: list = []  # ("sym", table_key, symbol, extra, extra_len) | ("rst", n)
-    pred = [0] * len(planes)
-    rst_n = 0
-    for mi in range(mcux * mcuy):
-        if restart_interval and mi and mi % restart_interval == 0:
-            ops.append(("rst", rst_n % 8))
-            rst_n += 1
-            pred = [0] * len(planes)
-        my, mx = divmod(mi, mcux)
-        for ci, (pl, (sh, sv)) in enumerate(zip(padded, samps)):
-            tq = tq_of[ci]
-            hk = ci > 0  # table id: 0 = luma, 1 = chroma
-            for by in range(sv):
-                for bx in range(sh):
-                    y0, x0 = (my * sv + by) * 8, (mx * sh + bx) * 8
-                    blk = pl[y0:y0 + 8, x0:x0 + 8]
-                    coef = A @ blk @ A.T
-                    z = np.round(
-                        coef[_ZZ_R, _ZZ_C] / qtabs[tq][_ZZ_R, _ZZ_C]
-                    ).astype(np.int64)
-                    diff = int(z[0]) - pred[ci]
-                    pred[ci] = int(z[0])
-                    s, extra = _mag_bits(diff)
-                    ops.append(("sym", ("dc", hk), s, extra, s))
-                    run = 0
-                    for k in range(1, 64):
-                        if z[k] == 0:
-                            run += 1
-                            continue
-                        while run >= 16:
-                            ops.append(("sym", ("ac", hk), 0xF0, 0, 0))
-                            run -= 16
-                        s2, ex2 = _mag_bits(int(z[k]))
-                        ops.append(
-                            ("sym", ("ac", hk), (run << 4) | s2, ex2, s2)
-                        )
-                        run = 0
-                    if run:
-                        ops.append(("sym", ("ac", hk), 0x00, 0, 0))
-    # canonical fixed-length Huffman per table: n symbols at length L with
-    # 2**L > n (a spare leaf keeps the all-ones code unused, T.81 custom)
-    tables: dict = {}
-    for kind in {op[1] for op in ops if op[0] == "sym"}:
-        syms = sorted({op[2] for op in ops if op[0] == "sym" and op[1] == kind})
-        L = max(2, (len(syms) + 1).bit_length())
-        counts = [0] * 16
-        counts[L - 1] = len(syms)
-        tables[kind] = (
-            counts, syms, {sym: (i, L) for i, sym in enumerate(syms)}
-        )
-    bw = _JpegBitWriter()
-    for op in ops:
-        if op[0] == "rst":
-            bw.pad()
-            bw.out += bytes([0xFF, 0xD0 + op[1]])
-            continue
-        _, kind, sym, extra, el = op
-        code, ln = tables[kind][2][sym]
-        bw.write(code, ln)
-        if el:
-            bw.write(extra, el)
-    bw.pad()
-    # ---- serialize segments
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    out = bytearray(JPEG_SOI)
-    n_qt = 1 if gray else 2
-    for t in range(n_qt):
-        zz = qtabs[t][_ZZ_R, _ZZ_C].astype(np.uint8)
-        out += seg(0xDB, bytes([t]) + zz.tobytes())
-    ncomp = len(planes)
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, (samps[ci][0] << 4) | samps[ci][1], tq_of[ci]])
-    out += seg(0xC0, sof)
-    for (cls, hk), (counts, syms, _codes) in sorted(tables.items()):
-        tc = 0 if cls == "dc" else 1
-        out += seg(0xC4, bytes([(tc << 4) | int(hk)]) + bytes(counts) + bytes(syms))
-    if restart_interval:
-        out += seg(0xDD, int(restart_interval).to_bytes(2, "big"))
-    sos = bytes([ncomp])
-    for ci in range(ncomp):
-        t = int(ci > 0)
-        sos += bytes([ci + 1, (t << 4) | t])
-    sos += bytes([0, 63, 0])  # full spectral band, no approximation
-    out += seg(0xDA, sos)
-    out += bw.out
-    out += bytes([0xFF, 0xD9])
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    img: np.ndarray, q: int = 2, subsample: bool = False, al: int = 1
-) -> bytes:
-    """Valid PROGRESSIVE (SOF2) JFIF bytes — the test-harness twin of
-    :func:`encode_jpeg_baseline` exercising :func:`decode_jpeg`'s
-    spectral-selection + successive-approximation path end-to-end.
-
-    Scan script (the common libjpeg shape): interleaved DC first scan at
-    ``Al=al``, one AC first scan per component (``Ss=1..63, Al=al``),
-    then per approximation level one DC refinement (raw bits) and one AC
-    refinement scan per component — newly-nonzero coefficients, sign
-    bits, and correction-bit buffering per T.81 G.1.2.3 (the libjpeg
-    encoder's control flow).  Decoded output must be bit-identical to
-    the baseline encoding of the same image at the same tables."""
-    img = np.asarray(img, dtype=np.uint8)
-    gray = img.ndim == 2
-    if gray:
-        planes = [img.astype(np.float64) - 128.0]
-        samps = [(1, 1)]
-        tq_of = [0]
-    else:
-        f = img.astype(np.float64)
-        r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        if subsample:
-            h2, w2 = (y.shape[0] + 1) // 2 * 2, (y.shape[1] + 1) // 2 * 2
-            cbp = np.pad(cb, ((0, h2 - cb.shape[0]), (0, w2 - cb.shape[1])),
-                         mode="edge")
-            crp = np.pad(cr, ((0, h2 - cr.shape[0]), (0, w2 - cr.shape[1])),
-                         mode="edge")
-            cb = cbp.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-            cr = crp.reshape(h2 // 2, 2, w2 // 2, 2).mean(axis=(1, 3))
-            samps = [(2, 2), (1, 1), (1, 1)]
-        else:
-            samps = [(1, 1), (1, 1), (1, 1)]
-        planes = [y - 128.0, cb - 128.0, cr - 128.0]
-        tq_of = [0, 1, 1]
-    h, w = img.shape[:2]
-    hmax = max(s[0] for s in samps)
-    vmax = max(s[1] for s in samps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    uu, vv = np.meshgrid(np.arange(8), np.arange(8), indexing="ij")
-    qtabs = [
-        np.clip(1.0 + (1.0 + uu + vv) * q, 1, 255),
-        np.clip(1.0 + (1.0 + uu + vv) * q * 2.0, 1, 255),
-    ]
-    A = _DCT_A
-    # quantized zigzag coefficient grids, MCU-padded like the decoder's
-    zs = []
-    geos = []  # (sh, sv, bw, bh) — bw/bh: non-interleaved AC-scan grid
-    for ci, (pl, (sh, sv)) in enumerate(zip(planes, samps)):
-        ph, pw = mcuy * sv * 8, mcux * sh * 8
-        pp = np.pad(pl, ((0, ph - pl.shape[0]), (0, pw - pl.shape[1])),
-                    mode="edge")
-        rows, cols = ph // 8, pw // 8
-        z = np.empty((rows, cols, 64), dtype=np.int64)
-        qt = qtabs[tq_of[ci]]
-        for by in range(rows):
-            for bx in range(cols):
-                blk = pp[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8]
-                coef = A @ blk @ A.T
-                z[by, bx] = np.round(
-                    coef[_ZZ_R, _ZZ_C] / qt[_ZZ_R, _ZZ_C]
-                ).astype(np.int64)
-        zs.append(z)
-        bw_c = -(-(-(-(w * sh) // hmax)) // 8)  # ceil(ceil(w*sh/hmax)/8)
-        bh_c = -(-(-(-(h * sv) // vmax)) // 8)
-        geos.append((sh, sv, bw_c, bh_c))
-    ncomp = len(planes)
-
-    # ---- build per-scan op lists; tables are pooled afterwards
-    scans: list[tuple[bytes, list]] = []  # (sos_tail_bytes, ops)
-
-    def sos_hdr(comp_ids, ss, se, ah, a_l):
-        b = bytes([len(comp_ids)])
-        for ci in comp_ids:
-            t = int(ci > 0)
-            b += bytes([ci + 1, (t << 4) | t])
-        return b + bytes([ss, se, (ah << 4) | a_l])
-
-    # scan 1: interleaved DC first at Al=al
-    ops: list = []
-    pred = [0] * ncomp
-    for mi in range(mcux * mcuy):
-        my, mx = divmod(mi, mcux)
-        for ci in range(ncomp):
-            sh, sv, _bw, _bh = geos[ci]
-            for by in range(sv):
-                for bx in range(sh):
-                    v = int(zs[ci][my * sv + by, mx * sh + bx, 0]) >> al
-                    s, extra = _mag_bits(v - pred[ci])
-                    pred[ci] = v
-                    ops.append(("sym", ("dc", int(ci > 0)), s, extra, s))
-    scans.append((sos_hdr(list(range(ncomp)), 0, 0, 0, al), ops))
-
-    # one AC first scan per component at Al=al
-    for ci in range(ncomp):
-        sh, sv, bw_c, bh_c = geos[ci]
-        hk = int(ci > 0)
-        ops = []
-        for bi in range(bw_c * bh_c):
-            by, bx = divmod(bi, bw_c)
-            zb = zs[ci][by, bx]
-            run = 0
-            for k in range(1, 64):
-                v = int(zb[k])
-                t = abs(v) >> al
-                if t == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    ops.append(("sym", ("ac", hk), 0xF0, 0, 0))
-                    run -= 16
-                s2, ex2 = _mag_bits(t if v > 0 else -t)
-                ops.append(("sym", ("ac", hk), (run << 4) | s2, ex2, s2))
-                run = 0
-            if run:
-                ops.append(("sym", ("ac", hk), 0x00, 0, 0))  # EOB (run of 1)
-        scans.append((sos_hdr([ci], 1, 63, 0, al), ops))
-
-    # refinement rounds: level al-1 .. 0
-    for lvl in range(al - 1, -1, -1):
-        # DC refinement: raw bits, interleaved, no huffman
-        ops = []
-        for mi in range(mcux * mcuy):
-            my, mx = divmod(mi, mcux)
-            for ci in range(ncomp):
-                sh, sv, _bw, _bh = geos[ci]
-                for by in range(sv):
-                    for bx in range(sh):
-                        bit = (int(zs[ci][my * sv + by, mx * sh + bx, 0]) >> lvl) & 1
-                        ops.append(("raw", bit, 1))
-        scans.append((sos_hdr(list(range(ncomp)), 0, 0, lvl + 1, lvl), ops))
-        # AC refinement per component (T.81 G.1.2.3 / libjpeg control flow)
-        for ci in range(ncomp):
-            sh, sv, bw_c, bh_c = geos[ci]
-            hk = int(ci > 0)
-            ops = []
-            for bi in range(bw_c * bh_c):
-                by, bx = divmod(bi, bw_c)
-                zb = zs[ci][by, bx]
-                temps = [abs(int(zb[k])) >> lvl for k in range(64)]
-                eob = 0
-                for k in range(1, 64):
-                    if temps[k] == 1:
-                        eob = k
-                run = 0
-                br_bits: list = []  # buffered correction bits
-                for k in range(1, 64):
-                    t = temps[k]
-                    if t == 0:
-                        run += 1
-                        continue
-                    while run > 15 and k <= eob:
-                        ops.append(("sym", ("ac", hk), 0xF0, 0, 0))
-                        run -= 16
-                        for cb_ in br_bits:
-                            ops.append(("raw", cb_, 1))
-                        br_bits = []
-                    if t > 1:  # nonzero history: buffer the correction bit
-                        br_bits.append(t & 1)
-                        continue
-                    # newly-nonzero coefficient (+-1 at this level)
-                    ops.append(("sym", ("ac", hk), (run << 4) | 1, 0, 0))
-                    ops.append(("raw", 1 if int(zb[k]) > 0 else 0, 1))
-                    for cb_ in br_bits:
-                        ops.append(("raw", cb_, 1))
-                    br_bits = []
-                    run = 0
-                if run > 0 or br_bits:
-                    ops.append(("sym", ("ac", hk), 0x00, 0, 0))  # EOB
-                    for cb_ in br_bits:
-                        ops.append(("raw", cb_, 1))
-            scans.append((sos_hdr([ci], 1, 63, lvl + 1, lvl), ops))
-
-    # ---- pooled fixed-length canonical tables over every scan's symbols
-    tables: dict = {}
-    all_sym = [op for _hdr, sops in scans for op in sops if op[0] == "sym"]
-    for kind in {op[1] for op in all_sym}:
-        syms = sorted({op[2] for op in all_sym if op[1] == kind})
-        L = max(2, (len(syms) + 1).bit_length())
-        counts = [0] * 16
-        counts[L - 1] = len(syms)
-        tables[kind] = (
-            counts, syms, {sym: (i, L) for i, sym in enumerate(syms)}
-        )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    out = bytearray(JPEG_SOI)
-    for t in range(1 if gray else 2):
-        zz = qtabs[t][_ZZ_R, _ZZ_C].astype(np.uint8)
-        out += seg(0xDB, bytes([t]) + zz.tobytes())
-    sof = bytes([8]) + h.to_bytes(2, "big") + w.to_bytes(2, "big") + bytes([ncomp])
-    for ci in range(ncomp):
-        sof += bytes([ci + 1, (samps[ci][0] << 4) | samps[ci][1], tq_of[ci]])
-    out += seg(0xC2, sof)  # SOF2: progressive
-    for (cls, hk), (counts, syms, _codes) in sorted(tables.items()):
-        tc = 0 if cls == "dc" else 1
-        out += seg(0xC4, bytes([(tc << 4) | int(hk)]) + bytes(counts) + bytes(syms))
-    for hdr, sops in scans:
-        out += seg(0xDA, hdr)
-        bwr = _JpegBitWriter()
-        for op in sops:
-            if op[0] == "raw":
-                bwr.write(op[1], op[2])
-            else:
-                _, kind, sym, extra, el = op
-                code, ln = tables[kind][2][sym]
-                bwr.write(code, ln)
-                if el:
-                    bwr.write(extra, el)
-        bwr.pad()
-        out += bwr.out
-    out += bytes([0xFF, 0xD9])
-    return bytes(out)
-
-
-def jpeg_features(payload: bytes) -> np.ndarray:
-    return _image_features(decode_jpeg(payload))
-
-
-# ------------------------------------------------------- MP3 frame headers
-#
-# Real CONTAINER parse (ISO 11172-3 / 13818-3 frame headers): duration,
-# sample rate, bitrate, frame count, VBR-ness — the curation-relevant
-# metadata — from walking the MPEG audio frame sequence, without
-# decoding PCM (a full Layer-III huffman+IMDCT decoder is what
-# ``soundfile`` is for; the content-stat feature slots stay zero and are
-# documented as such).
-
-# kbps by (version_group, layer), header bitrate index 1..14
-_MP3_BITRATES = {
-    (1, 1): [32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448],
-    (1, 2): [32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384],
-    (1, 3): [32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320],
-    (2, 1): [32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256],
-    (2, 2): [8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160],
-    (2, 3): [8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160],
-}
-# sample rates by header version bits (00=MPEG2.5, 10=MPEG2, 11=MPEG1)
-_MP3_RATES = {
-    3: [44100, 48000, 32000],
-    2: [22050, 24000, 16000],
-    0: [11025, 12000, 8000],
-}
-
-
-def _mp3_frames(p: bytes) -> list:
-    """Walk the MPEG audio frame sequence: [(kbps, rate, samples_per_frame,
-    version_bits, layer)] — skips a leading ID3v2 tag (syncsafe size),
-    resyncs over junk before the first frame, stops at trailing tags."""
-    i = 0
-    if p[:3] == b"ID3" and len(p) >= 10:
-        i = 10 + (
-            ((p[6] & 0x7F) << 21) | ((p[7] & 0x7F) << 14)
-            | ((p[8] & 0x7F) << 7) | (p[9] & 0x7F)
-        )
-    frames: list = []
-    while i + 4 <= len(p):
-        if p[i] == 0xFF and (p[i + 1] & 0xE0) == 0xE0:
-            vb = (p[i + 1] >> 3) & 3
-            lb = (p[i + 1] >> 1) & 3
-            bi = (p[i + 2] >> 4) & 15
-            si = (p[i + 2] >> 2) & 3
-            pad = (p[i + 2] >> 1) & 1
-            if vb == 1 or lb == 0 or bi in (0, 15) or si == 3:
-                if frames:
-                    break  # valid stream ended; trailing bytes are tags
-                i += 1
-                continue
-            layer = 4 - lb  # header layer bits: 11=I, 10=II, 01=III
-            vgroup = 1 if vb == 3 else 2
-            kbps = _MP3_BITRATES[(vgroup, layer)][bi - 1]
-            rate = _MP3_RATES[vb][si]
-            if layer == 1:
-                spf, fsz = 384, (12 * kbps * 1000 // rate + pad) * 4
-            else:
-                spf = 1152 if (layer == 2 or vgroup == 1) else 576
-                fsz = (144 if spf == 1152 else 72) * kbps * 1000 // rate + pad
-            if fsz <= 4:
-                break
-            frames.append((kbps, rate, spf, vb, layer))
-            i += fsz
-        elif frames:
-            break
-        else:
-            i += 1  # resync scan before the first frame
-    return frames
-
-
-def _is_mp3(p: bytes) -> bool:
-    """ID3v2 prefix or a valid frame sync at byte 0.  UTF-8 text can
-    never alias the sync path (0xFF is not a legal UTF-8 byte); an
-    'ID3'-prefixed text falls through when no valid frames follow."""
-    return len(p) >= 4 and (
-        p[:3] == b"ID3"
-        or (p[0] == 0xFF and (p[1] & 0xE0) == 0xE0)
-    )
-
-
-def mp3_features(payload: bytes) -> np.ndarray:
-    """FEATURE_DIM features with REAL container metadata and zeroed
-    content stats (PCM not decoded — positions 3..7 are the WAV layout's
-    rms/peak/mean_abs/zcr/dc, all 0 here): [1 (audio tag), duration s,
-    rate/48k, 0x5, mean_kbps/320, frames/1000, version_bits, layer,
-    vbr flag, 0x3]."""
-    frames = _mp3_frames(payload or b"")
-    if not frames:
-        raise ValueError("no MPEG audio frames")
-    dur = float(sum(spf / rate for _, rate, spf, _, _ in frames))
-    kbps = float(np.mean([f[0] for f in frames]))
-    vbr = 1.0 if len({f[0] for f in frames}) > 1 else 0.0
-    head = [1.0, dur, frames[0][1] / 48000.0, 0.0, 0.0, 0.0, 0.0, 0.0]
-    tail = [kbps / 320.0, len(frames) / 1000.0, float(frames[0][3]),
-            float(frames[0][4]), vbr, 0.0, 0.0, 0.0]
-    return np.asarray(head + tail, dtype=np.float32)
-
-
-# ---------------------------------------------------------- MP4 box parse
-#
-# ISO BMFF (MPEG-4 Part 12) container walk — the same REAL-metadata /
-# undecoded-content split as the MP3 parser: duration, track inventory
-# and video dimensions come from the box tree (mvhd/tkhd/hdlr); frame
-# CONTENT stays undecoded (that is ``av``/ffmpeg's job when present).
-
-_MP4_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts"}
-
-
-def _is_mp4(p: bytes) -> bool:
-    return len(p) >= 12 and p[4:8] == b"ftyp"
-
-
-def _mp4_boxes(p: bytes, start: int, end: int):
-    """Yield (type, payload_start, payload_end) for the sibling boxes in
-    [start, end); handles 64-bit largesize, stops on nonsense sizes."""
-    i = start
-    while i + 8 <= end:
-        size = int.from_bytes(p[i:i + 4], "big")
-        typ = p[i + 4:i + 8]
-        body = i + 8
-        if size == 1:
-            if i + 16 > end:
-                return
-            size = int.from_bytes(p[i + 8:i + 16], "big")
-            body = i + 16
-        elif size == 0:  # box extends to the end of the file
-            size = end - i
-        if size < 8 or i + size > end:
-            return
-        yield typ, body, i + size
-        i += size
-
-
-def _mp4_walk(p: bytes, start: int, end: int, info: dict) -> None:
-    for typ, b, e in _mp4_boxes(p, start, end):
-        if typ in _MP4_CONTAINERS:
-            _mp4_walk(p, b, e, info)
-        elif typ == b"mvhd" and e - b >= 20:
-            ver = p[b]
-            if ver == 1 and e - b >= 28:
-                ts = int.from_bytes(p[b + 20:b + 24], "big")
-                dur = int.from_bytes(p[b + 24:b + 32], "big")
-            else:
-                ts = int.from_bytes(p[b + 12:b + 16], "big")
-                dur = int.from_bytes(p[b + 16:b + 20], "big")
-            if ts:
-                info["duration"] = dur / ts
-                info["timescale"] = ts
-        elif typ == b"hdlr" and e - b >= 12:
-            handler = p[b + 8:b + 12]
-            if handler == b"vide":
-                info["n_video"] = info.get("n_video", 0) + 1
-            elif handler == b"soun":
-                info["n_audio"] = info.get("n_audio", 0) + 1
-        elif typ == b"tkhd" and e - b >= 8:
-            info["n_tracks"] = info.get("n_tracks", 0) + 1
-            # width/height: 16.16 fixed point, last 8 bytes of the box
-            w = int.from_bytes(p[e - 8:e - 4], "big") / 65536.0
-            h = int.from_bytes(p[e - 4:e], "big") / 65536.0
-            if w and h:
-                info["width"] = max(info.get("width", 0.0), w)
-                info["height"] = max(info.get("height", 0.0), h)
-
-
-def mp4_features(payload: bytes) -> np.ndarray:
-    """FEATURE_DIM features with REAL container metadata and zeroed
-    content stats (frames not decoded): [3 (video tag), duration s,
-    timescale/1e5, 0x5, n_tracks/10, n_video, n_audio, width/1000,
-    height/1000, 0x3]."""
-    p = payload or b""
-    if not _is_mp4(p):
-        raise ValueError("not an ISO-BMFF payload")
-    info: dict = {}
-    _mp4_walk(p, 0, len(p), info)
-    if "duration" not in info and not info.get("n_tracks"):
-        raise ValueError("no moov metadata found")
-    head = [3.0, float(info.get("duration", 0.0)),
-            info.get("timescale", 0) / 1e5, 0.0, 0.0, 0.0, 0.0, 0.0]
-    tail = [info.get("n_tracks", 0) / 10.0, float(info.get("n_video", 0)),
-            float(info.get("n_audio", 0)), info.get("width", 0.0) / 1000.0,
-            info.get("height", 0.0) / 1000.0, 0.0, 0.0, 0.0]
-    return np.asarray(head + tail, dtype=np.float32)
-
-
-# --------------------------------------------------------- feature routing
-
-
-def _fake_decode(payload: bytes) -> np.ndarray:
-    """Deterministic fallback 'decode': md5 bytes -> FEATURE_DIM floats in
-    [0,1).  Used for unrecognized/corrupt payloads and for formats whose
-    real codec is not in this container (MP3/FLAC -> ``soundfile.read``,
-    video -> ``av.open``)."""
+def decode_features(payload: bytes | None) -> np.ndarray:
+    """md5 bytes of the payload -> FEATURE_DIM float32 values in [0, 1]."""
     h = hashlib.md5(payload or b"").digest()
     return np.frombuffer(h, dtype=np.uint8).astype(np.float32) / 255.0
 
 
-def _is_wav(p: bytes) -> bool:
-    return len(p) >= 12 and p[:4] == b"RIFF" and p[8:12] == b"WAVE"
-
-
-def _is_bmp(p: bytes) -> bool:
-    return len(p) >= 54 and p[:2] == b"BM"
-
-
-def _is_png(p: bytes) -> bool:
-    return p.startswith(PNG_SIG)
-
-
-def decode_features(payload: bytes) -> np.ndarray:
-    """Route one payload to its real codec when recognizable, the
-    deterministic fake otherwise.  Corrupt-but-recognizable payloads fall
-    back too: at scale one bad file must never kill the stage."""
-    p = payload or b""
-    try:
-        if _is_wav(p):
-            return wav_features(p)
-        if _is_bmp(p):
-            return bmp_features(p)
-        if _is_png(p):
-            return png_features(p)
-        if _is_jpeg(p):
-            return jpeg_features(p)
-        if _is_mp3(p):
-            return mp3_features(p)
-        if _is_mp4(p):
-            return mp4_features(p)
-    except Exception:
-        pass
-    return _fake_decode(p)
-
-
-def extract_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """(media_id, feature ARRAY<FLOAT>[16]) via Arrow-batched mapInPandas —
-    the decode runs per executor partition, payload bytes never hit the
-    driver.  WAV/BMP/PNG/JPEG payloads get REAL decoded features;
-    everything else the md5 fake (see ``decode_features``)."""
+def extract_features(df: DataFrame) -> DataFrame:
+    """(media_id, feature ARRAY<FLOAT>[16]) via Arrow-batched mapInPandas;
+    see :func:`decode_features` for the feature contract."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1517,93 +50,4 @@ def extract_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
 
     return df.select("media_id", "payload").mapInPandas(
         run, "media_id long, feature array<float>"
-    )
-
-
-def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize: BMP, PNG and baseline-JPEG payloads are REALLY
-    resized (nearest-neighbor, re-encoded in their own format) with meta
-    recording old/new dims; unrecognized payloads pass through with the
-    target size recorded in meta."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                meta = dict(m or {})
-                try:
-                    raw = p or b""
-                    if _is_png(raw):
-                        img = decode_png(raw)
-                        enc, codec = encode_png, "png"
-                    elif _is_jpeg(raw):
-                        img = decode_jpeg(raw)
-                        enc, codec = encode_jpeg_baseline, "jpeg"
-                    else:
-                        img = decode_bmp(raw)
-                        enc, codec = encode_bmp, "bmp"
-                    meta["orig_size"] = f"{img.shape[1]}x{img.shape[0]}"
-                    p = enc(resize_nearest(img, width, height))
-                    meta["codec"] = codec
-                except Exception:
-                    pass  # unrecognized: passthrough, meta records intent
-                meta["resized"] = f"{width}x{height}"
-                payloads.append(p)
-                metas.append(meta)
-            pdf["payload"] = payloads
-            pdf["meta"] = metas
-            yield pdf
-
-    return df.mapInPandas(run, df.schema)
-
-
-def sample_frames(
-    df: DataFrame, every_n: int = 30, fps: float = 30.0
-) -> DataFrame:
-    """Video frame sampling with REAL timing from the MP4 container and
-    fake frame bytes (frame DECODE needs ``av``/ffmpeg — absent here;
-    the sampling schedule, timestamps and Spark plumbing are real).
-
-    For ISO-BMFF payloads the mvhd duration drives the schedule: one row
-    per sampled index ``0, every_n, 2*every_n, ...`` across
-    ``duration * fps`` nominal frames, with the REAL timestamp
-    ``ts_sec = frame_idx / fps``.  Non-MP4/unparseable payloads keep the
-    fixed 3-row fake schedule (ts from the same formula) so one corrupt
-    file never kills the stage.  Frame bytes are the deterministic md5
-    fake either way — documented, oracle-stable."""
-
-    # mvhd duration is UNTRUSTED input (a corrupt timescale=1 box can
-    # claim 2^60 s); cap sampled rows per payload so one adversarial file
-    # can never explode the row loop and OOM the stage.
-    MAX_SAMPLED_FRAMES = 10_000
-    step = max(1, int(every_n))
-    max_nominal = MAX_SAMPLED_FRAMES * step
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "ts_sec": [], "frame": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload or b"")
-                n_frames = 3 * every_n  # fake-schedule default
-                try:
-                    if _is_mp4(p):
-                        info: dict = {}
-                        _mp4_walk(p, 0, len(p), info)
-                        dur = float(info.get("duration", 0.0))
-                        if dur > 0:
-                            n_frames = max(1, min(int(dur * fps), max_nominal))
-                except Exception:
-                    pass
-                for i in range(0, n_frames, step):
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["ts_sec"].append(i / fps)
-                    out["frame"].append(
-                        hashlib.md5(p + i.to_bytes(4, "big")).digest()
-                    )
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "payload").mapInPandas(
-        run, "media_id long, frame_idx int, ts_sec double, frame binary"
     )

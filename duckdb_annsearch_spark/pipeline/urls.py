@@ -179,12 +179,6 @@ def _norm_from_parts(
     return F.concat(scheme, F.lit("://"), host, port_part, path_part, q_part)
 
 
-def normalized_query(url: Column) -> Column:
-    """Query string after tracking-param removal + byte-wise param sort
-    ('' when nothing survives)."""
-    return _norm_query_from_qs(url_query(url))
-
-
 def normalize_url(url: Column) -> Column:
     """Canonical form per the module contract; NULL for non-URLs.
 

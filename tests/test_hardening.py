@@ -212,3 +212,23 @@ def test_with_labels_stable_under_nondeterministic_source(spark):
     by_label = sorted(out, key=lambda r: r["label"])
     rids = [r["row_id"] for r in by_label]
     assert rids == sorted(rids)  # label order == row_id order
+
+
+def test_engine_keeps_explicit_shuffle_partitions(spark, tmp_path):
+    # The engine swaps Spark's stock 200 shuffle partitions for a core-based
+    # count only when the host never set the key. An explicit 200 reads the
+    # same as the stock default, so the check must ask whether it was set.
+    from duckdb_annsearch_spark.engine import AnnEngine
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "200")
+        AnnEngine(spark, workdir=str(tmp_path / "explicit"))
+        assert spark.conf.get(key) == "200"
+        spark.conf.unset(key)
+        AnnEngine(spark, workdir=str(tmp_path / "unset"))
+        cores = spark.sparkContext.defaultParallelism
+        assert spark.conf.get(key) == str(max(cores, 8))
+    finally:
+        spark.conf.set(key, prev)

@@ -259,25 +259,25 @@ def test_text_analysis(docs):
 
 
 def test_multimodal_plumbing(spark):
+    import hashlib
+
+    import numpy as np
+
     rows = [
         (1, "image", b"\x89PNGfake", {"w": "640"}),
         (2, "audio", b"RIFFfake", {"sr": "16000"}),
         (3, "image", None, None),
     ]
     media = M.make_media_df(spark, rows)
-    feats = M.extract_features(media).collect()
-    assert {r["media_id"] for r in feats} == {1, 2, 3}
-    assert all(len(r["feature"]) == M.FEATURE_DIM for r in feats)
-    # deterministic fake: same payload -> same features
-    again = M.extract_features(media).collect()
-    assert sorted(map(tuple, (r["feature"] for r in feats))) == sorted(
-        map(tuple, (r["feature"] for r in again))
-    )
-    resized = M.resize_images(media, 224, 224).collect()
-    assert all((r["meta"] or {}).get("resized") == "224x224" for r in resized)
-    frames = M.sample_frames(media, every_n=10).collect()
-    assert len(frames) == 9
-    assert {r["frame_idx"] for r in frames} == {0, 10, 20}
+    feats = {r["media_id"]: r["feature"] for r in M.extract_features(media).collect()}
+    assert set(feats) == {1, 2, 3}
+    # every payload, whatever its leading bytes, is md5 bytes / 255
+    for mid, _, payload, _ in rows:
+        want = np.frombuffer(
+            hashlib.md5(payload or b"").digest(), np.uint8
+        ).astype(np.float32) / 255
+        assert len(feats[mid]) == M.FEATURE_DIM
+        np.testing.assert_array_equal(np.asarray(feats[mid], np.float32), want)
 
 
 def test_knn_join_operator(spark):

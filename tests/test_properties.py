@@ -217,19 +217,3 @@ def test_pca_decode_is_best_rank_dout_reconstruction(n, dim, seed):
     proj = (x - mean) @ w.T @ w + mean
     np.testing.assert_allclose(dec, proj, atol=1e-3)
     assert ((dec - x) ** 2).sum() <= ((x - x.mean(0)) ** 2).sum() + 1e-2
-
-
-@given(
-    h=st.integers(min_value=1, max_value=12),
-    w=st.integers(min_value=1, max_value=12),
-    seed=seeds,
-)
-@settings(max_examples=40, deadline=None)
-def test_png_roundtrip(h, w, seed):
-    from duckdb_annsearch_spark.pipeline.multimodal import decode_png, encode_png
-
-    rng = np.random.RandomState(seed)
-    img = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-    out = decode_png(encode_png(img))
-    assert out.shape == img.shape
-    np.testing.assert_array_equal(out, img)
