@@ -199,12 +199,6 @@ class Catalog:
         self.save(meta)
         return n
 
-    def clear_tombstones(self, name: str) -> None:
-        shutil.rmtree(self.tombstone_path(name), ignore_errors=True)
-        meta = self.load(name)
-        meta.num_deleted = 0
-        self.save(meta)
-
     # ---- delta (incremental appends, reference D3 ``BoundIndex::Append``) ----
     def delta(self, name: str) -> DataFrame | None:
         """Unindexed tail appended since the last build/compaction, or None."""
@@ -225,9 +219,3 @@ class Catalog:
         meta.extra["delta_rows"] = n
         self.save(meta)
         return n
-
-    def clear_delta(self, name: str) -> None:
-        shutil.rmtree(self.delta_path(name), ignore_errors=True)
-        meta = self.load(name)
-        meta.extra.pop("delta_rows", None)
-        self.save(meta)

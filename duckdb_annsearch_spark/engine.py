@@ -553,16 +553,14 @@ class AnnEngine:
         if isinstance(row_ids, DataFrame):
             ids_df = row_ids.select(F.col(row_ids.columns[0]).alias(t.row_id))
         else:
+            row_ids = list(row_ids)
             ids_df = self.spark.createDataFrame(
                 [(int(r),) for r in row_ids], f"{t.row_id} long"
             )
         t.df = t.df.join(ids_df, on=t.row_id, how="left_anti")
         t.dim_cache.clear()  # df rebound; a later probe must see the new relation
         for meta in self.catalog.for_table(table):
-            if isinstance(row_ids, DataFrame):
-                self.catalog.add_tombstones(meta.name, row_ids)
-            else:
-                self.catalog.add_tombstones(meta.name, list(row_ids))
+            self.catalog.add_tombstones(meta.name, row_ids)
 
     def _stage_rows(self, name: str, rows: DataFrame) -> tuple[DataFrame, str]:
         """Durably stage (row_id, vector) rows to parquet BEFORE the old
@@ -587,10 +585,14 @@ class AnnEngine:
         """Rebuild without deleted rows, then drop tombstones
         (``src/diskann_index.cpp:701-741``)."""
         idx = self.get_index(name)
-        meta = idx.meta
         live = idx.live_rows()  # artifact ∪ delta, minus tombstones
-        cls = _INDEX_CLASSES[meta.index_type]
-        # rebuild from the live artifact (column names row_id/vector)
+        return self._rebuild(idx.meta, live, self._stage_covering(idx.meta), "vacuum")
+
+    def _rebuild(self, meta, rows: DataFrame, cov_staged: tuple | None, op: str):
+        """Rebuild index ``meta`` from (row_id, vector) ``rows`` — the
+        vacuum / merge compaction: stage the rows durably, drop the old
+        index (its tombstones and delta go with it), build the same index
+        class under fresh metadata, restore the staged covering payload."""
         new_meta = IndexMeta(
             name=meta.name,
             engine=meta.engine,
@@ -601,8 +603,7 @@ class AnnEngine:
             metric=meta.metric,
             params=meta.params,
         )
-        staged, stage_path = self._stage_rows(meta.name, live)
-        cov_staged = self._stage_covering(meta)
+        staged, stage_path = self._stage_rows(meta.name, rows)
         self.catalog.drop(meta.name)
         try:
             if meta.extra.get("shards"):
@@ -618,7 +619,9 @@ class AnnEngine:
                 )
                 rebuilt = self.get_index(meta.name)
             else:
-                rebuilt = cls.build(self.catalog, new_meta, staged, "row_id", "vector")
+                rebuilt = _INDEX_CLASSES[meta.index_type].build(
+                    self.catalog, new_meta, staged, "row_id", "vector"
+                )
         except BaseException as e:
             # the old index is gone — the staged parquet is the only copy
             # (name the covering stage too, or it leaks silently)
@@ -628,11 +631,10 @@ class AnnEngine:
                 else ""
             )
             raise RuntimeError(
-                f"vacuum rebuild of {meta.name!r} failed; staged rows kept at "
+                f"{op} rebuild of {meta.name!r} failed; staged rows kept at "
                 f"{stage_path}{cov_note}"
             ) from e
         self._restore_covering(meta, cov_staged)
-        self.catalog.clear_tombstones(meta.name)
         self._unstage(stage_path)
         return rebuilt
 
@@ -678,7 +680,6 @@ class AnnEngine:
             .unionByName(src.live_rows())
             .dropDuplicates(["row_id"])
         )
-        cls = _INDEX_CLASSES[tgt.meta.index_type]
         meta = tgt.meta
         # a covering target needs payloads for the incoming rows too —
         # require a source covering with the same columns (merging without
@@ -719,43 +720,7 @@ class AnnEngine:
             cov_staged = (
                 tgt_cov, *self._stage_rows(target + "-covering", cov_union),
             )
-        new_meta = IndexMeta(
-            name=meta.name,
-            engine=meta.engine,
-            index_type=meta.index_type,
-            table_name=meta.table_name,
-            column=meta.column,
-            dim=meta.dim,
-            metric=meta.metric,
-            params=meta.params,
-        )
-        staged, stage_path = self._stage_rows(meta.name, union)
-        self.catalog.drop(meta.name)
-        try:
-            if meta.extra.get("shards"):
-                from duckdb_annsearch_spark.index.streaming_build import sharded_build
-
-                by = "kmeans" if meta.extra.get("shard_centroids") else "hash"
-                sharded_build(
-                    self.catalog, new_meta, staged, "row_id", "vector",
-                    int(meta.extra["shards"]), by=by,
-                )
-                rebuilt = self.get_index(meta.name)
-            else:
-                rebuilt = cls.build(self.catalog, new_meta, staged, "row_id", "vector")
-        except BaseException as e:
-            cov_note = (
-                f"; covering payload staged at {cov_staged[2]}"
-                if cov_staged
-                else ""
-            )
-            raise RuntimeError(
-                f"merge rebuild of {meta.name!r} failed; staged rows kept at "
-                f"{stage_path}{cov_note}"
-            ) from e
-        self._restore_covering(meta, cov_staged)
-        self._unstage(stage_path)
-        return rebuilt
+        return self._rebuild(meta, union, cov_staged, "merge")
 
     def streaming_build(
         self,
@@ -1242,8 +1207,6 @@ class AnnEngine:
         ``rerank=False``.  ``rerank=True`` with no explicit ``oversample``
         also over-fetches ``refine_k_factor``x (reranking exactly k
         candidates would be a no-op)."""
-        from duckdb_annsearch_spark.functions.distance import metric_distance
-
         t = self.table(table)
         idx = self.get_index(index)
         if local:
@@ -1271,45 +1234,53 @@ class AnnEngine:
                     # auto: ineligible (wide table / over cap) or a
                     # concurrent lifecycle op raced the snapshot scan
                     # -> distributed
-        if rerank is None:
-            rerank = bool(idx.meta.params.get("refine"))
-        if oversample is None:
-            oversample = (
-                int(idx.meta.params.get("refine_k_factor", 10)) if rerank else 1
-            )
-        fetch_k = k * max(1, int(oversample))
-        if rerank and idx.meta.extra.get("shards"):
-            # sharded + rerank: skip the global top-fetch_k cut by CODE
-            # distance — the exact re-score must see the full per-shard
-            # candidate union (nq * shards * fetch_k rows, bounded) or
-            # deep-code-ranked true neighbors are lost before reranking
-            # (measured at 20M x 64: recall 0.78 -> see graph.py)
-            search_params = {**search_params, "merge_k": 0}
+        oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
         hits = idx.search(
-            list(query), fetch_k, search_complexity=search_complexity, **search_params
+            list(query), k * oversample, search_complexity=search_complexity,
+            **self._search_kw(idx, rerank, search_params),
         )
         if capture is not None:
             # persist so the audit export and the served result both read
             # ONE candidate-search execution (cache hit by plan equality)
             hits = hits.persist()
             capture["candidates"] = hits
-        joined = t.df.join(
-            F.broadcast(hits.withColumnRenamed("row_id", t.row_id)), on=t.row_id, how="inner"
-        )
+        return self._fetch(t, t.df, idx, hits, query, k if rerank else None, rerank)
+
+    def _fetch(self, t, base, idx, hits, query, k, rerank) -> DataFrame:
+        """Broadcast row fetch of the index ``hits`` from ``base`` (the
+        table, or a filtered view of it): table columns + ``_distance``
+        ascending with a row-key tie-break, cut to ``k`` rows (no cut when
+        ``k`` is None).  ``rerank`` re-scores the fetched rows EXACTLY from
+        their full-precision vectors (JVM-side ``metric_distance``, no
+        extra probe) in place of the index's own, possibly lossy,
+        distance."""
+        dist = F.col("_distance")
         if rerank:
-            exact = metric_distance(
-                F.col(idx.meta.column),
-                [float(x) for x in query],
-                idx.meta.metric,
+            dist = metric_distance(
+                F.col(idx.meta.column), [float(x) for x in query], idx.meta.metric
+            ).alias("_distance")
+        out = (
+            base.join(
+                F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
+                on=t.row_id,
+                how="inner",
             )
-            return (
-                joined.select(*t.df.columns, exact.alias("_distance"))
-                .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
-                .limit(k)
-            )
-        return joined.select(*t.df.columns, "_distance").orderBy(
-            F.col("_distance").asc(), F.col(t.row_id).asc()
+            .select(*t.df.columns, dist)
+            .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
         )
+        return out if k is None else out.limit(k)
+
+    @staticmethod
+    def _search_kw(idx, rescored: bool, params: dict) -> dict:
+        """Index search params for a probe whose candidates are re-scored
+        exactly.  On a sharded graph that re-score must see the full
+        per-shard candidate union (nq * shards * fetch_k rows, bounded):
+        the global top-fetch_k cut by CODE distance would drop
+        deep-code-ranked true neighbors before the re-score (measured at
+        20M x 64: recall 0.78 -> see graph.py)."""
+        if rescored and idx.meta.extra.get("shards"):
+            return {**params, "merge_k": 0}
+        return params
 
     # ---- driver-local single-query serving (see ann_search(local=True)) ----
     @staticmethod
@@ -1623,8 +1594,6 @@ class AnnEngine:
         driver-cached snapshot (one GEMM for the whole batch) and the
         result is a k-row driver-made relation — same constraints (artifact
         columns only, size cap), exact answers."""
-        from duckdb_annsearch_spark.functions.distance import metric_distance
-
         t = self.table(table)
         idx = self.get_index(index)
         if local:
@@ -1647,12 +1616,10 @@ class AnnEngine:
             )
             return self.spark.createDataFrame(rows, schema)
         oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
-        if rerank and idx.meta.extra.get("shards"):
-            # see ann_search: rerank must see the uncut per-shard union
-            search_params = {**search_params, "merge_k": 0}
         hits = idx.search_batch(
             [list(q) for q in queries], k * oversample,
-            search_complexity=search_complexity, **search_params,
+            search_complexity=search_complexity,
+            **self._search_kw(idx, rerank, search_params),
         )
         joined = t.df.join(
             hits.withColumnRenamed("row_id", t.row_id), on=t.row_id, how="inner"
@@ -1711,8 +1678,6 @@ class AnnEngine:
         distributed batch probe, join hits back to input rows and base rows.
         Scales with both the query count and the base table — no driver
         materialization."""
-        from duckdb_annsearch_spark.functions.distance import metric_distance
-
         t = self.table(table)
         idx = self.get_index(index)
         oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
@@ -1729,20 +1694,16 @@ class AnnEngine:
         tagged = queries_df.withColumn(
             "__query_idx", F.monotonically_increasing_id()
         ).localCheckpoint(eager=False)
-        table_kw = {}
-        if rerank and idx.meta.extra.get("shards"):
-            # see ann_search: the exact re-score sees the uncut per-shard
-            # union.  Volume note: this multiplies the join-back input by
-            # the shard count (nq * shards * fetch_k rows); rerank=False
-            # keeps the lean k*oversample-per-query shuffle when raw code
-            # distances are acceptable.
-            table_kw["merge_k"] = 0
+        # volume note for sharded graphs: the exact re-score's uncut
+        # per-shard union (_search_kw) multiplies the join-back input by the
+        # shard count; rerank=False keeps the lean k*oversample-per-query
+        # shuffle when raw code distances are acceptable
         hits = idx.search_batch_df(
             tagged.select("__query_idx", F.col(qcol).cast("array<float>").alias("query")),
             k * oversample,
             idx_col="__query_idx",
             search_complexity=search_complexity,
-            **table_kw,
+            **self._search_kw(idx, rerank, {}),
         ).select(
             # internal names: a queries_df/base table carrying its own
             # row_id or _distance column must not make these ambiguous
@@ -1832,27 +1793,13 @@ class AnnEngine:
         if m is not None:
             if explain is not None:
                 explain.update(decision)
-            idx = self.get_index(m.name)
-            if m.quantized:
-                # the user's original query was EXACT brute force — routing
-                # it through lossy codes must not silently change the
-                # distances, so a quantized index serves the rewrite via
-                # the rerank recipe (the ",RFlat" serving shape; only the
-                # candidate set stays approximate, matching the reference's
-                # own approximate-index rewrite semantics). ann_search's
-                # rerank path IS this plan — one implementation.
-                return self.ann_search(table, m.name, query, k, rerank=True)
-            hits = idx.search(list(query), k)
-            return (
-                t.df.join(
-                    F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
-                    on=t.row_id,
-                    how="inner",
-                )
-                .select(*t.df.columns, "_distance")
-                .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
-                .limit(k)
-            )
+            # the user's original query was EXACT brute force — routing it
+            # through lossy codes must not silently change the distances, so
+            # a quantized index serves the rewrite via the rerank recipe (the
+            # ",RFlat" serving shape; only the candidate set stays
+            # approximate, matching the reference's own approximate-index
+            # rewrite semantics)
+            return self.ann_search(table, m.name, query, k, rerank=m.quantized).limit(k)
         if explain is not None:
             explain.update(decision)
         return topk_brute_force(t.df, column, query, k, metric, tie_break=t.row_id)
@@ -1862,30 +1809,12 @@ class AnnEngine:
         (``ann_optimizer.cpp:260-345,459-472``): a metric-compatible index on
         the column, table ≥ 50 rows, k within 10% (Flat/IVF) or 30% (graph)
         of N. Mutates ``decision`` with the outcome; None means brute force."""
-        candidates = [
-            m
-            for m in self.catalog.for_table(table)
-            if m.column == column and m.metric == metric and metric != "cosine"
-            # cosine never rewrites: no index type builds a cosine index
-            # (src/ann_optimizer.cpp:237-258)
-        ]
+        # cosine never rewrites: no index type builds a cosine index
+        # (src/ann_optimizer.cpp:237-258)
+        candidates = [] if metric == "cosine" else self._ranked_indexes(table, column, metric)
         if not candidates:
             decision["reason"] = "no metric-compatible index"
             return None
-        # deterministic preference: exact structures first (Flat, then IVF —
-        # exhaustive at full probe), graph last; within a type,
-        # full-precision beats quantized (a quantized pick forces the
-        # rerank overfetch below); name tie-break. Catalog listing order
-        # depends on build completion order under concurrent DDL, so an
-        # explicit ranking keeps the rewrite decision stable.
-        rank = {"flat": 0, "ivfflat": 1, "hnsw": 2, "diskann": 3}
-        candidates.sort(
-            key=lambda c: (
-                rank.get(str(c.index_type).lower(), 9),
-                bool(c.quantized),
-                c.name,
-            )
-        )
         m = candidates[0]
         n = max(m.num_vectors - m.num_deleted, 0)
         frac = MAX_K_FRACTION_GRAPH if m.index_type in ("diskann", "hnsw") else MAX_K_FRACTION_FLAT
@@ -1901,6 +1830,27 @@ class AnnEngine:
             reason=f"ANN_INDEX_SCAN (index: {m.name}, k: {k}, engine: {m.engine}, type: {m.index_type})",
         )
         return m
+
+    def _ranked_indexes(self, table, column, metric) -> list[IndexMeta]:
+        """The table's indexes on ``column`` under ``metric``, best first:
+        exact structures first (Flat, then IVF — exhaustive at full probe),
+        graph last; within a type, full-precision beats quantized (a
+        quantized pick forces a rerank over-fetch); name tie-break.
+        Catalog listing order depends on build completion order under
+        concurrent DDL, so an explicit ranking keeps the choice stable."""
+        rank = {"flat": 0, "ivfflat": 1, "hnsw": 2, "diskann": 3}
+        return sorted(
+            (
+                m
+                for m in self.catalog.for_table(table)
+                if m.column == column and m.metric == metric
+            ),
+            key=lambda c: (
+                rank.get(str(c.index_type).lower(), 9),
+                bool(c.quantized),
+                c.name,
+            ),
+        )
 
     def sql(self, sql_text: str, explain: dict | None = None) -> DataFrame:
         """Run SQL with the transparent top-k-by-distance rewrite.
@@ -2086,13 +2036,13 @@ class AnnEngine:
         idx = self.get_index(meta.name)
         # a quantized index ranks candidates by lossy code distance — the
         # ordering expression is recomputed exactly on the fetched rows
-        # below, so over-fetching refine_k_factor-x candidates makes the
-        # rewrite serve the rerank recipe (only the candidate set stays
-        # approximate, as with any index rewrite)
-        fetch_k = (
-            k * int(meta.params.get("refine_k_factor", 10)) if meta.quantized else k
+        # below, so the quantized probe over-fetches like the rerank recipe
+        # (only the candidate set stays approximate, as with any index
+        # rewrite)
+        oversample, rescored = self._resolve_rerank(idx, None, meta.quantized)
+        hits = idx.search(
+            list(query_vector), k * oversample, **self._search_kw(idx, rescored, {})
         )
-        hits = idx.search(list(query_vector), fetch_k)
         fetched = base.join(
             F.broadcast(hits.select(F.col("row_id").alias(tie))),
             on=tie,
@@ -2148,57 +2098,17 @@ class AnnEngine:
         metric = _normalize_metric(metric)
         column = column or detect_vector_column(t.df)
         filtered = t.df.where(predicate)
-        candidates = [
-            m
-            for m in self.catalog.for_table(table)
-            if m.column == column and m.metric == metric
-        ]
-        if candidates:
-            # same deterministic preference as _choose_index: exact
-            # structures first, full-precision before quantized, name
-            # tie-break (catalog order depends on concurrent-DDL timing)
-            rank = {"flat": 0, "ivfflat": 1, "hnsw": 2, "diskann": 3}
-            candidates.sort(
-                key=lambda c: (
-                    rank.get(str(c.index_type).lower(), 9),
-                    bool(c.quantized),
-                    c.name,
-                )
+        ranked = self._ranked_indexes(table, column, metric)
+        if ranked:
+            idx = self.get_index(ranked[0].name)
+            # a quantized index's code distances must not surface as
+            # `_distance` (for LSH they are not even on the L2 scale) — the
+            # fetch re-scores exactly on the post-filter rows; the 3x+100
+            # over-fetch already covers the candidate set
+            rerank = idx.meta.quantized
+            hits = idx.search(
+                list(query), k * overfetch_multiplier + OVERFETCH_BONUS,
+                **self._search_kw(idx, rerank, {}),
             )
-            m = candidates[0]
-            idx = self.get_index(m.name)
-            fetch_k = k * overfetch_multiplier + OVERFETCH_BONUS
-            hits = idx.search(list(query), fetch_k)
-            if m.quantized:
-                # code distances must not surface as `_distance` (for LSH
-                # they are not even on the L2 scale) — recompute exactly on
-                # the post-filter fetched rows; the 3x+100 over-fetch above
-                # already covers the candidate set
-                from duckdb_annsearch_spark.functions.distance import metric_distance
-
-                hits = hits.drop("_distance")
-                exact = metric_distance(
-                    F.col(column), [float(x) for x in query], metric
-                )
-                return (
-                    filtered.join(
-                        F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
-                        on=t.row_id,
-                        how="inner",
-                    )
-                    .select(*t.df.columns, exact.alias("_distance"))
-                    .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
-                    .limit(k)
-                )
-            out = (
-                filtered.join(
-                    F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
-                    on=t.row_id,
-                    how="inner",
-                )
-                .select(*t.df.columns, "_distance")
-                .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
-                .limit(k)
-            )
-            return out
+            return self._fetch(t, filtered, idx, hits, query, k, rerank)
         return topk_brute_force(filtered, column, query, k, metric, tie_break=t.row_id)

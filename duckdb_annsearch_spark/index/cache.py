@@ -17,8 +17,8 @@ from typing import Any
 
 # LRU-bounded: a worker that serves many shards/indexes over its lifetime
 # must not accumulate every graph it ever touched (each entry can be a
-# full in-memory graph). Override with SPARK_GRAFT_INDEX_CACHE_SIZE.
-_MAX_ENTRIES = int(os.environ.get("SPARK_GRAFT_INDEX_CACHE_SIZE", "4"))
+# full in-memory graph).
+_MAX_ENTRIES = 4
 _CACHE: OrderedDict[tuple[str, float], Any] = OrderedDict()
 
 

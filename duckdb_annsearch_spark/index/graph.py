@@ -276,13 +276,13 @@ def _read_pq_trailer(fn: str, off: int, n: int, dim: int) -> "_PqView | None":
         return None
 
 
-def _load_graph(path: str) -> tuple[VamanaGraph, np.ndarray]:
+def _load_graph(path: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndarray]:
     """Load a graph artifact (pyarrow, no Spark needed — runs in executor
     python workers).  When the artifact carries its DANN v2 binary sidecar
     (driver-built graphs write one), the graph is mmap-served instead of
     materialized — identical values (quantized artifacts store dequantized
-    vectors in the binary), bounded worker RAM at any graph size.  Set
-    ``SPARK_GRAFT_GRAPH_MMAP=0`` to force the in-RAM parquet load.
+    vectors in the binary), bounded worker RAM at any graph size.
+    ``mmap=False`` forces the in-RAM parquet load.
     Quantized parquet artifacts (SQ8 codes + per-dim min/scale in the
     sidecar) are dequantized on load, so searches see the same approximated
     values the reference computes on the fly
@@ -292,7 +292,7 @@ def _load_graph(path: str) -> tuple[VamanaGraph, np.ndarray]:
 
     import pyarrow.parquet as pq
 
-    if os.environ.get("SPARK_GRAFT_GRAPH_MMAP", "1").lower() not in ("0", "false"):
+    if mmap:
         binf = os.path.join(path, "_graph.diskann")
         ridf = os.path.join(path, "_row_ids.bin")
         # n==0 artifacts (legal: delete-all + vacuum) have a 0-byte row_ids
@@ -455,15 +455,15 @@ def write_shard_binary(shard_dir: str, metric: str, max_degree: int, build_L: in
     row_ids.astype("<i8").tofile(os.path.join(shard_dir, "_row_ids.bin"))
 
 
-def _load_shard(shard_dir: str) -> tuple[VamanaGraph, np.ndarray]:
+def _load_shard(shard_dir: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndarray]:
     """Load one shard subgraph: labels are GLOBAL (non-dense within the
     shard), so remap neighbors/entry to local positions via searchsorted
     over the shard's sorted label set.  When the shard carries its mmap
     sidecars (sharded-build post-pass, already local-remapped), it is
-    mmap-served exactly like single graphs — same env toggle."""
+    mmap-served exactly like single graphs — same ``mmap`` switch."""
     import pyarrow.parquet as pq
 
-    if os.environ.get("SPARK_GRAFT_GRAPH_MMAP", "1").lower() not in ("0", "false"):
+    if mmap:
         binf = os.path.join(shard_dir, "_graph.diskann")
         ridf = os.path.join(shard_dir, "_row_ids.bin")
         if (

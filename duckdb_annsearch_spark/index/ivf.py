@@ -643,23 +643,13 @@ class IvfFlatIndex(BaseIndex):
 
     # ---- search ----
     def _centroids(self) -> np.ndarray:
-        """Centroid matrix via the process-level cache; legacy catalogs that
-        carried centroids in meta.extra still load."""
+        """Centroid matrix via the process-level cache."""
         import os
 
         from duckdb_annsearch_spark.index import cache as index_cache
 
         f = os.path.join(self.catalog.data_path(self.meta.name), CENTROID_FILE)
-        if os.path.exists(f):
-            return index_cache.get_or_load(f, _load_centroids)
-        return np.asarray(self.meta.extra["centroids"], dtype=np.float32)
-
-    def _has_centroid_file(self) -> bool:
-        import os
-
-        return os.path.exists(
-            os.path.join(self.catalog.data_path(self.meta.name), CENTROID_FILE)
-        )
+        return index_cache.get_or_load(f, _load_centroids)
 
     def _dequant_args(self) -> dict | None:
         """IVFPQ codes are residuals — ship the coarse centroids alongside
@@ -786,25 +776,17 @@ class IvfFlatIndex(BaseIndex):
         dim, metric = self.meta.dim, self.meta.metric
         deleted = self._deleted_rowid_array()
         dq = self._dequant_args()
-        legacy_cent = (
-            None
-            if self._has_centroid_file()
-            else np.asarray(self.meta.extra["centroids"], dtype=np.float32)
-        )
 
         def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # centroids load from the artifact itself, once per worker
             # process (index cache) — nothing big ships in the closure
-            if legacy_cent is not None:
-                cent = legacy_cent
-            else:
-                import os as _os
+            import os as _os
 
-                from duckdb_annsearch_spark.index import cache as index_cache
+            from duckdb_annsearch_spark.index import cache as index_cache
 
-                cent = index_cache.get_or_load(
-                    _os.path.join(path, CENTROID_FILE), _load_centroids
-                )
+            cent = index_cache.get_or_load(
+                _os.path.join(path, CENTROID_FILE), _load_centroids
+            )
             # concatenate the task's Arrow batches first — the probed cells
             # are read once per task, not once per query batch
             pdfs = [b for b in batches if len(b)]

@@ -26,23 +26,17 @@ def iter_vector_batches(
     dim: int,
     vector_col: str = "vector",
     dequantize: dict | None = None,
-    cluster_ids: list[int] | None = None,
     batch_rows: int = DEFAULT_BATCH_ROWS,
 ) -> Iterator[tuple[np.ndarray, np.ndarray]]:
     """Yield ``(row_ids int64[n], X float32[n, dim])`` batches from a parquet
-    artifact directory.  ``cluster_ids`` prunes hive-partitioned IVF cells —
-    the pyarrow twin of Spark partition pruning.  SQ8 artifacts pass
+    artifact directory.  SQ8 artifacts pass
     ``dequantize={'mins', 'scales'}`` and read only the codes column
     (column pruning keeps quantized scans at 1/4 the bytes)."""
     import pyarrow.dataset as ds
 
-    part = "hive" if cluster_ids is not None else None
-    data = ds.dataset(path, format="parquet", partitioning=part)
-    flt = None
-    if cluster_ids is not None:
-        flt = ds.field("cluster_id").isin([int(c) for c in cluster_ids])
+    data = ds.dataset(path, format="parquet")
     cols = ["row_id", vector_col]
-    for batch in data.to_batches(columns=cols, filter=flt, batch_size=batch_rows):
+    for batch in data.to_batches(columns=cols, batch_size=batch_rows):
         if batch.num_rows == 0:
             continue
         rid = batch.column("row_id").to_numpy(zero_copy_only=False).astype(np.int64)

@@ -872,7 +872,6 @@ def dedup_against(
     shingle_k: int = 3,
     max_bucket: int | None = None,
     ref_bloom_fpp: float | None = None,
-    ref_bloom_force: bool = False,
 ) -> DataFrame:
     """CROSS-corpus deduplication: drop from ``df`` every document already
     present in ``ref`` (the 'dedupe the new crawl against the existing
@@ -919,9 +918,9 @@ def dedup_against(
     relation's optimizer estimate fits the session's broadcast
     threshold, the joins it would guard are already map-side broadcast
     joins and the Bloom build passes cannot save a shuffle — the guard
-    is skipped outright (``_bloom_worth_it``; ``ref_bloom_force=True``
-    re-engages it unconditionally, for tests and for callers whose
-    estimates are unavailable-but-known-big)."""
+    is skipped outright (``_bloom_worth_it``).  A session with
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` never broadcasts, so
+    there the guard always engages."""
     sc = df.sparkSession.sparkContext
     if mode == "exact":
         ref_keys = (
@@ -933,7 +932,7 @@ def dedup_against(
         # too big to broadcast (_bloom_worth_it) — below that threshold
         # the anti-join is already map-side and the Bloom build passes
         # are pure overhead.  Survivors are IDENTICAL either way.
-        if ref_bloom_fpp and (ref_bloom_force or _bloom_worth_it(ref)):
+        if ref_bloom_fpp and _bloom_worth_it(ref):
             from duckdb_annsearch_spark.pipeline.bloom import (
                 bloom_filter_df,
                 bloom_from_df,
@@ -981,7 +980,7 @@ def dedup_against(
     # exact pre-pass (see docstring: what makes max_bucket safe)
     df = dedup_against(
         df, ref, text_col, id_col, mode="exact",
-        ref_bloom_fpp=ref_bloom_fpp, ref_bloom_force=ref_bloom_force,
+        ref_bloom_fpp=ref_bloom_fpp,
     )
 
     nonempty = F.size(word_shingles(F.col(text_col), shingle_k)) > 0
@@ -1000,7 +999,7 @@ def dedup_against(
             .select("band", "band_hash")
         )
         right = right.join(keep, ["band", "band_hash"])
-    if ref_bloom_fpp and (ref_bloom_force or _bloom_worth_it(ref)):
+    if ref_bloom_fpp and _bloom_worth_it(ref):
         from duckdb_annsearch_spark.pipeline.bloom import (
             bloom_filter_df,
             bloom_from_df,

@@ -2,6 +2,8 @@
 exactness-preserving wiring into dedup_against: a Bloom has no false
 negatives, so bloom-pruned plans must return IDENTICAL results."""
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -11,6 +13,25 @@ from duckdb_annsearch_spark.pipeline.bloom import (
     bloom_from_df,
 )
 from duckdb_annsearch_spark.pipeline.dedup import dedup_against
+
+
+@pytest.fixture()
+def bloom_forced(spark):
+    """Context manager that turns auto-broadcast off, so
+    ``dedup._bloom_worth_it`` engages the Bloom guard whatever the
+    reference's size; the old threshold is restored on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def forced():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return forced
 
 
 def _local_bloom(keys, num_bits, num_hashes):
@@ -92,22 +113,22 @@ class TestDedupAgainstBloom:
         return new, ref
 
     @pytest.mark.parametrize("mode", ["exact", "fuzzy"])
-    def test_bloom_pruned_equals_plain(self, corpora, mode):
+    def test_bloom_pruned_equals_plain(self, corpora, bloom_forced, mode):
         new, ref = corpora
         plain = sorted(
             r["doc_id"] for r in dedup_against(new, ref, mode=mode).collect()
         )
-        pruned = sorted(
-            r["doc_id"]
-            for r in dedup_against(
-                new, ref, mode=mode, ref_bloom_fpp=0.01,
-                ref_bloom_force=True,
-            ).collect()
-        )
+        with bloom_forced():
+            pruned = sorted(
+                r["doc_id"]
+                for r in dedup_against(
+                    new, ref, mode=mode, ref_bloom_fpp=0.01
+                ).collect()
+            )
         assert plain == pruned
         assert all(d >= 200 for d in plain)  # exact dups dropped
 
-    def test_null_and_dup_in_one_partition(self, spark):
+    def test_null_and_dup_in_one_partition(self, spark, bloom_forced):
         # Regression: a NULL key anywhere in an Arrow batch used to demote
         # the whole batch's key column to float64, corrupting keys > 2^53
         # before might_contain — a true duplicate in the SAME partition as
@@ -122,13 +143,13 @@ class TestDedupAgainstBloom:
         plain = sorted(
             r["doc_id"] for r in dedup_against(new, ref, mode="exact").collect()
         )
-        pruned = sorted(
-            r["doc_id"]
-            for r in dedup_against(
-                new, ref, mode="exact", ref_bloom_fpp=0.01,
-                ref_bloom_force=True,
-            ).collect()
-        )
+        with bloom_forced():
+            pruned = sorted(
+                r["doc_id"]
+                for r in dedup_against(
+                    new, ref, mode="exact", ref_bloom_fpp=0.01
+                ).collect()
+            )
         assert plain == pruned == [1, 3]  # dup 2 dropped in BOTH plans
 
     def test_null_and_big_keys_one_partition_filter(self, spark):
@@ -154,16 +175,17 @@ class TestDedupAgainstBloom:
         local = _local_bloom(big, bf.num_bits, bf.num_hashes)
         np.testing.assert_array_equal(bf.words, local.words)
 
-    def test_null_text_survives_with_bloom(self, spark):
+    def test_null_text_survives_with_bloom(self, spark, bloom_forced):
         new = spark.createDataFrame(
             [(1, None), (2, "shared text here")], "doc_id long, text string"
         )
         ref = spark.createDataFrame(
             [(9, "shared text here")], "doc_id long, text string"
         )
-        out = dedup_against(
-            new, ref, mode="exact", ref_bloom_fpp=0.01, ref_bloom_force=True
-        ).collect()
+        with bloom_forced():
+            out = dedup_against(
+                new, ref, mode="exact", ref_bloom_fpp=0.01
+            ).collect()
         assert [r["doc_id"] for r in out] == [1]
 
 
@@ -199,12 +221,12 @@ def test_big_bitmap_build_and_probe(spark):
     assert maybe.count() == n
 
 
-def test_bloom_guard_skips_broadcastable_ref(spark):
+def test_bloom_guard_skips_broadcastable_ref(spark, bloom_forced):
     # r10: the guard engages only when the guarded join's right side is
     # too big to broadcast (dedup._bloom_worth_it) — at broadcastable
     # sizes the anti-join is already map-side and the Bloom build passes
     # are pure overhead.  A tiny ref must therefore produce a plan with
-    # NO Python membership stage unless ref_bloom_force is set; survivors
+    # NO Python membership stage unless auto-broadcast is off; survivors
     # are identical either way (pinned by test_bloom_pruned_equals_plain).
     from pyspark.sql import functions as F
 
@@ -218,10 +240,9 @@ def test_bloom_guard_skips_broadcastable_ref(spark):
     ref = docs.where(F.col("doc_id") % 3 == 0)
     auto = dedup_against(new, ref, mode="exact", ref_bloom_fpp=0.01)
     assert "MapInPandas" not in auto._jdf.queryExecution().executedPlan().toString()
-    forced = dedup_against(
-        new, ref, mode="exact", ref_bloom_fpp=0.01, ref_bloom_force=True
-    )
-    assert "MapInPandas" in forced._jdf.queryExecution().executedPlan().toString()
+    with bloom_forced():
+        forced = dedup_against(new, ref, mode="exact", ref_bloom_fpp=0.01)
+        assert "MapInPandas" in forced._jdf.queryExecution().executedPlan().toString()
     assert sorted(r["doc_id"] for r in auto.collect()) == sorted(
         r["doc_id"] for r in forced.collect()
     )

@@ -534,11 +534,20 @@ def test_covering_null_float_payload_roundtrips(engine):
             assert abs(a["fscore"] - b["fscore"]) < 1e-6
 
 
-def test_vacuum_failure_names_covering_stage(covered_engine, monkeypatch):
+@pytest.mark.parametrize("op", ["vacuum", "merge_index"])
+def test_vacuum_failure_names_covering_stage(covered_engine, monkeypatch, op):
     # a failed rebuild of a covering index must name BOTH staged paths —
     # the covering sidecar stage leaked silently before (ADVICE r7)
     engine, rows = covered_engine
     import duckdb_annsearch_spark.engine as eng_mod
+
+    args = ["cv_flat"]
+    if op == "merge_index":
+        engine.create_index(
+            "cv_src", "cv", "embedding", engine="faiss", index_type="Flat",
+            covering=True,
+        )
+        args.append("cv_src")
 
     def boom(*a, **k):
         raise RuntimeError("injected build failure")
@@ -546,8 +555,13 @@ def test_vacuum_failure_names_covering_stage(covered_engine, monkeypatch):
     monkeypatch.setattr(
         eng_mod._INDEX_CLASSES["flat"], "build", staticmethod(boom)
     )
-    with pytest.raises(RuntimeError, match="covering payload staged at"):
-        engine.vacuum("cv_flat")
+    verb = op.split("_")[0]
+    with pytest.raises(
+        RuntimeError,
+        match=rf"{verb} rebuild of 'cv_flat' failed; staged rows kept at "
+        r"\S+; covering payload staged at \S+",
+    ):
+        getattr(engine, op)(*args)
 
 
 def test_covering_serves_during_concurrent_lifecycle(engine):

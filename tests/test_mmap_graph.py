@@ -21,7 +21,7 @@ def _build(engine, name, n=1200, dim=16, seed=0, **params):
     return rows, engine.catalog.data_path(name)
 
 
-def test_mmap_serving_identical_to_ram_load(engine, monkeypatch):
+def test_mmap_serving_identical_to_ram_load(engine):
     rows, path = _build(engine, "mmg")
     assert os.path.exists(os.path.join(path, "_graph.diskann"))
     assert os.path.exists(os.path.join(path, "_row_ids.bin"))
@@ -31,8 +31,7 @@ def test_mmap_serving_identical_to_ram_load(engine, monkeypatch):
     assert isinstance(g_m.vectors, np.memmap)  # vectors NOT materialized
     assert isinstance(g_m.neighbors, np.memmap)  # adjacency NOT materialized
 
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, rid_r = _load_graph(path)
+    g_r, rid_r = _load_graph(path, mmap=False)
     assert not isinstance(g_r, _MmapVamana)
 
     assert np.array_equal(np.asarray(rid_m), np.asarray(rid_r))
@@ -45,14 +44,13 @@ def test_mmap_serving_identical_to_ram_load(engine, monkeypatch):
         assert np.array_equal(np.asarray(dm), np.asarray(dr))  # bit-identical
 
 
-def test_mmap_serving_quantized_matches_parquet_dequant(engine, monkeypatch):
+def test_mmap_serving_quantized_matches_parquet_dequant(engine):
     # SQ8 artifacts store DEQUANTIZED vectors in the binary: mmap search
     # must see exactly what the parquet path computes from the codes
     rows, path = _build(engine, "mmq", n=600, quantization="sq8")
     g_m, _ = _load_graph(path)
     assert isinstance(g_m, _MmapVamana)
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, _ = _load_graph(path)
+    g_r, _ = _load_graph(path, mmap=False)
     assert np.allclose(
         np.asarray(g_m.vectors[:50]), np.asarray(g_r.vectors[:50]), atol=0
     )
@@ -95,7 +93,7 @@ def test_mmap_invalidates_after_vacuum(engine):
     assert got == [9]
 
 
-def test_sharded_mmap_sidecars_identical_results(engine, monkeypatch):
+def test_sharded_mmap_sidecars_identical_results(engine):
     # sharded builds write per-shard DANN sidecars (local-remapped) in a
     # distributed post-pass; shard loads mmap-serve with identical results
     from duckdb_annsearch_spark.index.graph import _load_shard
@@ -116,8 +114,7 @@ def test_sharded_mmap_sidecars_identical_results(engine, monkeypatch):
 
     g_m, rid_m = _load_shard(sdirs[0])
     assert isinstance(g_m, _MmapVamana)
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, rid_r = _load_shard(sdirs[0])
+    g_r, rid_r = _load_shard(sdirs[0], mmap=False)
     assert not isinstance(g_r, _MmapVamana)
     assert np.array_equal(np.asarray(rid_m), np.asarray(rid_r))
     qs = rng.rand(8, 8).astype(np.float32)
@@ -126,7 +123,6 @@ def test_sharded_mmap_sidecars_identical_results(engine, monkeypatch):
     ):
         assert np.array_equal(np.asarray(lm), np.asarray(lr))
         assert np.array_equal(np.asarray(dm), np.asarray(dr))
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_MMAP")
 
     # engine-level fan-out search over the mmap-served shards
     idx = engine.get_index("shm")
@@ -134,7 +130,7 @@ def test_sharded_mmap_sidecars_identical_results(engine, monkeypatch):
     assert got == [11]
 
 
-def test_sharded_pq_graph_build_and_serving(engine, monkeypatch):
+def test_sharded_pq_graph_build_and_serving(engine):
     """Sharded PQ graphs (round 5): per-shard m-byte codes under
     INDEX-GLOBAL codebooks; parquet loads and PQC-trailer mmap loads decode
     to identical vectors and search identically; serving pages u8 codes
@@ -171,8 +167,7 @@ def test_sharded_pq_graph_build_and_serving(engine, monkeypatch):
     # codes column — identical vectors, identical search results
     g_m, rid_m = _load_shard(sdirs[0])
     assert isinstance(g_m, _MmapVamana) and isinstance(g_m.vectors, _PqView)
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, rid_r = _load_shard(sdirs[0])
+    g_r, rid_r = _load_shard(sdirs[0], mmap=False)
     assert not isinstance(g_r, _MmapVamana)
     assert np.array_equal(np.asarray(rid_m), np.asarray(rid_r))
     assert np.array_equal(g_m.vectors[:40], np.asarray(g_r.vectors[:40]))
@@ -182,7 +177,6 @@ def test_sharded_pq_graph_build_and_serving(engine, monkeypatch):
     ):
         assert np.array_equal(np.asarray(lm), np.asarray(lr))
         assert np.array_equal(np.asarray(dm), np.asarray(dr))
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_MMAP")
 
     # engine-level fan-out: PQ reconstruction is lossy, so check top-10
     # recall against exact brute force rather than exact identity
@@ -250,7 +244,7 @@ def test_empty_graph_after_delete_all_vacuum_still_searchable(engine):
     assert idx.search(rows[0][1], 3).count() == 0
 
 
-def test_sharded_opq_graph_build_and_serving(engine, monkeypatch):
+def test_sharded_opq_graph_build_and_serving(engine):
     """Sharded OPQ graphs (round 5): the index-global rotation composes with
     the per-shard codes — encode R @ x, decode applies R^T — so every load
     path (parquet decode, OPQC-trailer mmap paging) reconstructs identical
@@ -307,9 +301,7 @@ def test_sharded_opq_graph_build_and_serving(engine, monkeypatch):
     # mmap (OPQC paging) and parquet loads serve identical vectors/results
     g_m, rid_m = _load_shard(sdirs[0])
     assert isinstance(g_m.vectors, _PqView) and g_m.vectors.rotation is not None
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, rid_r = _load_shard(sdirs[0])
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_MMAP")
+    g_r, rid_r = _load_shard(sdirs[0], mmap=False)
     assert np.array_equal(np.asarray(rid_m), np.asarray(rid_r))
     assert np.allclose(g_m.vectors[:40], np.asarray(g_r.vectors[:40]), atol=1e-5)
     qs = rng.rand(6, dim).astype(np.float32)

@@ -188,7 +188,7 @@ def test_sq8_on_sharded_build(engine):
     assert len(quant & full) >= 8
 
 
-def test_sharded_sq8_mmap_matches_parquet(engine, monkeypatch):
+def test_sharded_sq8_mmap_matches_parquet(engine):
     """Quantized shards mmap-serve FROM the u8 code pages (_Sq8View) with
     results bit-identical to the parquet dequantize load."""
     import os
@@ -209,8 +209,7 @@ def test_sharded_sq8_mmap_matches_parquet(engine, monkeypatch):
     g_m, rid_m = _load_shard(shard_dir)
     assert isinstance(g_m, _MmapVamana)
     assert isinstance(g_m.vectors, _Sq8View)  # serving off code pages
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_MMAP", "0")
-    g_r, rid_r = _load_shard(shard_dir)
+    g_r, rid_r = _load_shard(shard_dir, mmap=False)
     assert not isinstance(g_r, _MmapVamana)
     assert np.array_equal(np.asarray(rid_m), np.asarray(rid_r))
 
@@ -221,6 +220,43 @@ def test_sharded_sq8_mmap_matches_parquet(engine, monkeypatch):
         assert np.array_equal(np.asarray(lm), np.asarray(lr))
         assert np.array_equal(np.asarray(dm), np.asarray(dr))  # bit-identical
 
+
+
+def test_sharded_sq8_rewrites_rescore_the_uncut_union(engine, monkeypatch):
+    """Every serving path that re-scores a sharded quantized graph's
+    candidates exactly asks the index for the uncut per-shard union
+    (``merge_k=0``): the engine.sql top-k rewrite and topk_filtered, like
+    ann_search(rerank=True)."""
+    from pyspark.sql import functions as F
+
+    from duckdb_annsearch_spark.index.base import BaseIndex
+
+    rng = np.random.RandomState(29)
+    n, dim = 300, 8
+    rows = [(i, rng.rand(dim).astype(np.float32).tolist()) for i in range(n)]
+    engine.register_table("shr", make_vectors_df(engine.spark, rows, dim=dim), row_id="id")
+    engine.streaming_build("shr8", "shr", shards=3, quantization="sq8")
+    seen = []
+    search_batch = BaseIndex.search_batch
+
+    def spy(self, queries, k, **kw):
+        seen.append(kw.get("merge_k"))
+        return search_batch(self, queries, k, **kw)
+
+    monkeypatch.setattr(BaseIndex, "search_batch", spy)
+    q = rows[17][1]
+    arr = "array(" + ", ".join(f"CAST({x!r} AS FLOAT)" for x in q) + ")"
+    decision = {}
+    got = engine.sql(
+        f"SELECT * FROM (SELECT *, array_distance(embedding, {arr}) AS d "
+        "FROM shr) ORDER BY d LIMIT 5",
+        explain=decision,
+    ).collect()
+    assert decision["rewritten"] and seen == [0]
+    assert got[0]["id"] == 17
+    got = engine.topk_filtered("shr", F.col("id") % 2 == 1, q, 5).collect()
+    assert seen == [0, 0]
+    assert all(r["id"] % 2 == 1 for r in got) and len(got) == 5
 
 def test_sq8_on_ivfflat(engine):
     """SQ8 inside IVF cells: codes column in the hive partitions, both probe
