@@ -19,7 +19,7 @@ from collections.abc import Sequence
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,6 +28,7 @@ from duckdb_annsearch_spark.functions.distance import metric_distance
 from duckdb_annsearch_spark.index.flat import FlatIndex
 from duckdb_annsearch_spark.index.graph import GraphIndex
 from duckdb_annsearch_spark.index.ivf import IvfFlatIndex
+from duckdb_annsearch_spark.index.kernels import topk_per_query
 from duckdb_annsearch_spark.operators.distances import detect_vector_column, vector_distances
 from duckdb_annsearch_spark.operators.topk import topk_brute_force
 
@@ -1635,20 +1636,11 @@ class AnnEngine:
             exact = metric_distance(
                 F.col(idx.meta.column), F.col("__qvec"), idx.meta.metric
             )
-            w = Window.partitionBy("query_idx").orderBy(
-                F.col("_distance").asc(), F.col(t.row_id).asc()
+            rescored = joined.join(F.broadcast(qdf), "query_idx").select(
+                "query_idx", *t.df.columns, exact.alias("_distance")
             )
-            return (
-                joined.join(F.broadcast(qdf), "query_idx")
-                .select("query_idx", *t.df.columns, exact.alias("_distance"))
-                .withColumn("__rk", F.row_number().over(w))
-                .where(F.col("__rk") <= k)
-                .drop("__rk")
-                .orderBy(
-                    F.col("query_idx").asc(),
-                    F.col("_distance").asc(),
-                    F.col(t.row_id).asc(),
-                )
+            return topk_per_query(rescored, k, row_col=t.row_id).orderBy(
+                F.col("query_idx").asc(), F.col("_distance").asc(), F.col(t.row_id).asc()
             )
         return joined.select("query_idx", *t.df.columns, "_distance").orderBy(
             F.col("query_idx").asc(), F.col("_distance").asc(), F.col(t.row_id).asc()
@@ -1735,25 +1727,17 @@ class AnnEngine:
                 F.col(f"__q.{qcol}").cast("array<float>"),
                 idx.meta.metric,
             )
+            rescored = joined.select(
+                F.col("__query_idx"),
+                *[F.col(f"__q.{c}") for c in queries_df.columns],
+                *base_cols,
+                exact.alias("_distance"),
+                F.col(f"__base.{t.row_id}").alias("__rrk_rid"),
+            )
             return (
-                joined.select(
-                    F.col("__query_idx"),
-                    *[F.col(f"__q.{c}") for c in queries_df.columns],
-                    *base_cols,
-                    exact.alias("_distance"),
-                    F.col(f"__base.{t.row_id}").alias("__rrk_rid"),
-                )
-                .withColumn(
-                    "__rrk",
-                    F.row_number().over(
-                        Window.partitionBy("__query_idx").orderBy(
-                            F.col("_distance").asc(), F.col("__rrk_rid").asc()
-                        )
-                    ),
-                )
-                .where(F.col("__rrk") <= k)
+                topk_per_query(rescored, k, idx_col="__query_idx", row_col="__rrk_rid")
                 .orderBy(F.col("__query_idx").asc(), F.col("_distance").asc())
-                .drop("__rrk", "__rrk_rid", "__query_idx")
+                .drop("__rrk_rid", "__query_idx")
             )
         out = joined.select(
             *[F.col(f"__q.{c}") for c in queries_df.columns],

@@ -218,21 +218,6 @@ def add_fp16_codes(artifact: DataFrame, dim: int) -> DataFrame:
     return artifact.mapInPandas(encode, schema + ", codes binary")
 
 
-def topk_per_query(hits: DataFrame, k: int, idx_col: str = "query_idx") -> DataFrame:
-    """Exact global top-k per query from per-partition partial top-ks.
-
-    Only ``nq * k * n_partitions`` candidate rows reach this shuffle — the
-    reduce side of the reference's per-query result list."""
-    w = Window.partitionBy(idx_col).orderBy(
-        F.col("_distance").asc(), F.col("row_id").asc()
-    )
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .drop("__rn")
-    )
-
-
 class BaseIndex:
     def __init__(self, catalog: Catalog, meta: IndexMeta):
         self.catalog = catalog
@@ -299,7 +284,7 @@ class BaseIndex:
             # re-score must see every candidate — a code-distance cut here
             # would reintroduce the loss the caller opted out of
             return combined
-        return topk_per_query(combined, k)
+        return kernels.topk_per_query(combined, k)
 
     def search_batch_df(
         self,
@@ -340,7 +325,7 @@ class BaseIndex:
         combined = hits.unionByName(extra)
         if kw.get("merge_k") == 0:  # rerank recipe: no code-distance cut
             return combined
-        return topk_per_query(combined, k, idx_col=idx_col)
+        return kernels.topk_per_query(combined, k, idx_col=idx_col)
 
     def _search_batch_impl(
         self, queries: list[Sequence[float]], k: int, **kw

@@ -4,15 +4,13 @@ The reference's Flat index stores raw vectors and searches exhaustively
 (``/root/reference/src/faiss_index.cpp:39-60`` — factory string "Flat" /
 "IDMap,Flat").  Here the "index" is the vectors artifact itself; search is
 the distributed GEMM probe (`kernels.probe_partitions`) — exact results,
-map-side bounded top-k, no full shuffle.
+map-side bounded top-k, no full shuffle — and, for a distributed query
+table, the query-distributed scan (`scan.probe_path_df`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
-
-import numpy as np
-import pandas as pd
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -140,51 +138,20 @@ class FlatIndex(BaseIndex):
         idx_col: str = "query_idx",
         **kw,
     ) -> DataFrame:
-        """Query-distributed exact search: each task streams the artifact
-        through pyarrow for its slice of queries (one GEMM per batch pair)."""
+        """Query-distributed exact search: the artifact is one parquet
+        vector directory, so this is :func:`scan.probe_path_df` over it
+        (codes column + dequantize on quantized artifacts, tombstones
+        filtered in the scan)."""
         dq = self._dequant_args()
-        path = self.catalog.data_path(self.meta.name)
-        dim, metric = self.meta.dim, self.meta.metric
-        vcol = "codes" if dq else "vector"
-        deleted = self._deleted_rowid_array()
-
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # concatenate the task's incoming Arrow batches FIRST so the
-            # artifact streams exactly once per task, not once per batch
-            # (same shape as scan.probe_path_df)
-            valid: list[tuple[int, np.ndarray]] = []
-            for pdf in batches:
-                for i, v in enumerate(pdf[query_col]):
-                    if v is not None and len(v) == dim:
-                        valid.append(
-                            (int(pdf[idx_col].iloc[i]), np.asarray(v, dtype=np.float32))
-                        )
-            if not valid:
-                return
-            qarr = kernels.transform_queries(np.stack([q for _, q in valid]), dq)
-            top = scan.RunningTopK(len(valid), k)
-            for rid, x in scan.iter_vector_batches(path, dim, vcol, dq):
-                if deleted.size:
-                    keep = ~np.isin(rid, deleted)
-                    rid, x = rid[keep], x[keep]
-                if rid.size:
-                    top.update_batch(
-                        kernels.pairwise_distances(qarr, x, metric), rid
-                    )
-            outs = []
-            for qi, (orig_idx, _) in enumerate(valid):
-                r, d = top.result(qi)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            idx_col: np.full(len(r), orig_idx, dtype=np.int64),
-                            "row_id": r,
-                            "_distance": d.astype(np.float32),
-                        }
-                    )
-                )
-            yield pd.concat(outs, ignore_index=True)
-
-        return queries_df.select(idx_col, query_col).mapInPandas(
-            probe, f"{idx_col} long, row_id long, _distance float"
+        return scan.probe_path_df(
+            queries_df,
+            self.catalog.data_path(self.meta.name),
+            k,
+            self.meta.dim,
+            self.meta.metric,
+            vector_col="codes" if dq else "vector",
+            dequantize=dq,
+            deleted=self._deleted_rowid_array(),
+            query_col=query_col,
+            idx_col=idx_col,
         )

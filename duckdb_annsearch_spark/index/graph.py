@@ -528,6 +528,23 @@ def _load_shard(shard_dir: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndar
     return VamanaGraph(vectors, neighbors, ep, metric, row_ids), row_ids
 
 
+def _beam_hits(g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted) -> pd.DataFrame:
+    """Top-k hit frame of ``pdf``'s valid queries on one (sub)graph: one
+    lock-step beam search over-fetching by the tombstone count, tombstone
+    filter, cut to k — the map side of both graph probes."""
+    orig_idx, qmat = kernels.valid_queries(pdf, query_col, idx_col, dim)
+    overfetch = k + deleted.size
+    results = g.beam_search_batch(qmat, overfetch, max(L, overfetch)) if len(qmat) else []
+    pieces = []
+    for i, (labels, dists) in zip(orig_idx, results):
+        rids = row_ids[labels]
+        if deleted.size:
+            keep = ~np.isin(rids, deleted)
+            rids, dists = rids[keep], dists[keep]
+        pieces.append((i, rids[:k], dists[:k]))
+    return kernels.hits_frame(idx_col, np.int64, pieces)
+
+
 class GraphIndex(BaseIndex):
     TYPE = "diskann"
 
@@ -700,7 +717,6 @@ class GraphIndex(BaseIndex):
             )
         L = max(k, int(search_complexity or self._beam()))
         deleted = self._deleted_rowid_array()
-        overfetch = k + deleted.size
         path = self.catalog.data_path(self.meta.name)
         dim = self.meta.dim
 
@@ -710,41 +726,9 @@ class GraphIndex(BaseIndex):
             # search amortizes frontier/distance work across ALL the task's
             # queries (R2 parity — rust_lib/src/provider.rs:243-440)
             pdfs = [b for b in batches if len(b)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            valid = [
-                i
-                for i in range(len(pdf))
-                if pdf[query_col].iloc[i] is not None
-                and len(pdf[query_col].iloc[i]) == dim
-            ]
-            if not valid:
-                return
-            qmat = np.asarray(
-                [np.asarray(pdf[query_col].iloc[i], dtype=np.float32) for i in valid]
-            )
-            results = g.beam_search_batch(qmat, overfetch, max(L, overfetch))
-            outs = []
-            for i, (labels, dists) in zip(valid, results):
-                rids = row_ids[labels]
-                if deleted.size:
-                    keep = ~np.isin(rids, deleted)
-                    rids, dists = rids[keep], dists[keep]
-                rids, dists = rids[:k], dists[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            idx_col: np.full(
-                                len(rids), int(pdf[idx_col].iloc[i]), dtype=np.int64
-                            ),
-                            "row_id": rids.astype(np.int64),
-                            "_distance": dists.astype(np.float32),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            if pdfs:
+                pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+                yield _beam_hits(g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted)
 
         return queries_df.select(idx_col, query_col).mapInPandas(
             probe, f"{idx_col} long, row_id long, _distance float"
@@ -779,14 +763,12 @@ class GraphIndex(BaseIndex):
         capped recall@10 at 0.78-0.81 while the per-shard beams had found
         every true neighbor; reranking the uncut union restores it."""
         from duckdb_annsearch_spark.functions.distance import metric_distance
-        from duckdb_annsearch_spark.index.base import topk_per_query
 
         shard_ids = self.meta.extra.get("shard_ids") or list(
             range(int(self.meta.extra["shards"]))
         )
         L = max(k, int(search_complexity or self._beam()))
         deleted = self._deleted_rowid_array()
-        overfetch = k + deleted.size
         path = self.catalog.data_path(self.meta.name)
         dim = self.meta.dim
 
@@ -820,51 +802,9 @@ class GraphIndex(BaseIndex):
             g, row_ids = index_cache.get_or_load(
                 f"{path}/shard={sid}", _load_shard
             )
-            valid = [
-                i
-                for i in range(len(grp))
-                if grp[query_col].iloc[i] is not None
-                and len(grp[query_col].iloc[i]) == dim
-            ]
-            outs = []
-            if not valid:
-                results = []
-            else:
-                # one lock-step batch per (shard, task): all of this shard's
-                # queries advance together (R2 — provider.rs:243-440)
-                qmat = np.asarray(
-                    [
-                        np.asarray(grp[query_col].iloc[i], dtype=np.float32)
-                        for i in valid
-                    ]
-                )
-                results = g.beam_search_batch(qmat, overfetch, max(L, overfetch))
-            for i, (labels, dists) in zip(valid, results):
-                rids = row_ids[labels]
-                if deleted.size:
-                    keep = ~np.isin(rids, deleted)
-                    rids, dists = rids[keep], dists[keep]
-                rids, dists = rids[:k], dists[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            idx_col: np.full(
-                                len(rids), int(grp[idx_col].iloc[i]), dtype=np.int64
-                            ),
-                            "row_id": rids.astype(np.int64),
-                            "_distance": dists.astype(np.float32),
-                        }
-                    )
-                )
-            if not outs:
-                return pd.DataFrame(
-                    {
-                        idx_col: pd.Series(dtype="int64"),
-                        "row_id": pd.Series(dtype="int64"),
-                        "_distance": pd.Series(dtype="float32"),
-                    }
-                )
-            return pd.concat(outs, ignore_index=True)
+            # one lock-step batch per (shard, task): all of this shard's
+            # queries advance together (R2 — provider.rs:243-440)
+            return _beam_hits(g, row_ids, grp, query_col, idx_col, dim, k, L, deleted)
 
         # groupBy per shard (NOT repartition(n, "shard"): hash partitioning
         # collides shards into shared tasks and leaves others empty) — each
@@ -874,7 +814,7 @@ class GraphIndex(BaseIndex):
         )
         if merge_k == 0:  # rerank recipe: exact re-score sees every candidate
             return partial
-        return topk_per_query(partial, k, idx_col=idx_col)
+        return kernels.topk_per_query(partial, k, idx_col=idx_col)
 
     def _search_batch_impl(
         self,

@@ -20,7 +20,7 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
@@ -729,32 +729,16 @@ class IvfFlatIndex(BaseIndex):
                             x = kernels.stack_vectors(grp[vcol], dim)
                         d = kernels.pairwise_distances(qarr[qids], x, metric)
                     rid = grp["row_id"].to_numpy()
-                    outs = []
+                    pieces = []
                     for row, qi in enumerate(qids):
                         sel = kernels.local_topk(d[row], k_, ids=rid)
-                        outs.append(
-                            pd.DataFrame(
-                                {
-                                    "query_idx": np.full(len(sel), qi, dtype=np.int32),
-                                    "row_id": rid[sel].astype(np.int64),
-                                    "_distance": d[row, sel],
-                                }
-                            )
-                        )
-                    if outs:
-                        yield pd.concat(outs, ignore_index=True)
+                        pieces.append((qi, rid[sel], d[row, sel]))
+                    yield kernels.hits_frame("query_idx", np.int32, pieces)
 
         partial = art.select("row_id", vcol, "cluster_id").mapInPandas(
             probe, kernels.PROBE_SCHEMA
         )
-        w = Window.partitionBy("query_idx").orderBy(
-            F.col("_distance").asc(), F.col("row_id").asc()
-        )
-        return (
-            partial.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") <= k)
-            .drop("__rn")
-        )
+        return kernels.topk_per_query(partial, k)
 
     def _search_batch_df_impl(
         self,
@@ -790,49 +774,36 @@ class IvfFlatIndex(BaseIndex):
             # concatenate the task's Arrow batches first — the probed cells
             # are read once per task, not once per query batch
             pdfs = [b for b in batches if len(b)]
-            for pdf in [pd.concat(pdfs, ignore_index=True)] if pdfs else []:
-                valid = [
-                    (int(pdf[idx_col].iloc[i]), np.asarray(v, dtype=np.float32))
-                    for i, v in enumerate(pdf[query_col])
-                    if v is not None and len(v) == dim
-                ]
-                if not valid:
+            if not pdfs:
+                return
+            orig_idx, qarr = kernels.valid_queries(
+                pd.concat(pdfs, ignore_index=True), query_col, idx_col, dim
+            )
+            if not len(orig_idx):
+                return
+            dc = kernels.pairwise_distances(qarr, cent, metric)
+            cell_queries: dict[int, list[int]] = {}
+            for qi in range(len(orig_idx)):
+                for c in kernels.local_topk(dc[qi], nprobe):
+                    cell_queries.setdefault(int(c), []).append(qi)
+            top = scan.RunningTopK(len(orig_idx), k)
+            for rid, x, cid in _iter_cell_batches(
+                path, dim, sorted(cell_queries), dequantize=dq
+            ):
+                if deleted.size:
+                    keep = ~np.isin(rid, deleted)
+                    rid, x = rid[keep], x[keep]
+                qids = cell_queries.get(cid)
+                if not qids or rid.size == 0:
                     continue
-                qarr = np.stack([q for _, q in valid])
-                dc = kernels.pairwise_distances(qarr, cent, metric)
-                cells = [kernels.local_topk(dc[i], nprobe) for i in range(len(valid))]
-                cell_queries: dict[int, list[int]] = {}
-                for qi, cc in enumerate(cells):
-                    for c in cc:
-                        cell_queries.setdefault(int(c), []).append(qi)
-                top = scan.RunningTopK(len(valid), k)
-                all_cells = sorted(cell_queries)
-                for rid, x, cid in _iter_cell_batches(
-                    path, dim, all_cells, dequantize=dq
-                ):
-                    if deleted.size:
-                        keep = ~np.isin(rid, deleted)
-                        rid, x = rid[keep], x[keep]
-                    qids = cell_queries.get(cid)
-                    if not qids or rid.size == 0:
-                        continue
-                    d = kernels.pairwise_distances(qarr[qids], x, metric)
-                    for row, qi in enumerate(qids):
-                        top.update(qi, d[row], rid)
-                outs = []
-                for qi, (orig_idx, _) in enumerate(valid):
-                    r, d = top.result(qi)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                idx_col: np.full(len(r), orig_idx, dtype=np.int64),
-                                "row_id": r,
-                                "_distance": d.astype(np.float32),
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                d = kernels.pairwise_distances(qarr[qids], x, metric)
+                for row, qi in enumerate(qids):
+                    top.update(qi, d[row], rid)
+            yield kernels.hits_frame(
+                idx_col,
+                np.int64,
+                [(i, *top.result(qi)) for qi, i in enumerate(orig_idx)],
+            )
 
         return queries_df.select(idx_col, query_col).mapInPandas(
             probe, f"{idx_col} long, row_id long, _distance float"

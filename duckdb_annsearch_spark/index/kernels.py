@@ -1,4 +1,7 @@
-"""Numpy distance kernels + the partition-parallel batch top-k probe.
+"""Numpy distance kernels, the partition-parallel batch top-k probe, and
+the per-query top-k pieces every index probe shares: the query check
+(``valid_queries``), the hit frame (``hits_frame``) and the reduce-side
+merge (``topk_per_query``).
 
 These are the Spark mapping of the reference's SIMD/GPU batch distance layer
 (``/root/reference/rust_lib/src/distance.rs``, lock-step batch search in
@@ -475,8 +478,8 @@ def probe_partitions(
     """Distributed batch brute-force top-k.
 
     Map side: per Arrow batch, one GEMM for all queries, local top-k per query
-    (bounded memory: ``nq*k`` rows out per batch).  Reduce side: window
-    ``row_number`` per query — only ``nq * k * n_partitions`` rows shuffle,
+    (bounded memory: ``nq*k`` rows out per batch).  Reduce side:
+    :func:`topk_per_query` — only ``nq * k * n_partitions`` rows shuffle,
     never the data.  Returns (query_idx, row_id, _distance) with exactly the
     global top-k per query, ties broken by row_id.
     """
@@ -506,27 +509,61 @@ def probe_partitions(
                 )
                 d = pairwise_distances(qarr, x, metric)
             rid = pdf[row_id_col].to_numpy()
-            outs = []
+            pieces = []
             for qi in range(d.shape[0]):
                 sel = local_topk(d[qi], k, ids=rid)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_idx": np.full(len(sel), qidx[qi], dtype=np.int32),
-                            "row_id": rid[sel].astype(np.int64),
-                            "_distance": d[qi, sel],
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                pieces.append((qidx[qi], rid[sel], d[qi, sel]))
+            yield hits_frame("query_idx", np.int32, pieces)
 
     partial = artifact.select(row_id_col, vector_col).mapInPandas(probe, PROBE_SCHEMA)
-    w = Window.partitionBy("query_idx").orderBy(
-        F.col("_distance").asc(), F.col("row_id").asc()
+    return topk_per_query(partial, k)
+
+
+def valid_queries(
+    pdf: pd.DataFrame, query_col: str, idx_col: str, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(orig_idx int64[n], qmat float32[n, dim])`` of the rows whose query
+    is non-NULL with exactly ``dim`` entries — the one query check of every
+    query-distributed probe.  Other rows produce no hits
+    (``test/sql/edge_cases.test`` semantics)."""
+    q = pdf[query_col]
+    keep = [i for i, v in enumerate(q) if v is not None and len(v) == dim]
+    qmat = np.asarray([q.iloc[i] for i in keep], dtype=np.float32)
+    return pdf[idx_col].to_numpy()[keep].astype(np.int64), qmat.reshape(len(keep), dim)
+
+
+def hits_frame(idx_col: str, idx_dtype, pieces: list[tuple]) -> pd.DataFrame:
+    """The typed ``(idx_col, row_id int64, _distance float32)`` hit frame
+    from ``(query index, row_ids, distances)`` pieces, one per query, in
+    order.  No pieces gives the typed empty frame."""
+    return pd.DataFrame(
+        {
+            idx_col: np.repeat(
+                np.asarray([p[0] for p in pieces], dtype=idx_dtype),
+                [len(p[1]) for p in pieces],
+            ),
+            "row_id": np.concatenate([p[1] for p in pieces] or [[]]).astype(np.int64),
+            "_distance": np.concatenate([p[2] for p in pieces] or [[]]).astype(
+                np.float32
+            ),
+        }
+    )
+
+
+def topk_per_query(
+    hits: DataFrame, k: int, idx_col: str = "query_idx", row_col: str = "row_id"
+) -> DataFrame:
+    """Exact global top-k per query from partial top-ks, ties by
+    ``row_col`` — the one reduce side of every index search.
+
+    Only ``nq * k * n_partitions`` candidate rows reach this shuffle — the
+    merge of the reference's per-chunk result lists
+    (``src/ann_search.cpp:560-685``)."""
+    w = Window.partitionBy(idx_col).orderBy(
+        F.col("_distance").asc(), F.col(row_col).asc()
     )
     return (
-        partial.withColumn("__rn", F.row_number().over(w))
+        hits.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)
         .drop("__rn")
     )

@@ -8,6 +8,11 @@ of ``kernels.probe_partitions`` (artifact-parallel, queries broadcast); the
 engine picks per call-site.  Mirrors the reference's chunked in-out scan
 loop (``/root/reference/src/ann_search.cpp:560-685``) with Arrow record
 batches standing in for DataChunks.
+
+``probe_path_df`` is the one query-distributed exact probe: Flat's table
+search and every index's insert-delta tail both run it.  The query check
+(``kernels.valid_queries``) and the hit frame (``kernels.hits_frame``) are
+shared with the IVF and graph probes.
 """
 
 from __future__ import annotations
@@ -97,55 +102,39 @@ def probe_path_df(
 ):
     """Query-distributed exact probe of a parquet vector directory: each task
     streams the files through pyarrow for its slice of queries (one GEMM per
-    batch pair).  Returns ``(idx_col long, row_id long, _distance float)``."""
+    batch pair).  Serves Flat's table search (the artifact, codes column on
+    quantized indexes) and every index's insert-delta tail.  Returns
+    ``(idx_col long, row_id long, _distance float)``."""
     import pandas as pd
 
-    from duckdb_annsearch_spark.index import kernels
-
     dele = deleted if deleted is not None and deleted.size else None
-    # no ADC route here deliberately: this surface probes raw-vector delta
-    # tails (base.py passes _delta_dequant_args — never a codebook
-    # descriptor), and the query-distributed main probes carry LARGE
-    # per-task query slices where decode+GEMM is the right regime anyway
+    # no ADC route here deliberately: the query-distributed probes carry
+    # LARGE per-task query slices, where decode+GEMM is the right regime
 
     def probe(batches):
         # concatenate the task's Arrow batches FIRST: the artifact is
         # streamed once per task, not once per incoming query batch
-        import pandas as pd
-
         pdfs = [b for b in batches if len(b)]
-        if pdfs:
-            pdf = pd.concat(pdfs, ignore_index=True)
-            valid = [
-                (int(pdf[idx_col].iloc[i]), np.asarray(v, dtype=np.float32))
-                for i, v in enumerate(pdf[query_col])
-                if v is not None and len(v) == dim
-            ]
-        else:
-            valid = []
-        if valid:
-            qarr = kernels.transform_queries(np.stack([q for _, q in valid]), dequantize)
-            top = RunningTopK(len(valid), k)
-            for rid, x in iter_vector_batches(path, dim, vector_col, dequantize):
-                if dele is not None:
-                    keep = ~np.isin(rid, dele)
-                    rid, x = rid[keep], x[keep]
-                if rid.size:
-                    top.update_batch(kernels.pairwise_distances(qarr, x, metric), rid)
-            outs = []
-            for qi, (orig_idx, _) in enumerate(valid):
-                r, d = top.result(qi)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            idx_col: np.full(len(r), orig_idx, dtype=np.int64),
-                            "row_id": r,
-                            "_distance": d.astype(np.float32),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        if not pdfs:
+            return
+        orig_idx, qarr = kernels.valid_queries(
+            pd.concat(pdfs, ignore_index=True), query_col, idx_col, dim
+        )
+        if not len(orig_idx):
+            return
+        qarr = kernels.transform_queries(qarr, dequantize)
+        top = RunningTopK(len(orig_idx), k)
+        for rid, x in iter_vector_batches(path, dim, vector_col, dequantize):
+            if dele is not None:
+                keep = ~np.isin(rid, dele)
+                rid, x = rid[keep], x[keep]
+            if rid.size:
+                top.update_batch(kernels.pairwise_distances(qarr, x, metric), rid)
+        yield kernels.hits_frame(
+            idx_col,
+            np.int64,
+            [(i, *top.result(qi)) for qi, i in enumerate(orig_idx)],
+        )
 
     return queries_df.select(idx_col, query_col).mapInPandas(
         probe, f"{idx_col} long, row_id long, _distance float"

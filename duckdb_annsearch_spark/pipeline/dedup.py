@@ -240,7 +240,10 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFr
     from Catalyst subexpression elimination, and inlining the array into
     ``bits`` aggregate subtrees would re-hash every token ``bits`` times.
     Hashes are the full 60-bit ``token_hash`` (no ``% 2^31-1`` reduction,
-    which would pin bit 31 to zero and halve the top band's entropy)."""
+    which would pin bit 31 to zero and halve the top band's entropy), so
+    ``bits`` runs from 1 to 60: wider signatures carry no signal."""
+    if not 1 <= bits <= 60:
+        raise ValueError(f"simhash bits={bits} must be in 1..60 (token_hash is 60-bit)")
     hashes = F.transform(tokenize(F.col(text_col)), lambda t: token_hash(t))
     staged = df.select(F.col(id_col).alias("doc_id"), hashes.alias("__hs"))
     hs = F.col("__hs")

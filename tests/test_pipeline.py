@@ -205,6 +205,11 @@ def test_null_texts_are_not_duplicates(spark):
 def test_simhash_pairs_param_guard(docs):
     with pytest.raises(ValueError, match="pigeonhole"):
         D.simhash_hamming_pairs(docs, "text", "doc_id", max_hamming=4, bands=4)
+    # token_hash is 60-bit: wider signatures fail by name, not in py4j
+    with pytest.raises(ValueError, match="1..60"):
+        D.simhash_hamming_pairs(docs, "text", "doc_id", bits=64, bands=4)
+    with pytest.raises(ValueError, match="1..60"):
+        D.simhash(docs, "text", "doc_id", bits=0)
 
 
 def test_zero_vectors_not_near_dups(spark):

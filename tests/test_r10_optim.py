@@ -83,6 +83,21 @@ def test_qvec_pyarrow_matches_spark(spark):
     assert fast == slow
 
 
+def test_qvec_schema_drift_raises(spark, tmp_path):
+    """Only an unopenable dataset falls back to the Spark lookup: a parquet
+    copy without ``embedding`` must raise, not silently take the slow path."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyarrow import ArrowInvalid
+
+    import __spark_entry__ as e
+
+    t = ds.dataset(f"{SF}/embeddings.parquet").to_table()
+    pq.write_table(t.drop(["embedding"]), str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ArrowInvalid, match="embedding"):
+        e._qvec(spark, str(tmp_path), vec_id=7)
+
+
 def test_run_remote_gates_large_inputs_locally():
     """Above CLOSURE_MAX_BYTES of ndarray args the step must run in THIS
     process (no Spark job, no session needed) — ADVICE r9: a big driver

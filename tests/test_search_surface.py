@@ -153,17 +153,34 @@ def test_search_table_over_sq8_flat(engine):
     assert len(res) == 1 and res[0]["id"] == 1
 
 
-def test_search_table_graph_null_query_skipped(engine):
+_NULL_QUERY_BUILDS = {
+    "flat": lambda e: e.create_index("g", "docs", "embedding", engine="faiss", index_type="Flat"),
+    "sq8_flat": lambda e: e.create_index(
+        "g", "docs", "embedding", engine="faiss", index_type="Flat", quantization="sq8"
+    ),
+    "ivfflat": lambda e: e.create_index(
+        "g", "docs", "embedding", engine="faiss", index_type="IVFFlat", ivf_nlist=2, nprobe=2
+    ),
+    "graph": lambda e: e.create_index("g", "docs", "embedding", engine="diskann"),
+    "sharded_graph": lambda e: e.streaming_build("g", "docs", "embedding", shards=3),
+}
+
+
+@pytest.mark.parametrize("build", sorted(_NULL_QUERY_BUILDS))
+def test_search_table_graph_null_query_skipped(engine, build):
+    """Every query-distributed probe runs the same query check: a NULL and
+    a wrong-dim query yield no rows, the valid one gets ann_search's hit."""
     df = make_vectors_df(engine.spark, DOCS, vec_col="embedding")
     engine.register_table("docs", df, row_id="id")
-    engine.create_index("g", "docs", "embedding", engine="diskann")
+    _NULL_QUERY_BUILDS[build](engine)
     qdf = engine.spark.createDataFrame(
         [(1, [1.0, 0.0, 0.0]), (2, None), (3, [1.0, 0.0])],
         "qid int, vec array<float>",
     )
     res = engine.ann_search_table(qdf, "docs", "g", k=1).collect()
     assert [r["qid"] for r in res] == [1]
-    assert res[0]["id"] == 1
+    single = engine.ann_search("docs", "g", [1.0, 0.0, 0.0], k=1).collect()
+    assert res[0]["id"] == single[0]["id"] == 1
 
 
 def test_ann_search_rerank_exact_over_quantized(engine):
