@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from duckdb_annsearch_spark.catalog import ROW_ID, Catalog, IndexMeta
 from duckdb_annsearch_spark.functions.distance import metric_distance
+from duckdb_annsearch_spark.index import quant
 from duckdb_annsearch_spark.index.flat import FlatIndex
 from duckdb_annsearch_spark.index.graph import GraphIndex
 from duckdb_annsearch_spark.index.ivf import IvfFlatIndex
@@ -102,7 +103,7 @@ def _parse_faiss_factory_base(d: str, desc: str) -> tuple[str, dict]:
     m = re.fullmatch(r"LSH(\d+)?", d, re.IGNORECASE)
     if m:
         # faiss IndexLSH: hyperplane sign bits, hamming candidate ranking
-        # (index/lsh.py); bare "LSH" = d bits like index_factory
+        # (index/quant.py); bare "LSH" = d bits like index_factory
         p = {"quantization": "lsh"}
         if m.group(1):
             p["lsh_nbits"] = int(m.group(1))
@@ -110,7 +111,7 @@ def _parse_faiss_factory_base(d: str, desc: str) -> tuple[str, dict]:
     m = re.fullmatch(r"PCA(\d+)(,Flat)?", d, re.IGNORECASE)
     if m:
         # PCAMatrix pretransform onto a flat store: codes are reduced f32
-        # coords, decode reconstructs via W^T (index/pca.py); deeper PCA
+        # coords, decode reconstructs via W^T (index/quant.py); deeper PCA
         # chains (PCA over IVF/PQ) stay loudly rejected below
         return "Flat", {"quantization": "pca", "pca_dim": int(m.group(1))}
     m = re.fullmatch(r"PQ(\d+)", d, re.IGNORECASE)
@@ -363,60 +364,9 @@ class AnnEngine:
             raise ValueError(f"unknown index engine {engine!r} (diskann | faiss)")
         params.pop("type", None)
 
-        # quantization is an enum, not a hint: an unknown value silently
-        # building an UNquantized index would be a 4-32x memory surprise at
-        # serving time. PQ is implemented for the cell/flat artifacts and
-        # the SHARDED graph path (per-shard codes under index-global
-        # codebooks); the driver-built single graph quantizes with SQ8
-        # (reference parity: provider.rs SQ8 only) — GraphIndex.build
-        # rejects pq loudly if a small build lands there.
-        quant = params.get("quantization")
-        if quant is not None:
-            quant = str(quant).lower()
-            params["quantization"] = quant
-            if quant not in ("sq4", "sq6", "sq8", "fp16", "pq", "pca", "lsh"):
-                raise ValueError(
-                    f"unknown quantization {quant!r} "
-                    "(sq4 | sq6 | sq8 | fp16 | pq | pca | lsh)"
-                )
-            if quant == "pca":
-                if itype not in ("flat", "ivfflat"):
-                    raise ValueError(
-                        "the PCA pretransform is supported on Flat and IVF "
-                        "indexes (factory 'PCA<dout>[,Flat]' / "
-                        "'PCA<dout>,IVF<nlist>,Flat'); deeper chains are not"
-                    )
-                if "pca_dim" not in params:
-                    raise ValueError(
-                        "quantization='pca' needs pca_dim=<output dim> "
-                        "(the factory form 'PCA<dout>' carries it)"
-                    )
-            if quant == "lsh":
-                if itype != "flat":
-                    raise ValueError(
-                        "LSH codes are supported on Flat indexes "
-                        "(factory 'LSH[<nbits>]'); deeper chains are not"
-                    )
-                if _normalize_metric(metric) != "l2":
-                    raise ValueError(
-                        "LSH hamming ranking approximates L2 only; build the "
-                        "index with metric='l2'"
-                    )
-            if quant == "pq" and itype == "hnsw":
-                raise ValueError(
-                    "quantization='pq' is supported on Flat/IVFFlat and "
-                    "sharded diskann indexes; HNSW quantizes with 'sq8'"
-                )
-            if quant in ("sq4", "sq6", "fp16") and itype not in ("flat", "ivfflat"):
-                raise ValueError(
-                    f"quantization={quant!r} is supported on Flat/IVFFlat "
-                    "indexes; graph indexes quantize with 'sq8' (or 'pq' "
-                    "when sharded)"
-                )
-        if params.get("opq") and (quant != "pq" or itype not in ("flat", "ivfflat")):
-            raise ValueError(
-                "opq requires quantization='pq' on a Flat or IVFFlat index"
-            )
+        # PQ on "diskann" is accepted here and settled by the row-count
+        # routing below: sharded builds encode it, GraphIndex.build rejects it
+        quant.validate(params, itype, _normalize_metric(metric))
 
         # dimension: from metadata or a one-row probe (Spark arrays are not
         # fixed-size; the engine owns the dimension — SURVEY §1.2)
@@ -767,21 +717,9 @@ class AnnEngine:
         t = self.table(table)
         column = column or detect_vector_column(t.df)
         dim = self._validated_dim(t, column)
-        quant = str(params.get("quantization", "")).lower() or None
-        if quant is not None:
-            params["quantization"] = quant
-            allowed = ("sq8", "pq") if shards else ("sq8",)
-            if quant not in allowed:
-                raise ValueError(
-                    f"unknown quantization {quant!r} for this graph build "
-                    f"({' | '.join(allowed)}; 'pq' requires shards=N — "
-                    "per-shard codes under index-global codebooks)"
-                )
-        if params.get("opq") and quant != "pq":
-            raise ValueError(
-                "opq on a graph build requires quantization='pq' (sharded; "
-                "the rotation composes with the per-shard codes)"
-            )
+        quant.validate(
+            params, "sharded" if shards else "graph", _normalize_metric(metric)
+        )
         meta = IndexMeta(
             name=name,
             engine="diskann",
@@ -873,7 +811,11 @@ class AnnEngine:
         # unsorted read + numpy gather — never Table.sort_by on artifact
         # tables (pyarrow 16.1.0 corrupts large list<float> children under
         # sort/take; see index/graph._argsorted_labels)
-        from duckdb_annsearch_spark.index.graph import _argsorted_labels
+        from duckdb_annsearch_spark.index.graph import (
+            _argsorted_labels,
+            _dann_trailer,
+            _label_vectors,
+        )
 
         t = pq.read_table(self.catalog.data_path(name))
         _, order = _argsorted_labels(t, "label")
@@ -883,16 +825,8 @@ class AnnEngine:
         neighbors = [
             np.asarray(nb_un[j] or [], dtype=np.int64) for j in order
         ]
-        sq8 = None
-        if meta.quantized and "codes" in t.column_names:
-            codes_un = t.column("codes").to_pylist()
-            sq8 = {
-                "mins": meta.extra["sq8_mins"],
-                "scales": meta.extra["sq8_scales"],
-                "codes": np.stack(
-                    [np.frombuffer(codes_un[j], dtype=np.uint8) for j in order]
-                ),
-            }
+        dq = quant.load(self.catalog.data_path(name), meta.extra)
+        codes, _ = _label_vectors(t, order, dq)
         write_dann(
             out_path,
             vectors,
@@ -903,7 +837,7 @@ class AnnEngine:
             build_complexity=int(
                 meta.params.get("build_complexity", DEFAULT_BUILD_COMPLEXITY)
             ),
-            sq8=sq8,
+            **_dann_trailer(dq, codes),
         )
         return {"num_vectors": int(vectors.shape[0]), "path": out_path}
 
@@ -933,13 +867,11 @@ class AnnEngine:
             },
         )
         ep = d["entry_points"][0] if d["entry_points"] else 0
-        if d["sq8"] is not None:
-            meta.quantized = True
-            meta.extra["sq8_mins"] = d["sq8"]["mins"].tolist()
-            meta.extra["sq8_scales"] = d["sq8"]["scales"].tolist()
+        sq8 = d["sq8"]
+        dq = None if sq8 is None else {"mins": sq8["mins"], "scales": sq8["scales"]}
         g = VamanaGraph(d["vectors"], d["neighbors"], ep, d["metric"])
         GraphIndex._write_artifact(
-            self.catalog, meta, g, np.arange(n, dtype=np.int64), d["max_degree"]
+            self.catalog, meta, g, np.arange(n, dtype=np.int64), d["max_degree"], dq
         )
         meta.extra["entry_point"] = int(ep)
         meta.num_vectors = n

@@ -1,4 +1,5 @@
-"""Shared index machinery: artifact IO, tombstone compensation, SQ8.
+"""Shared index machinery: artifact IO, labelling, tombstone and delta
+compensation, and the per-instance load of the codes' descriptor.
 
 Artifact layout (all index types): parquet rows
 ``(label INT, row_id LONG, vector ARRAY<FLOAT> [, codes BINARY, neighbors
@@ -6,8 +7,8 @@ ARRAY<INT>, cluster_id INT])``.  ``label`` is the dense internal id —
 the reference's label<->rowid bijection
 (``/root/reference/src/include/diskann_index.hpp:144-149``).
 
-SQ8 (``quantization='sq8'``): per-dimension min/scale, u8 codes, dequantize
-``(code/255)*scale + min`` — ``/root/reference/rust_lib/src/provider.rs:157-230``.
+Quantized artifacts add a ``codes BINARY`` column; how every quantizer
+trains, encodes and persists its codes lives in ``quant.py``.
 Full-precision vectors are kept alongside codes (the reference keeps both,
 ``provider.rs:25-31``); parquet column pruning means a quantized search reads
 only the codes column.
@@ -15,16 +16,15 @@ only the codes column.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
-from duckdb_annsearch_spark.index import kernels
+from duckdb_annsearch_spark.index import kernels, quant
 from duckdb_annsearch_spark.session import estimated_bytes
 
 
@@ -121,103 +121,6 @@ def with_labels(df: DataFrame, row_id_col: str, vector_col: str) -> DataFrame:
     )
 
 
-def compute_sq8_stats(artifact: DataFrame, dim: int) -> tuple[list[float], list[float]]:
-    """Per-dimension (mins, scales) via partial per-partition numpy reduce."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        mins = np.full(dim, np.inf, dtype=np.float64)
-        maxs = np.full(dim, -np.inf, dtype=np.float64)
-        seen = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = kernels.stack_vectors(pdf["vector"], dim)
-            mins = np.minimum(mins, x.min(axis=0))
-            maxs = np.maximum(maxs, x.max(axis=0))
-            seen = True
-        if seen:
-            yield pd.DataFrame({"mins": [mins.tolist()], "maxs": [maxs.tolist()]})
-
-    parts = artifact.select("vector").mapInPandas(
-        partial, "mins array<double>, maxs array<double>"
-    ).collect()
-    if not parts:
-        # zero indexable rows (legal: CREATE INDEX on an empty table, or
-        # vacuum after delete-all) — identity stats; inserts land in the
-        # full-precision delta and a later vacuum recomputes real stats
-        return [0.0] * dim, [1.0] * dim
-    mins = np.min([p["mins"] for p in parts], axis=0).astype(np.float32)
-    maxs = np.max([p["maxs"] for p in parts], axis=0).astype(np.float32)
-    scales = np.maximum(maxs - mins, 1e-12).astype(np.float32)
-    return mins.tolist(), scales.tolist()
-
-
-# scalar-quantizer family (FAISS ScalarQuantizer QT_4bit/QT_6bit/QT_8bit —
-# factory strings "SQ4"/"SQ6"/"SQ8", src/faiss_index.cpp:39-60 forwards them
-# to index_factory); "fp16" is QT_fp16 ("SQfp16"): raw float16 codes, no
-# affine stats.  SQ8 stays the only member on the graph paths (reference
-# provider.rs parity); the others serve the Flat/IVF artifacts.
-SQ_BITS = {"sq4": 4, "sq6": 6, "sq8": 8}
-SQ_QUANTS = ("sq4", "sq6", "sq8", "fp16")
-
-
-def pack_sq_codes(q: np.ndarray, bits: int) -> np.ndarray:
-    """(n, dim) uint8 level indices -> (n, ceil(dim*bits/8)) packed bytes.
-    8-bit passes through; 4/6-bit pack MSB-first via np.packbits (trailing
-    pad bits zero), the symmetric inverse of the unpack in
-    ``kernels.decode_codes``."""
-    if bits == 8:
-        return q
-    n, dim = q.shape
-    b = ((q[:, :, None] >> np.arange(bits - 1, -1, -1, dtype=np.uint8)) & 1).astype(
-        np.uint8
-    )
-    return np.packbits(b.reshape(n, dim * bits), axis=1)
-
-
-def add_sq_codes(
-    artifact: DataFrame,
-    dim: int,
-    mins: list[float],
-    scales: list[float],
-    bits: int = 8,
-) -> DataFrame:
-    mn = np.asarray(mins, dtype=np.float32)
-    sc = np.asarray(scales, dtype=np.float32)
-    levels = float((1 << bits) - 1)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = kernels.stack_vectors(pdf["vector"], dim)
-            q = np.clip(np.rint((x - mn) / sc * levels), 0, levels).astype(np.uint8)
-            q = pack_sq_codes(q, bits)
-            pdf = pdf.copy()
-            pdf["codes"] = [q[i].tobytes() for i in range(q.shape[0])]
-            yield pdf
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in artifact.schema.fields)
-    return artifact.mapInPandas(encode, schema + ", codes binary")
-
-
-def add_sq8_codes(artifact: DataFrame, dim: int, mins: list[float], scales: list[float]) -> DataFrame:
-    return add_sq_codes(artifact, dim, mins, scales, bits=8)
-
-
-def add_fp16_codes(artifact: DataFrame, dim: int) -> DataFrame:
-    """QT_fp16: codes are the vector itself narrowed to float16 (2 bytes/dim,
-    no training stats); decode widens back to f32."""
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = kernels.stack_vectors(pdf["vector"], dim).astype(np.float16)
-            pdf = pdf.copy()
-            pdf["codes"] = [x[i].tobytes() for i in range(x.shape[0])]
-            yield pdf
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in artifact.schema.fields)
-    return artifact.mapInPandas(encode, schema + ", codes binary")
-
-
 class BaseIndex:
     def __init__(self, catalog: Catalog, meta: IndexMeta):
         self.catalog = catalog
@@ -239,6 +142,7 @@ class BaseIndex:
 
     def refresh(self) -> None:
         self.meta = self.catalog.load(self.meta.name)
+        self.__dict__.pop("_dq", None)
 
     def live_rows(self) -> DataFrame:
         """All live (row_id, vector) rows: artifact ∪ delta, minus
@@ -357,58 +261,16 @@ class BaseIndex:
         ``kernels.needs_query_transform`` predicate — not the quantization
         name — so a future code-space code extends one module, not this
         call site."""
-        if not self.meta.quantized:
-            return None
         dq = self._dequant_args()
         if not kernels.needs_query_transform(dq):
             return None
-        dq = dict(dq)
-        dq["raw_vectors"] = True
-        return dq
+        return {**dq, "raw_vectors": True}
 
     def _dequant_args(self) -> dict | None:
-        if not self.meta.quantized:
-            return None
-        if self.meta.extra.get("quantization") == "pq":
-            books = getattr(self, "_pq_codebooks", None)
-            if books is None:
-                from duckdb_annsearch_spark.index import pq
-
-                books = pq.load_codebooks(self.catalog.data_path(self.meta.name))
-                self._pq_codebooks = books
-            dq = {"codebooks": books}
-            if self.meta.extra.get("opq"):
-                rot = getattr(self, "_opq_rotation", None)
-                if rot is None:
-                    from duckdb_annsearch_spark.index import pq
-
-                    rot = pq.load_rotation(self.catalog.data_path(self.meta.name))
-                    self._opq_rotation = rot
-                dq["rotation"] = rot
-            return dq
-        quant = self.meta.extra.get("quantization", "sq8")
-        if quant == "fp16":
-            return {"fp16": True}
-        if quant == "pca":
-            mats = getattr(self, "_pca_mats", None)
-            if mats is None:
-                from duckdb_annsearch_spark.index import pca
-
-                mats = pca.load_pca(self.catalog.data_path(self.meta.name))
-                self._pca_mats = mats
-            return {"pca_mean": mats[0], "pca_w": mats[1]}
-        if quant == "lsh":
-            mats = getattr(self, "_lsh_mats", None)
-            if mats is None:
-                from duckdb_annsearch_spark.index import lsh
-
-                mats = lsh.load_lsh(self.catalog.data_path(self.meta.name))
-                self._lsh_mats = mats
-            return {"lsh_mean": mats[0], "lsh_h": mats[1]}
-        dq = {
-            "mins": self.meta.extra["sq8_mins"],
-            "scales": self.meta.extra["sq8_scales"],
-        }
-        if quant in SQ_BITS and SQ_BITS[quant] != 8:
-            dq["bits"] = SQ_BITS[quant]
-        return dq
+        """The codes' descriptor (``quant.load`` of ``meta.extra``), read
+        once per instance; None on an unquantized index."""
+        if "_dq" not in self.__dict__:
+            self._dq = quant.load(
+                self.catalog.data_path(self.meta.name), self.meta.extra
+            )
+        return self._dq

@@ -21,6 +21,7 @@ Tombstone compensation: over-fetch ``k + num_deleted`` then filter
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
 from duckdb_annsearch_spark.index import cache as index_cache
-from duckdb_annsearch_spark.index import kernels
+from duckdb_annsearch_spark.index import kernels, quant
 from duckdb_annsearch_spark.index.base import BaseIndex, with_labels
 from duckdb_annsearch_spark.index.vamana import (
     DEFAULT_ALPHA,
@@ -89,64 +90,39 @@ def _vector_matrix(col) -> np.ndarray:
     return scan._fixed_matrix(col, dim)
 
 
-class _Sq8View:
-    """Dequantize-on-access view over a (n, dim) u8 code block (typically an
-    np.memmap): ``view[ids]`` reads only the touched code pages — 4x fewer
-    bytes than the f32 block — and returns ``(codes/255)*scale + min`` in
-    float32, the exact dequantization the parquet load path computes
-    (``rust_lib/src/provider.rs:161-210``).  Supports the only access
-    patterns beam search uses: ``.shape`` and integer/slice/fancy
-    ``__getitem__``."""
+class _CodeView:
+    """Decode-on-access view over an (n, code bytes) u8 block (typically an
+    np.memmap): ``view[ids]`` reads only the touched code pages — 4x (SQ8)
+    to 32x (PQ) fewer bytes than the f32 block — and decodes them through
+    ``kernels.decode_codes``, the decoder every other serving path uses.
+    Supports the only access patterns beam search uses: ``.shape`` and
+    integer/slice/fancy ``__getitem__``."""
 
-    def __init__(self, codes, mins: np.ndarray, scales: np.ndarray):
+    def __init__(self, codes, dq: dict, dim: int):
         self.codes = codes
-        self.mins = np.asarray(mins, dtype=np.float32)
-        self.scales = np.asarray(scales, dtype=np.float32)
-        self.shape = codes.shape
-        self.dtype = np.float32
-
-    def __getitem__(self, idx):
-        c = np.asarray(self.codes[idx], dtype=np.float32)
-        return c / np.float32(255.0) * self.scales + self.mins
-
-    def __len__(self):
-        return self.shape[0]
-
-
-class _PqView:
-    """Decode-on-access view over a (n, m) PQ code block (typically an
-    np.memmap): ``view[ids]`` reads only the touched code pages — m bytes
-    per row vs 4*dim for the f32 block — and reconstructs via the
-    index-global codebooks (the same ``decode_pq`` gather every other PQ
-    serving path uses).  Same access-pattern contract as :class:`_Sq8View`."""
-
-    def __init__(self, codes, books: np.ndarray, rotation: np.ndarray | None = None):
-        from duckdb_annsearch_spark.index.pq import decode_pq
-
-        self.codes = codes
-        self.books = np.ascontiguousarray(books, dtype=np.float32)
-        # OPQ: decode applies R^T so the paged reconstruction is
-        # original-space, matching kernels.decode_codes exactly
-        self.rotation = (
-            np.ascontiguousarray(rotation, dtype=np.float32)
-            if rotation is not None
-            else None
-        )
-        self._decode = decode_pq
-        m, _ksub, dsub = self.books.shape
-        self.shape = (codes.shape[0], m * dsub)
+        self.dq = dq
+        self.shape = (codes.shape[0], dim)
         self.dtype = np.float32
 
     def __getitem__(self, idx):
         c = np.asarray(self.codes[idx], dtype=np.uint8)
-        one = c.ndim == 1
-        x = self._decode(c[None, :] if one else c, self.books)
-        if self.rotation is not None:
-            x = x @ self.rotation.T
-        return x[0] if one else x
+        x = kernels.decode_codes(c.reshape(-1, c.shape[-1]), self.dq)
+        return x[0] if c.ndim == 1 else x
 
     def __len__(self):
         return self.shape[0]
+
+
+class _Sq8View(_CodeView):
+    """Pages of a DANN SQ8 trailer."""
+
+
+class _PqView(_CodeView):
+    """Pages of a DANN PQC/OPQC trailer."""
+
+    @property
+    def rotation(self):
+        return self.dq.get("rotation")
 
 
 class _MmapVamana(VamanaGraph):
@@ -228,7 +204,7 @@ def _read_sq8_trailer(fn: str, off: int, n: int, dim: int) -> "_Sq8View | None":
         codes = np.memmap(
             fn, dtype=np.uint8, mode="r", offset=off + 16 + sdim * 8, shape=(n, dim)
         )
-        return _Sq8View(codes, mins, scales)
+        return _Sq8View(codes, {"mins": mins, "scales": scales}, dim)
     except Exception:
         return None
 
@@ -260,20 +236,53 @@ def _read_pq_trailer(fn: str, off: int, n: int, dim: int) -> "_PqView | None":
         need = off + 24 + rot_bytes + books_bytes + qlen
         if m * dsub != dim or qlen != n * m or size < need:
             return None
-        rotation = None
+        dq = {}
         boff = off + 24
         if rot_bytes:
-            rotation = np.fromfile(
+            dq["rotation"] = np.fromfile(
                 fn, dtype="<f4", count=dim * dim, offset=boff
             ).reshape(dim, dim)
             boff += rot_bytes
         books = np.fromfile(fn, dtype="<f4", count=m * ksub * dsub, offset=boff)
+        dq["codebooks"] = books.reshape(m, ksub, dsub)
         codes = np.memmap(
             fn, dtype=np.uint8, mode="r", offset=boff + books_bytes, shape=(n, m)
         )
-        return _PqView(codes, books.reshape(m, ksub, dsub), rotation=rotation)
+        return _PqView(codes, dq, dim)
     except Exception:
         return None
+
+
+def _graph_side(path: str) -> tuple[dict, dict | None]:
+    """(the artifact's ``_graph_meta.json``, the codes' descriptor it names
+    — ``quant.load``; None when unquantized)."""
+    fn = os.path.join(path, "_graph_meta.json")
+    if not os.path.exists(fn):
+        return {}, None
+    with open(fn) as f:
+        side = json.load(f)
+    return side, quant.load(path, side)
+
+
+def _label_vectors(t, order, dq: dict | None) -> tuple[np.ndarray | None, np.ndarray]:
+    """(codes, vectors) of a just-read table in label order.  A quantized
+    artifact's vectors are its codes decoded by ``kernels.decode_codes`` —
+    one decoder, so the parquet, mmap-view and Spark probe paths stay
+    bit-identical; codes is None otherwise (and on zero rows)."""
+    if not len(order):
+        return None, np.zeros((0, 0), dtype=np.float32)
+    if dq is None or "codes" not in t.column_names:
+        return None, _vector_matrix(t.column("vector"))[order]
+    codes_un = t.column("codes").to_pylist()
+    codes = np.stack([np.frombuffer(codes_un[j], dtype=np.uint8) for j in order])
+    return codes, kernels.decode_codes(codes, dq)
+
+
+def _dann_trailer(dq: dict | None, codes: np.ndarray | None) -> dict:
+    """``write_dann`` keyword for a coded block: the SQ8 or PQC trailer."""
+    if codes is None:
+        return {}
+    return {"pq" if "codebooks" in dq else "sq8": {**dq, "codes": codes}}
 
 
 def _load_graph(path: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndarray]:
@@ -283,13 +292,10 @@ def _load_graph(path: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndarray]:
     materialized — identical values (quantized artifacts store dequantized
     vectors in the binary), bounded worker RAM at any graph size.
     ``mmap=False`` forces the in-RAM parquet load.
-    Quantized parquet artifacts (SQ8 codes + per-dim min/scale in the
-    sidecar) are dequantized on load, so searches see the same approximated
-    values the reference computes on the fly
+    Quantized parquet artifacts (codes + the descriptor named in
+    ``_graph_meta.json``) are decoded on load, so searches see the same
+    approximated values the reference computes on the fly
     (``rust_lib/src/provider.rs:161-210``)."""
-    import json
-    import os
-
     import pyarrow.parquet as pq
 
     if mmap:
@@ -307,24 +313,8 @@ def _load_graph(path: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndarray]:
 
     t = pq.read_table(path)  # UNSORTED read + numpy gather (_argsorted_labels)
     _, order = _argsorted_labels(t, "label")
-    side = {}
-    sidecar = os.path.join(path, "_graph_meta.json")
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            side = json.load(f)
-    if "sq8_mins" in side and "codes" in t.column_names:
-        # shared decoder (kernels.decode_codes) — the parquet, mmap-view,
-        # and Spark probe paths must stay bit-identical
-        codes_un = t.column("codes").to_pylist()
-        vectors = kernels.decode_codes(
-            [codes_un[j] for j in order],
-            {
-                "mins": np.asarray(side["sq8_mins"], dtype=np.float32),
-                "scales": np.asarray(side["sq8_scales"], dtype=np.float32),
-            },
-        )
-    else:
-        vectors = _vector_matrix(t.column("vector"))[order]
+    side, dq = _graph_side(path)
+    _, vectors = _label_vectors(t, order, dq)
     nbs = _split_list_column(t.column("neighbors"), np.int64)
     neighbors = [nbs[j][nbs[j] != NO_NEIGHBOR] for j in order]
     row_ids = t.column("row_id").to_numpy(zero_copy_only=False).astype(np.int64)[
@@ -350,74 +340,19 @@ def write_shard_binary(shard_dir: str, metric: str, max_degree: int, build_L: in
     fs); callers treat failures as 'no sidecar' and the loader falls back
     to the parquet path.
 
-    Quantized shards (parent sidecar carries sq8 stats or the pq flag +
-    shard parquet a ``codes`` column) write the f32 block DECODED plus the
-    matching quantization trailer (SQ8 or PQC — engine extensions past the
-    reference's v2 layout), so both mmap serve modes see exactly the
-    values the parquet load path decodes."""
-    import json
-    import os
-
+    Quantized shards (the parent sidecar names the quantization, the
+    shard parquet carries a ``codes`` column) write the f32 block DECODED
+    plus the matching quantization trailer (SQ8 or PQC — engine extensions
+    past the reference's v2 layout), so both mmap serve modes see exactly
+    the values the parquet load path decodes."""
     import pyarrow.parquet as pq
 
     from duckdb_annsearch_spark.index.dann_format import write_dann
 
-    sq8_stats = None
-    pq_books = pq_rotation = None
-    parent_dir = os.path.dirname(shard_dir)
-    parent_meta = os.path.join(parent_dir, "_graph_meta.json")
-    if os.path.exists(parent_meta):
-        with open(parent_meta) as f:
-            side = json.load(f)
-        if "sq8_mins" in side:
-            sq8_stats = (
-                np.asarray(side["sq8_mins"], dtype=np.float32),
-                np.asarray(side["sq8_scales"], dtype=np.float32),
-            )
-        elif side.get("pq_m"):
-            from duckdb_annsearch_spark.index.pq import load_codebooks, load_rotation
-
-            pq_books = load_codebooks(parent_dir)
-            if side.get("opq"):
-                pq_rotation = load_rotation(parent_dir)
-
+    _, dq = _graph_side(os.path.dirname(shard_dir))
     t = pq.read_table(shard_dir)  # UNSORTED read + numpy gather (_argsorted_labels)
     glabels, order = _argsorted_labels(t, "label")
-    sq8 = pq_trailer = None
-    if sq8_stats is not None and "codes" in t.column_names:
-        mins, scales = sq8_stats
-        if len(glabels):
-            codes_un = t.column("codes").to_pylist()
-            codes = np.stack(
-                [np.frombuffer(codes_un[j], dtype=np.uint8) for j in order]
-            )
-            # ONE dequantization implementation (kernels.decode_codes) —
-            # the parquet, mmap-view, and Spark probe paths must stay
-            # bit-identical, so none of them hand-rolls the formula
-            vectors = kernels.decode_codes(codes, {"mins": mins, "scales": scales})
-        else:
-            codes = np.zeros((0, len(mins)), dtype=np.uint8)
-            vectors = np.zeros((0, len(mins)), dtype=np.float32)
-        sq8 = {"mins": mins, "scales": scales, "codes": codes}
-    elif pq_books is not None and "codes" in t.column_names:
-        m, _ksub, dsub = pq_books.shape
-        dq = {"codebooks": pq_books}
-        if pq_rotation is not None:
-            dq["rotation"] = pq_rotation
-        if len(glabels):
-            codes_un = t.column("codes").to_pylist()
-            codes = np.stack(
-                [np.frombuffer(codes_un[j], dtype=np.uint8) for j in order]
-            )
-            vectors = kernels.decode_codes(codes, dq)
-        else:
-            codes = np.zeros((0, m), dtype=np.uint8)
-            vectors = np.zeros((0, m * dsub), dtype=np.float32)
-        pq_trailer = {"codebooks": pq_books, "codes": codes}
-        if pq_rotation is not None:
-            pq_trailer["rotation"] = pq_rotation
-    else:
-        vectors = _vector_matrix(t.column("vector"))[order]
+    codes, vectors = _label_vectors(t, order, dq)
     row_ids = t.column("row_id").to_numpy(zero_copy_only=False).astype(np.int64)[
         order
     ]
@@ -449,8 +384,7 @@ def write_shard_binary(shard_dir: str, metric: str, max_degree: int, build_L: in
         metric=metric,
         max_degree=max_degree,
         build_complexity=build_L,
-        sq8=sq8,
-        pq=pq_trailer,
+        **_dann_trailer(dq, codes),
     )
     row_ids.astype("<i8").tofile(os.path.join(shard_dir, "_row_ids.bin"))
 
@@ -473,49 +407,17 @@ def _load_shard(shard_dir: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndar
         ):
             return _mmap_graph(shard_dir)
 
-    import json
-
-    side = {}
-    sidecar = os.path.join(os.path.dirname(shard_dir), "_graph_meta.json")
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            side = json.load(f)
-    metric = side.get("metric", "l2")
-
-    dq = None
-    if "sq8_mins" in side:
-        dq = {
-            "mins": np.asarray(side["sq8_mins"], dtype=np.float32),
-            "scales": np.asarray(side["sq8_scales"], dtype=np.float32),
-        }
-        empty_dim = len(dq["mins"])
-    elif side.get("pq_m"):
-        from duckdb_annsearch_spark.index.pq import load_codebooks, load_rotation
-
-        books = load_codebooks(os.path.dirname(shard_dir))
-        dq = {"codebooks": books}
-        if side.get("opq"):
-            dq["rotation"] = load_rotation(os.path.dirname(shard_dir))
-        empty_dim = books.shape[0] * books.shape[2]
-    if dq is not None:
-        # quantized shard: read ONLY the codes (4-32x less IO than the f32
-        # vector column — parquet column pruning) and decode with the
-        # index-global stats/codebooks, matching the reference's on-the-fly
-        # dequantization (rust_lib/src/provider.rs:161-210)
-        t = pq.read_table(
-            shard_dir, columns=["label", "row_id", "neighbors", "entry", "codes"]
-        )  # UNSORTED read + numpy gather (_argsorted_labels)
-        glabels, order = _argsorted_labels(t, "label")
-        if len(t):
-            # shared decoder — see the note at the sidecar load above
-            codes_un = t.column("codes").to_pylist()
-            vectors = kernels.decode_codes([codes_un[j] for j in order], dq)
-        else:
-            vectors = np.zeros((0, empty_dim), dtype=np.float32)
-    else:
-        t = pq.read_table(shard_dir)
-        glabels, order = _argsorted_labels(t, "label")
-        vectors = _vector_matrix(t.column("vector"))[order]
+    side, dq = _graph_side(os.path.dirname(shard_dir))
+    # a quantized shard reads ONLY the codes (4-32x less IO than the f32
+    # vector column — parquet column pruning) and decodes them with the
+    # index-global stats/codebooks, matching the reference's on-the-fly
+    # dequantization (rust_lib/src/provider.rs:161-210)
+    t = pq.read_table(
+        shard_dir,
+        columns=None if dq is None else ["label", "row_id", "neighbors", "entry", "codes"],
+    )  # UNSORTED read + numpy gather (_argsorted_labels)
+    glabels, order = _argsorted_labels(t, "label")
+    _, vectors = _label_vectors(t, order, dq)
     row_ids = t.column("row_id").to_numpy(zero_copy_only=False).astype(np.int64)[
         order
     ]
@@ -525,7 +427,7 @@ def _load_shard(shard_dir: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndar
         int(t.column("entry").to_pylist()[int(order[0])]) if len(glabels) else 0
     )
     ep = int(np.searchsorted(glabels, entry_global))
-    return VamanaGraph(vectors, neighbors, ep, metric, row_ids), row_ids
+    return VamanaGraph(vectors, neighbors, ep, side.get("metric", "l2"), row_ids), row_ids
 
 
 def _beam_hits(g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted) -> pd.DataFrame:
@@ -558,13 +460,7 @@ class GraphIndex(BaseIndex):
         vector_col: str,
     ) -> "GraphIndex":
         p = meta.params
-        if str(p.get("quantization", "")).lower() == "pq":
-            raise ValueError(
-                "quantization='pq' on a graph requires the sharded build "
-                "(streaming_build(shards=N) or a table above the driver-"
-                "build row cap); the driver-built single graph quantizes "
-                "with 'sq8'"
-            )
+        quant.validate(p, "graph", meta.metric)
         max_degree = int(p.get("max_degree", p.get("hnsw_m", DEFAULT_MAX_DEGREE)))
         build_L = int(p.get("build_complexity", DEFAULT_BUILD_COMPLEXITY))
         alpha = float(p.get("alpha", DEFAULT_ALPHA))
@@ -582,17 +478,11 @@ class GraphIndex(BaseIndex):
             vectors, meta.metric, max_degree, build_L, alpha,
         )
         g = VamanaGraph(vectors, nbrs, entry, meta.metric)
-        if p.get("quantization") == "sq8":
-            # per-dim min/scale + u8 codes (diskann_quantization.test:24-90);
-            # full precision kept alongside (provider.rs:25-31)
-            mins = vectors.min(axis=0) if len(vectors) else np.zeros(meta.dim)
-            maxs = vectors.max(axis=0) if len(vectors) else np.ones(meta.dim)
-            scales = np.maximum(maxs - mins, 1e-12).astype(np.float32)
-            mins = mins.astype(np.float32)
-            meta.quantized = True
-            meta.extra["sq8_mins"] = mins.tolist()
-            meta.extra["sq8_scales"] = scales.tolist()
-        cls._write_artifact(catalog, meta, g, row_ids, max_degree)
+        # SQ8, the one single-graph quantizer (quant.validate): per-dim
+        # min/scale + u8 codes (diskann_quantization.test:24-90), full
+        # precision kept alongside (provider.rs:25-31)
+        dq = quant.fit_sq(vectors, meta.dim) if p.get("quantization") else None
+        cls._write_artifact(catalog, meta, g, row_ids, max_degree, dq)
         meta.extra["entry_point"] = g.entry_point
         meta.num_vectors = int(vectors.shape[0])
         catalog.save(meta)
@@ -605,10 +495,10 @@ class GraphIndex(BaseIndex):
         g: VamanaGraph,
         row_ids: np.ndarray,
         max_degree: int,
+        dq: dict | None = None,
     ) -> None:
         import pyarrow as pa
         import pyarrow.parquet as pq
-        import os
 
         n = g.vectors.shape[0]
         if n:
@@ -631,16 +521,11 @@ class GraphIndex(BaseIndex):
                 type=pa.list_(pa.int32()),
             ),
         }
-        side = {"entry_point": g.entry_point, "metric": meta.metric}
-        if meta.quantized:
-            mins = np.asarray(meta.extra["sq8_mins"], dtype=np.float32)
-            scales = np.asarray(meta.extra["sq8_scales"], dtype=np.float32)
-            q = np.clip(
-                np.rint((g.vectors - mins) / scales * 255.0), 0, 255
-            ).astype(np.uint8)
-            cols["codes"] = pa.array([q[i].tobytes() for i in range(n)], type=pa.binary())
-            side["sq8_mins"] = mins.tolist()
-            side["sq8_scales"] = scales.tolist()
+        codes = None if dq is None else quant.encode(g.vectors, dq)
+        if codes is not None:
+            cols["codes"] = pa.array(
+                [codes[i].tobytes() for i in range(n)], type=pa.binary()
+            )
         table = pa.table(cols).replace_schema_metadata(
             {"entry_point": str(g.entry_point), "metric": meta.metric}
         )
@@ -651,8 +536,8 @@ class GraphIndex(BaseIndex):
         for f in os.listdir(path):
             os.remove(os.path.join(path, f))
         pq.write_table(table, os.path.join(path, "graph.parquet"))
-        import json
-
+        side = {"entry_point": g.entry_point, "metric": meta.metric}
+        side.update(quant.save(path, meta, dq))
         with open(os.path.join(path, "_graph_meta.json"), "w") as f:
             json.dump(side, f)
 
@@ -660,25 +545,14 @@ class GraphIndex(BaseIndex):
         # (_mmap_graph) pages vectors/adjacency straight off this file
         # instead of materializing the graph per worker — the reference
         # serves .diskann the same way (rust_lib/src/disk_provider.rs:182-332).
-        # Quantized indexes store the DEQUANTIZED values so mmap search sees
+        # Quantized indexes store the DECODED values so mmap search sees
         # exactly what the parquet load path computes from the codes.
         if meta.metric in ("l2", "ip"):
             from duckdb_annsearch_spark.index import dann_format
 
-            if meta.quantized:
-                mins = np.asarray(meta.extra["sq8_mins"], dtype=np.float32)
-                scales = np.asarray(meta.extra["sq8_scales"], dtype=np.float32)
-                q8 = np.clip(
-                    np.rint((g.vectors - mins) / scales * 255.0), 0, 255
-                ).astype(np.uint8)
-                vec_block = (q8.astype(np.float32) / 255.0 * scales + mins)
-                sq8 = {"mins": mins, "scales": scales, "codes": q8}
-            else:
-                vec_block = g.vectors
-                sq8 = None
             dann_format.write_dann(
                 os.path.join(path, "_graph.diskann"),
-                vec_block,
+                g.vectors if codes is None else kernels.decode_codes(codes, dq),
                 [padded[i][padded[i] != NO_NEIGHBOR] for i in range(n)],
                 [g.entry_point] if n else [0],
                 metric=meta.metric,
@@ -686,7 +560,7 @@ class GraphIndex(BaseIndex):
                 build_complexity=int(
                     meta.params.get("build_complexity", DEFAULT_BUILD_COMPLEXITY)
                 ),
-                sq8=sq8,
+                **_dann_trailer(dq, codes),
             )
             row_ids.astype("<i8").tofile(os.path.join(path, "_row_ids.bin"))
 

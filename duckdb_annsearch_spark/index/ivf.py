@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
-from duckdb_annsearch_spark.index import kernels, scan
+from duckdb_annsearch_spark.index import kernels, quant, scan
 from duckdb_annsearch_spark.index.base import BaseIndex, with_labels
 
 DEFAULT_NLIST = 100
@@ -538,103 +538,27 @@ class IvfFlatIndex(BaseIndex):
                 assigned, centroids, max_cell, meta.dim, meta.metric
             )
         meta.extra["train_mode"] = train_mode
-        if meta.params.get("quantization") in ("sq4", "sq6", "sq8", "fp16"):
-            from duckdb_annsearch_spark.index.base import (
-                SQ_BITS,
-                add_fp16_codes,
-                add_sq_codes,
-                compute_sq8_stats,
-            )
-
-            quant = meta.params["quantization"]
-            if quant == "fp16":
-                assigned = add_fp16_codes(assigned, meta.dim)
-            else:
-                mins, scales = compute_sq8_stats(art, meta.dim)
-                assigned = add_sq_codes(
-                    assigned, meta.dim, mins, scales, bits=SQ_BITS[quant]
-                )
-                meta.extra["sq8_mins"] = mins
-                meta.extra["sq8_scales"] = scales
-            meta.quantized = True
-            meta.extra["quantization"] = quant
-        pca_mats = None
-        if meta.params.get("quantization") == "pca":
-            # "PCA<dout>,IVF<nlist>,Flat": the same pretransform the flat
-            # path ships (index/pca.py) under an IVF coarse partitioning —
-            # cells store reduced f32 codes, the probe reconstructs via
-            # W^T through the shared decode_codes, coarse assignment and
-            # serving both stay original-space.
-            # DELIBERATE divergence from faiss::index_factory (which wraps
-            # the IVF in the PCA pretransform, so coarse centroids train
-            # and probe in the REDUCED space): keeping coarse assignment
-            # original-space shares the assignment GEMM and cell layout
-            # with every other IVF variant and is never less accurate, but
-            # at partial nprobe the SELECTED cells (hence results) can
-            # differ from FAISS for the same factory string.  Documented
-            # in SURVEY.md next to the factory row.
-            from duckdb_annsearch_spark.index import pca, pq
-
-            dout = int(meta.params["pca_dim"])
-            assigned = assigned.localCheckpoint(eager=False)  # pin labels
-            mean, w = pca.train_pca(pq.stride_sample(assigned, meta.dim), dout)
-            assigned = pca.add_pca_codes(assigned, meta.dim, mean, w)
-            pca_mats = (mean, w)
-            meta.quantized = True
-            meta.extra["quantization"] = "pca"
-            meta.extra["pca_dim"] = dout
-        books = rotation = None
-        if meta.params.get("quantization") == "pq":
-            from duckdb_annsearch_spark.index import pq
-
-            # pin the assignment ONCE: residual_sample's count + sample
-            # collect and the artifact write below would otherwise each
-            # re-execute the full cluster-assign GEMM over every row
-            assigned = assigned.localCheckpoint(eager=False)
-            n_rows = assigned.count()
-            m = pq.pq_m_for(meta.dim, meta.params.get("pq_m"), n=n_rows)
-            # FAISS IVFPQ semantics: codebooks are trained on, and codes
-            # encode, the residual to the assigned coarse centroid — the
-            # codes only have to cover the within-cell distribution
-            res_sample = pq.residual_sample(assigned, meta.dim, centroids, n=n_rows)
-            if meta.params.get("opq"):
-                # "OPQm,IVFn,PQm": the learned rotation composes with
-                # residual coding as codes = encode(R @ (x - c)); decode
-                # applies R^T before the probe adds c back, so serving
-                # stays original-space (training on residuals is the
-                # distribution the codes must cover)
-                from duckdb_annsearch_spark.index.remote import run_remote
-
-                rotation, books = run_remote(None, pq.train_opq, res_sample, m)
-            else:
-                from duckdb_annsearch_spark.index.remote import run_remote
-
-                books = run_remote(None, pq.train_pq, res_sample, m)
-            assigned = pq.add_pq_codes(
-                assigned, meta.dim, books,
-                residual_centroids=centroids, rotation=rotation,
-            )
-            meta.quantized = True
-            meta.extra["quantization"] = "pq"
-            meta.extra["pq_m"] = m
-            meta.extra["pq_residual"] = True
-            if rotation is not None:
-                meta.extra["opq"] = True
-        assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            catalog.data_path(meta.name)
+        # IVFPQ (FAISS semantics): codebooks train on, and codes encode,
+        # the residual to the assigned coarse centroid — the codes only have
+        # to cover the within-cell distribution; OPQ composes as
+        # encode(R @ (x - c)).  "PCA<dout>,IVF<nlist>,Flat" stores reduced
+        # f32 codes in the cells while coarse assignment and serving stay
+        # original-space — a DELIBERATE divergence from
+        # faiss::index_factory (which wraps the IVF in the PCA pretransform,
+        # so coarse centroids train and probe in the REDUCED space):
+        # original-space assignment shares the assignment GEMM and cell
+        # layout with every other IVF variant and is never less accurate,
+        # but at partial nprobe the SELECTED cells (hence results) can
+        # differ from FAISS for the same factory string.  Documented in
+        # SURVEY.md next to the factory row.
+        assigned, dq = quant.quantize(
+            meta, assigned, stats_from=art, centroids=centroids
         )
+        path = catalog.data_path(meta.name)
+        assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
         art.unpersist()
-        if books is not None:
-            from duckdb_annsearch_spark.index import pq
-
-            pq.write_codebooks(catalog.data_path(meta.name), books)
-            if rotation is not None:
-                pq.write_rotation(catalog.data_path(meta.name), rotation)
-        if pca_mats is not None:
-            from duckdb_annsearch_spark.index import pca
-
-            pca.write_pca(catalog.data_path(meta.name), *pca_mats)
-        _write_centroids(catalog.data_path(meta.name), centroids)
+        quant.save(path, meta, dq)
+        _write_centroids(path, centroids)
         meta.extra["nlist"] = int(centroids.shape[0])
         idx = cls(catalog, meta)
         meta.num_vectors = idx.artifact().count()
@@ -656,9 +580,8 @@ class IvfFlatIndex(BaseIndex):
         the codebooks so the probe can add them back per cell (nlist x dim
         f32 in the task closure; small by construction)."""
         dq = super()._dequant_args()
-        if dq is not None and self.meta.extra.get("pq_residual"):
-            dq = dict(dq)
-            dq["residual_centroids"] = self._centroids()
+        if self.meta.extra.get("pq_residual"):
+            return {**dq, "residual_centroids": self._centroids()}
         return dq
 
     def _probe_cells(self, queries: np.ndarray, nprobe: int) -> list[np.ndarray]:

@@ -262,9 +262,11 @@ def decode_codes(bufs, dq: dict) -> np.ndarray:
     One decoder for every quantization: the scalar family
     (``{'mins','scales'[, 'bits': 4|6]}`` — per-dim affine,
     ``rust_lib/src/provider.rs:161-210``; sub-byte codes MSB-first packed),
-    fp16 (``{'fp16': True}`` — raw float16 widened), and PQ
-    (``{'codebooks': (m,256,dsub)}`` — per-subspace centroid gather).  Every
-    probe path then runs the same GEMM on the reconstruction."""
+    fp16 (``{'fp16': True}`` — raw float16 widened), PQ
+    (``{'codebooks': (m,256,dsub)}`` — per-subspace centroid gather), PCA
+    and LSH.  Every probe path then runs the same GEMM on the
+    reconstruction.  The encode side lives in ``quant.encode``, the inverse
+    of this function for every descriptor."""
     codes = _stack_codes(bufs)
     if "codebooks" in dq:
         from duckdb_annsearch_spark.index.pq import decode_pq

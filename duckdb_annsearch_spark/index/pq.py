@@ -16,23 +16,19 @@ GEMM probe every other artifact uses, so the whole serving stack (partition
 probe, query-distributed probe, IVF cell iteration) is shared with SQ8 rather
 than forked.  Memory: ``m`` bytes/vector vs ``4*dim`` raw (e.g. 32x at
 dim=64, m=8) — the quantization whose compression actually matters at 100 TB.
+
+This module holds the PQ/OPQ numerics only (code width, Lloyd training,
+encode/decode of one matrix); sampling, the distributed encode, the
+codebook/rotation sidecars and the descriptor live in ``quant.py`` with
+every other quantizer.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame
-
-from duckdb_annsearch_spark.index import kernels
 
 DEFAULT_PQ_M = 8
 PQ_KSUB = 256  # 8-bit codes: one byte per subspace
-PQ_TRAIN_SAMPLE = 25_000
-CODEBOOK_FILE = "_pq_codebooks.npy"  # "_"-prefix: ignored by Spark + pyarrow
 
 
 # Auto-scaling rule for the default code width, measured on uniform 64-d
@@ -75,57 +71,6 @@ def pq_m_for(dim: int, m: int | None, n: int | None = None) -> int:
             f"pq_m={m} must be a positive divisor of the vector dimension {dim}"
         )
     return m
-
-
-def stride_sample(
-    artifact: DataFrame,
-    dim: int,
-    sample_size: int = PQ_TRAIN_SAMPLE,
-    n: int | None = None,
-) -> np.ndarray:
-    """(n, dim) float32 training sample, deterministic: every ``stride``-th
-    label (the reference's stride sampling, ``src/faiss_index.cpp:237-247``).
-    Bounded driver memory: at most ``sample_size`` rows collect.  Pass ``n``
-    when the caller already counted the artifact (skips a recount job)."""
-    if n is None:
-        n = artifact.count()
-    # ceil keeps the filter itself to <= sample_size matches; the ordered
-    # limit is a belt-and-braces cap that stays deterministic if labels
-    # are sparse (post-delete vacuums renumber, but defend anyway)
-    stride = max(1, -(-n // max(1, sample_size)))
-    rows = (
-        artifact.where((artifact.label % stride) == 0)
-        .select("label", "vector")
-        .orderBy("label")
-        .limit(sample_size)
-        .collect()
-    )
-    return np.asarray([r["vector"] for r in rows], dtype=np.float32).reshape(-1, dim)
-
-
-def residual_sample(
-    assigned: DataFrame,
-    dim: int,
-    centroids: np.ndarray,
-    sample_size: int = PQ_TRAIN_SAMPLE,
-    n: int | None = None,
-) -> np.ndarray:
-    """(n, dim) float32 training sample of RESIDUALS ``x - centroid[cell]``
-    — FAISS IVFPQ trains its codebooks on coarse residuals, not raw
-    vectors (the residual distribution is what the codes must cover)."""
-    if n is None:
-        n = assigned.count()
-    stride = max(1, -(-n // max(1, sample_size)))
-    rows = (
-        assigned.where((assigned.label % stride) == 0)
-        .select("label", "vector", "cluster_id")
-        .orderBy("label")
-        .limit(sample_size)
-        .collect()
-    )
-    x = np.asarray([r["vector"] for r in rows], dtype=np.float32).reshape(-1, dim)
-    cids = np.asarray([r["cluster_id"] for r in rows], dtype=np.int64)
-    return x - centroids[cids]
 
 
 def train_pq(
@@ -255,73 +200,3 @@ def decode_pq(codes: np.ndarray, books: np.ndarray) -> np.ndarray:
     for j in range(m):
         out[:, j * dsub : (j + 1) * dsub] = books[j][codes[:, j]]
     return out
-
-
-def add_pq_codes(
-    artifact: DataFrame,
-    dim: int,
-    books: np.ndarray,
-    residual_centroids: np.ndarray | None = None,
-    rotation: np.ndarray | None = None,
-) -> DataFrame:
-    """Distributed encode: codes column = ``m`` bytes per row (mapInPandas;
-    the codebooks ship in the task closure — m*256*dsub f32, tens of KiB).
-    With ``residual_centroids`` the codes encode ``x - centroid[cluster_id]``
-    (FAISS IVFPQ residual semantics; requires a ``cluster_id`` column).
-    With ``rotation`` (OPQ) the codes encode ``x @ R``; the decoder applies
-    ``R^T`` so serving stays in the original space."""
-    bb = np.ascontiguousarray(books, dtype=np.float32)
-    cent = (
-        np.ascontiguousarray(residual_centroids, dtype=np.float32)
-        if residual_centroids is not None
-        else None
-    )
-    rot = (
-        np.ascontiguousarray(rotation, dtype=np.float32)
-        if rotation is not None
-        else None
-    )
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            x = kernels.stack_vectors(pdf["vector"], dim)
-            if cent is not None:
-                x = x - cent[pdf["cluster_id"].to_numpy()]
-            if rot is not None:
-                x = x @ rot
-            codes = encode_pq(x, bb)
-            pdf = pdf.copy()
-            pdf["codes"] = [codes[i].tobytes() for i in range(codes.shape[0])]
-            yield pdf
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in artifact.schema.fields
-    )
-    return artifact.mapInPandas(encode, schema + ", codes binary")
-
-
-def write_codebooks(artifact_dir: str, books: np.ndarray) -> None:
-    import os
-
-    np.save(os.path.join(artifact_dir, CODEBOOK_FILE), books.astype(np.float32))
-
-
-def load_codebooks(artifact_dir: str) -> np.ndarray:
-    import os
-
-    return np.load(os.path.join(artifact_dir, CODEBOOK_FILE))
-
-
-ROTATION_FILE = "_opq_rotation.npy"  # "_"-prefix: ignored by Spark + pyarrow
-
-
-def write_rotation(artifact_dir: str, rotation: np.ndarray) -> None:
-    import os
-
-    np.save(os.path.join(artifact_dir, ROTATION_FILE), rotation.astype(np.float32))
-
-
-def load_rotation(artifact_dir: str) -> np.ndarray:
-    import os
-
-    return np.load(os.path.join(artifact_dir, ROTATION_FILE))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duckdb_annsearch_spark.catalog import Catalog, IndexMeta
+from duckdb_annsearch_spark.index import quant
 from duckdb_annsearch_spark.index.base import with_labels
 from duckdb_annsearch_spark.index.vamana import (
     DEFAULT_ALPHA,
@@ -92,46 +93,16 @@ def sharded_build(
 
     art = with_labels(df, row_id_col, vector_col)
     n_total: int | None = None  # counted once, shared by PQ sizing + kmeans sampling
-    quant = str(p.get("quantization", "")).lower()
+    quantized = bool(p.get("quantization"))
 
-    def _train_quant() -> tuple:
-        """(sq8_mins, sq8_scales, pq_books, pq_rot) for the index-GLOBAL
-        quantization parameters.  SQ8: per-dim min/scale in one map-only
-        pass — codes from different shards must dequantize to comparable
-        distances for the cross-shard top-k merge, and the reference
-        quantizes per index (rust_lib/src/provider.rs:157-230).  PQ:
-        codebooks on a bounded stride sample, same comparability
-        argument; trained in ONE Spark task, not on the driver — the
-        Lloyd loops hold the driver GIL (index/remote.py)."""
-        if quant == "sq8":
-            from duckdb_annsearch_spark.index.base import compute_sq8_stats
-
-            mins, scales = compute_sq8_stats(art, meta.dim)
-            return mins, scales, None, None
-        if quant == "pq":
-            from duckdb_annsearch_spark.index.pq import (
-                pq_m_for,
-                stride_sample,
-                train_opq,
-                train_pq,
-            )
-            from duckdb_annsearch_spark.index.remote import run_remote
-
-            pq_m = pq_m_for(meta.dim, p.get("pq_m"), n=n_total)
-            if p.get("opq"):
-                # OPQ on the sharded path: one index-global rotation
-                # learned with the codebooks; shards encode x @ R, every
-                # decode applies R^T — cross-shard comparability holds
-                # exactly as for plain PQ
-                rot, books = run_remote(
-                    spark, train_opq, stride_sample(art, meta.dim, n=n_total), pq_m
-                )
-                return None, None, books, rot
-            books = run_remote(
-                spark, train_pq, stride_sample(art, meta.dim, n=n_total), pq_m
-            )
-            return None, None, books, None
-        return None, None, None, None
+    def _train_quant() -> dict | None:
+        """The index-GLOBAL codes descriptor: codes from different shards
+        must decode to comparable distances for the cross-shard top-k
+        merge, and the reference quantizes per index
+        (rust_lib/src/provider.rs:157-230).  OPQ learns one index-global
+        rotation with the codebooks; shards encode x @ R, every decode
+        applies R^T."""
+        return quant.train(meta, art, n=n_total) if quantized else None
 
     def _train_centroids() -> np.ndarray:
         # SPANN-style clustered shards: rows go to their nearest
@@ -156,7 +127,9 @@ def sharded_build(
         return run_remote(spark, _train_kmeans, sample, shards, metric)
 
     centroids = None
-    if quant in ("sq8", "pq") and by == "kmeans":
+    if by == "kmeans":
+        n_total = art.count()
+    if quantized and by == "kmeans":
         # overlap the two independent training phases (r10, guide §2.6):
         # quant stats/codebooks and the shard centroids both derive from
         # `art` alone and ran back to back — fork the quant branch onto a
@@ -166,7 +139,6 @@ def sharded_build(
         # the two branches read the same blocks.
         from concurrent.futures import ThreadPoolExecutor
 
-        n_total = art.count()
         sc = spark.sparkContext
         pool = sc.getLocalProperty("spark.scheduler.pool")
         desc = sc.getLocalProperty("spark.job.description")
@@ -179,11 +151,9 @@ def sharded_build(
         with ThreadPoolExecutor(1) as ex:
             fut = ex.submit(_quant_in_thread)
             centroids = _train_centroids()
-            sq8_mins, sq8_scales, pq_books, pq_rot = fut.result()
+            dq = fut.result()
     else:
-        if quant == "pq" or by == "kmeans":
-            n_total = art.count()
-        sq8_mins, sq8_scales, pq_books, pq_rot = _train_quant()
+        dq = _train_quant()
         if by == "kmeans":
             centroids = _train_centroids()
     if centroids is not None:
@@ -208,11 +178,6 @@ def sharded_build(
     else:
         raise ValueError(f"unknown shard assignment {by!r} (hash | kmeans)")
 
-    q_mins = np.asarray(sq8_mins, dtype=np.float32) if sq8_mins is not None else None
-    q_scales = (
-        np.asarray(sq8_scales, dtype=np.float32) if sq8_scales is not None else None
-    )
-
     def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         sid = int(pdf["shard"].iloc[0])
         pdf = pdf.sort_values("label").reset_index(drop=True)
@@ -233,25 +198,13 @@ def sharded_build(
             ],
             "entry": np.full(len(pdf), int(glabels[g.entry_point]), dtype=np.int32),
         }
-        if q_mins is not None:
-            # per-shard u8 codes under the GLOBAL min/scale — the serving
-            # side dequantizes (code/255)*scale + min (provider.rs:161-210)
-            q = np.clip(
-                np.rint((x - q_mins) / q_scales * 255.0), 0, 255
-            ).astype(np.uint8)
-            cols["codes"] = [q[i].tobytes() for i in range(len(pdf))]
-        elif pq_books is not None:
-            # per-shard PQ codes under the GLOBAL codebooks (tens of KiB,
-            # shipped in the task closure like add_pq_codes); OPQ encodes
-            # the rotated vector — SAME convention as add_pq_codes
-            # (pq.py: codes = encode(x @ R), decode applies R^T)
-            from duckdb_annsearch_spark.index.pq import encode_pq
-
-            q = encode_pq(x @ pq_rot if pq_rot is not None else x, pq_books)
+        if dq is not None:
+            # per-shard codes under the GLOBAL descriptor (shipped in the
+            # task closure, tens of KiB at most)
+            q = quant.encode(x, dq)
             cols["codes"] = [q[i].tobytes() for i in range(len(pdf))]
         return pd.DataFrame(cols)
 
-    quantized = q_mins is not None or pq_books is not None
     out_schema = SHARD_SCHEMA + (", codes binary" if quantized else "")
     built = sharded.groupBy("shard").applyInPandas(build_shard, out_schema)
     path = catalog.data_path(meta.name)
@@ -275,19 +228,10 @@ def sharded_build(
     entries = {int(r["shard"]): int(r["entry"]) for r in shard_rows}
     n = int(sum(r["cnt"] for r in shard_rows))
     side = {"metric": metric, "shards": entries, "entry_point": 0}
-    if sq8_mins is not None:
-        side["sq8_mins"] = sq8_mins
-        side["sq8_scales"] = sq8_scales
-    if pq_books is not None:
-        # codebooks live as one npy in the artifact root (not in the JSON
-        # sidecar — m*256*dsub floats); the sidecar carries only the flag
-        from duckdb_annsearch_spark.index.pq import write_codebooks, write_rotation
-
-        write_codebooks(path, pq_books)
-        side["pq_m"] = int(pq_books.shape[0])
-        if pq_rot is not None:
-            write_rotation(path, pq_rot)
-            side["opq"] = True
+    # codebooks/rotation land as npy files in the artifact root (the shard
+    # sidecar post-pass and every shard load read them from there); the
+    # JSON sidecar carries the described keys only
+    side.update(quant.save(path, meta, dq))
     with open(os.path.join(path, "_graph_meta.json"), "w") as f:
         json.dump(side, f)
 
@@ -325,15 +269,6 @@ def sharded_build(
         # kmeans may collapse to fewer distinct shards than requested
         meta.extra["shards"] = int(centroids.shape[0])
         meta.extra["shard_centroids"] = centroids.tolist()
-    if sq8_mins is not None:
-        meta.quantized = True
-        meta.extra["sq8_mins"] = sq8_mins
-        meta.extra["sq8_scales"] = sq8_scales
-    if pq_books is not None:
-        meta.quantized = True
-        meta.extra["pq_m"] = int(pq_books.shape[0])
-        if pq_rot is not None:
-            meta.extra["opq"] = True
     meta.num_vectors = n
     catalog.save(meta)
     return {"num_vectors": n, "dimension": meta.dim, "shards": meta.extra["shards"]}
@@ -619,25 +554,18 @@ def streaming_build(
     final = locals_df.select("label", "row_id", "vector", "neighbors").unionByName(
         pilot_final
     )
-    side = {"entry_point": entry_global, "metric": metric}
-    persisted_pre_codes = None
-    if p.get("quantization") == "sq8":
-        from duckdb_annsearch_spark.index.base import add_sq8_codes, compute_sq8_stats
-
+    persisted_pre_codes = dq = None
+    if p.get("quantization"):
         # keep a handle on the frame that is actually cached: rebinding
         # `final` to the codes projection would otherwise make the
         # unpersist below a no-op and pin the pre-codes frame forever
         persisted_pre_codes = final.persist()
-        mins, scales = compute_sq8_stats(persisted_pre_codes, dim)
-        final = add_sq8_codes(persisted_pre_codes, dim, mins, scales)
-        meta.quantized = True
-        meta.extra["sq8_mins"] = mins
-        meta.extra["sq8_scales"] = scales
-        side["sq8_mins"] = mins
-        side["sq8_scales"] = scales
+        final, dq = quant.quantize(meta, persisted_pre_codes)
     path = catalog.data_path(meta.name)
     with job_label(spark.sparkContext, f"{meta.name}: patch merge + write"):
         final.write.mode("overwrite").parquet(path)
+    side = {"entry_point": entry_global, "metric": metric}
+    side.update(quant.save(path, meta, dq))
     with open(os.path.join(path, "_graph_meta.json"), "w") as f:
         json.dump(side, f)
 

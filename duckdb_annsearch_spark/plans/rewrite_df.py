@@ -37,7 +37,12 @@ from __future__ import annotations
 
 import re
 
-from duckdb_annsearch_spark.plans.rewrite import TopKMatch
+from duckdb_annsearch_spark.plans.rewrite import (
+    TopKMatch,
+    _children,
+    _cls,
+    _literal_int,
+)
 
 # fn key -> (builder id, metric, required sort direction)
 _DF_MATCHERS = [
@@ -46,24 +51,6 @@ _DF_MATCHERS = [
     ("array_inner_product", "ip", "Descending"),
     ("metric_distance:ip", "ip", "Ascending"),
 ]
-
-
-def _cls(node) -> str:
-    return node.getClass().getSimpleName()
-
-
-def _children(node):
-    ch = node.children()
-    return [ch.apply(i) for i in range(ch.size())]
-
-
-def _literal_int(expr) -> int | None:
-    if _cls(expr) != "Literal":
-        return None
-    try:
-        return int(str(expr.value()))
-    except (TypeError, ValueError):
-        return None
 
 
 def _walk_exprs(expr):

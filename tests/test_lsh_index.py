@@ -1,6 +1,6 @@
 """LSH binary-code index (FAISS IndexLSH, factory "LSH[<nbits>]"): hyperplane
 sign bits, hamming candidate ranking through the ±1-image GEMM, rerank-exact
-serving.  See ``index/lsh.py``."""
+serving.  See ``index/quant.py``."""
 
 import numpy as np
 import pytest
@@ -24,12 +24,12 @@ def test_pm1_gemm_is_hamming():
     """Squared-L2 between the ±1 images must equal exactly 4x the hamming
     distance between the packed codes — the identity the serving path
     relies on."""
-    from duckdb_annsearch_spark.index import kernels, lsh
+    from duckdb_annsearch_spark.index import kernels, quant
 
     rng = np.random.RandomState(1)
     x = rng.randn(64, 10).astype(np.float32)
-    mean, h = lsh.train_lsh(x, 10, 24)
-    codes = lsh.encode_lsh(x, mean, h)
+    mean, h = quant.train_lsh(x, 10, 24)
+    codes = quant.encode_lsh(x, mean, h)
     dec = kernels.decode_codes(codes, {"lsh_mean": mean, "lsh_h": h})
     assert dec.shape == (64, 24) and set(np.unique(dec)) <= {-1.0, 1.0}
     qbits = np.unpackbits(codes, axis=1)[:, :24]

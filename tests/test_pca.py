@@ -1,6 +1,6 @@
 """PCA pretransform (FAISS PCAMatrix, factory prefix "PCA<dout>"): reduced
 f32 codes + W^T reconstruction through the shared decode path, rerank-exact
-serving.  See ``index/pca.py``."""
+serving.  See ``index/quant.py``."""
 
 import numpy as np
 import pytest
@@ -21,7 +21,7 @@ def _exact_topk(rows, q, k):
 
 
 def test_train_pca_orthonormal_and_deterministic():
-    from duckdb_annsearch_spark.index.pca import train_pca
+    from duckdb_annsearch_spark.index.quant import train_pca
 
     rng = np.random.RandomState(7)
     x = rng.randn(500, 12).astype(np.float32)
@@ -40,7 +40,7 @@ def test_pca_decode_is_projection():
     """decode(encode(x)) must equal the orthogonal projection of x onto the
     principal subspace (plus mean) — the best rank-dout reconstruction."""
     from duckdb_annsearch_spark.index import kernels
-    from duckdb_annsearch_spark.index.pca import train_pca
+    from duckdb_annsearch_spark.index.quant import train_pca
 
     rng = np.random.RandomState(3)
     x = rng.randn(200, 10).astype(np.float32)

@@ -298,7 +298,7 @@ def test_opq_over_ivf_factory(engine):
     assert meta.extra.get("pq_residual") is True
     import os
 
-    from duckdb_annsearch_spark.index.pq import ROTATION_FILE
+    from duckdb_annsearch_spark.index.quant import ROTATION_FILE
 
     assert os.path.exists(
         os.path.join(engine.catalog.data_path("opq_ivf"), ROTATION_FILE)
@@ -425,3 +425,21 @@ def test_sharded_build_uses_auto_pq_m(engine, monkeypatch):
         "apm", "apm_g", rows[7][1], 5, oversample=10, rerank=True
     ).collect()
     assert got[0]["id"] == 7
+
+
+@pytest.mark.parametrize("opq", [False, True], ids=["pq", "pq+opq"])
+def test_sharded_pq_graph_search_after_insert(engine, opq):
+    """A sharded PQ/OPQ graph records its quantization, so the delta merge
+    after an insert loads the codebooks instead of guessing SQ8 (it raised
+    KeyError: 'sq8_mins'); the inserted row equal to the query ranks first."""
+    rng = np.random.RandomState(31)
+    n, dim = 600, 16
+    rows = [(i, rng.rand(dim).astype(np.float32).tolist()) for i in range(n)]
+    engine.register_table("spi", make_vectors_df(engine.spark, rows, dim=dim), row_id="id")
+    engine.streaming_build(
+        "spi_g", "spi", shards=3, shard_by="kmeans", quantization="pq", opq=opq
+    )
+    q = rng.rand(dim).astype(np.float32).tolist()
+    engine.insert("spi", make_vectors_df(engine.spark, [(n, q)], dim=dim))
+    got = engine.ann_search("spi", "spi_g", q, k=5).collect()
+    assert got[0]["id"] == n

@@ -150,7 +150,7 @@ def test_sq_family_pack_roundtrip_error_bound(bits, n, dim, seed):
     """For every sub-byte width: packed-code decode stays within half a
     quantization step per dimension, and code width is ceil(dim*bits/8)."""
     from duckdb_annsearch_spark.index import kernels
-    from duckdb_annsearch_spark.index.base import pack_sq_codes
+    from duckdb_annsearch_spark.index.quant import pack_sq_codes
 
     rng = np.random.RandomState(seed)
     x = rng.randn(n, dim).astype(np.float32) * rng.rand() * 10
@@ -178,12 +178,12 @@ def test_lsh_gemm_hamming_identity(n, dim, nbits, seed):
     """Squared-L2 between decoded ±1 images == 4 * hamming(codes) for every
     (n, dim, nbits) — the identity the LSH serving path rides on; and
     transform_queries of a stored row equals its decoded image."""
-    from duckdb_annsearch_spark.index import kernels, lsh
+    from duckdb_annsearch_spark.index import kernels, quant
 
     rng = np.random.RandomState(seed)
     x = rng.randn(n, dim).astype(np.float32)
-    mean, h = lsh.train_lsh(x, dim, nbits)
-    codes = lsh.encode_lsh(x, mean, h)
+    mean, h = quant.train_lsh(x, dim, nbits)
+    codes = quant.encode_lsh(x, mean, h)
     dq = {"lsh_mean": mean, "lsh_h": h}
     dec = kernels.decode_codes(codes, dq)
     bits = np.unpackbits(codes, axis=1)[:, :nbits]
@@ -204,7 +204,7 @@ def test_pca_decode_is_best_rank_dout_reconstruction(n, dim, seed):
     subspace, whose error never exceeds the centered data norm; W rows stay
     orthonormal for every sample shape."""
     from duckdb_annsearch_spark.index import kernels
-    from duckdb_annsearch_spark.index.pca import train_pca
+    from duckdb_annsearch_spark.index.quant import train_pca
 
     rng = np.random.RandomState(seed)
     x = rng.randn(n, dim).astype(np.float32)

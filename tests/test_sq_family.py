@@ -25,7 +25,7 @@ def _exact_topk(rows, q, k):
 
 def test_pack_unpack_roundtrip_property():
     from duckdb_annsearch_spark.index import kernels
-    from duckdb_annsearch_spark.index.base import SQ_BITS, pack_sq_codes
+    from duckdb_annsearch_spark.index.quant import SQ_BITS, pack_sq_codes
 
     rng = np.random.RandomState(0)
     for bits in SQ_BITS.values():
