@@ -44,6 +44,12 @@ class ConcurrentWriteError(RuntimeError):
     root) and retry."""
 
 TOMBSTONE_SCHEMA = T.StructType([T.StructField("row_id", T.LongType(), False)])
+DELTA_SCHEMA = T.StructType(
+    [
+        T.StructField("row_id", T.LongType()),
+        T.StructField("vector", T.ArrayType(T.FloatType())),
+    ]
+)
 
 
 @dataclass
@@ -201,12 +207,14 @@ class Catalog:
 
     # ---- delta (incremental appends, reference D3 ``BoundIndex::Append``) ----
     def delta(self, name: str) -> DataFrame | None:
-        """Unindexed tail appended since the last build/compaction, or None."""
+        """Unindexed tail appended since the last build/compaction, or None.
+        Read with the fixed schema ``add_delta`` writes: no footer-reading
+        job per read."""
         path = self.delta_path(name)
         if os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)
         ):
-            return self.spark.read.parquet(path)
+            return self.spark.read.schema(DELTA_SCHEMA).parquet(path)
         return None
 
     def add_delta(self, name: str, rows: DataFrame) -> int:

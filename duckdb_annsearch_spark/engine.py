@@ -504,9 +504,13 @@ class AnnEngine:
         if isinstance(row_ids, DataFrame):
             ids_df = row_ids.select(F.col(row_ids.columns[0]).alias(t.row_id))
         else:
+            # a driver list is small: broadcast it, or every later plan
+            # over the view shuffles both sides of a sort-merge anti-join
             row_ids = list(row_ids)
-            ids_df = self.spark.createDataFrame(
-                [(int(r),) for r in row_ids], f"{t.row_id} long"
+            ids_df = F.broadcast(
+                self.spark.createDataFrame(
+                    [(int(r),) for r in row_ids], f"{t.row_id} long"
+                )
             )
         t.df = t.df.join(ids_df, on=t.row_id, how="left_anti")
         t.dim_cache.clear()  # df rebound; a later probe must see the new relation
@@ -1123,8 +1127,10 @@ class AnnEngine:
 
         Emits ``k * oversample`` results like the reference
         (``src/ann_search.cpp:118-130`` — the scan drains every fetched
-        result, not just k).  Extra keyword args are per-query search
-        parameters forwarded to the index (e.g. ``nprobe`` for IVF).
+        result, not just k) — cut by one limit-sort to that hit count, so
+        rows drop only when a ``row_id`` repeats in the table.  Extra
+        keyword args are per-query search parameters forwarded to the
+        index (e.g. ``nprobe`` for IVF).
 
         ``rerank=True`` is the quantized-serving recipe as one call (FAISS
         ``Refine``-style): the index's ``k * oversample`` candidates are
@@ -1177,22 +1183,26 @@ class AnnEngine:
             # ONE candidate-search execution (cache hit by plan equality)
             hits = hits.persist()
             capture["candidates"] = hits
-        return self._fetch(t, t.df, idx, hits, query, k if rerank else None, rerank)
+        return self._fetch(
+            t, t.df, idx, hits, query, k if rerank else k * oversample, rerank
+        )
 
-    def _fetch(self, t, base, idx, hits, query, k, rerank) -> DataFrame:
+    def _fetch(self, t, base, idx, hits, query, n, rerank) -> DataFrame:
         """Broadcast row fetch of the index ``hits`` from ``base`` (the
         table, or a filtered view of it): table columns + ``_distance``
-        ascending with a row-key tie-break, cut to ``k`` rows (no cut when
-        ``k`` is None).  ``rerank`` re-scores the fetched rows EXACTLY from
-        their full-precision vectors (JVM-side ``metric_distance``, no
-        extra probe) in place of the index's own, possibly lossy,
-        distance."""
+        ascending with a row-key tie-break, cut to ``n`` rows by one
+        limit-sort (``TakeOrderedAndProject``, no range-partitioned global
+        sort).  Without rerank ``n`` is the hit count, so the cut drops a
+        row only when a ``row_id`` repeats in the table.  ``rerank``
+        re-scores the fetched rows EXACTLY from their full-precision
+        vectors (JVM-side ``metric_distance``, no extra probe) in place of
+        the index's own, possibly lossy, distance."""
         dist = F.col("_distance")
         if rerank:
             dist = metric_distance(
                 F.col(idx.meta.column), [float(x) for x in query], idx.meta.metric
             ).alias("_distance")
-        out = (
+        return (
             base.join(
                 F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
                 on=t.row_id,
@@ -1200,8 +1210,8 @@ class AnnEngine:
             )
             .select(*t.df.columns, dist)
             .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
+            .limit(n)
         )
-        return out if k is None else out.limit(k)
 
     @staticmethod
     def _search_kw(idx, rescored: bool, params: dict) -> dict:

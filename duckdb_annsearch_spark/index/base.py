@@ -188,7 +188,7 @@ class BaseIndex:
             # re-score must see every candidate — a code-distance cut here
             # would reintroduce the loss the caller opted out of
             return combined
-        return kernels.topk_per_query(combined, k)
+        return kernels.topk_per_query(combined, k, nq=len(queries))
 
     def search_batch_df(
         self,

@@ -466,7 +466,11 @@ class GraphIndex(BaseIndex):
         alpha = float(p.get("alpha", DEFAULT_ALPHA))
         art = with_labels(df, row_id_col, vector_col)
         rows = art.orderBy("label").collect()
-        vectors = np.asarray([r["vector"] for r in rows], dtype=np.float32)
+        # (0, dim), not (0,), on an empty relation: the SQ8 encode
+        # broadcasts against per-dimension stats
+        vectors = np.asarray(
+            [r["vector"] for r in rows], dtype=np.float32
+        ).reshape(len(rows), meta.dim)
         row_ids = np.asarray([r["row_id"] for r in rows], dtype=np.int64)
         # build in ONE Spark task, not on the driver: the insert rounds
         # hold the driver GIL and serialize concurrent DDL (index/remote.py)
@@ -707,10 +711,13 @@ class GraphIndex(BaseIndex):
             }
         )
         qdf = self.spark.createDataFrame(qpdf)
-        n_parts = min(len(queries), 32) or 1
+        if len(queries) > 1:
+            # spread the beam searches; a 1-row relation is one partition
+            # already, and repartitioning it only adds a shuffle
+            qdf = qdf.repartition(min(len(queries), 32))
         return (
             self._search_batch_df_impl(
-                qdf.repartition(n_parts), k, "query", "query_idx",
+                qdf, k, "query", "query_idx",
                 search_complexity=search_complexity, **kw,
             )
             .withColumn("query_idx", F.col("query_idx").cast("int"))

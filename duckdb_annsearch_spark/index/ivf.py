@@ -661,7 +661,7 @@ class IvfFlatIndex(BaseIndex):
         partial = art.select("row_id", vcol, "cluster_id").mapInPandas(
             probe, kernels.PROBE_SCHEMA
         )
-        return kernels.topk_per_query(partial, k)
+        return kernels.topk_per_query(partial, k, nq=len(queries))
 
     def _search_batch_df_impl(
         self,

@@ -518,7 +518,7 @@ def probe_partitions(
             yield hits_frame("query_idx", np.int32, pieces)
 
     partial = artifact.select(row_id_col, vector_col).mapInPandas(probe, PROBE_SCHEMA)
-    return topk_per_query(partial, k)
+    return topk_per_query(partial, k, nq=len(queries))
 
 
 def valid_queries(
@@ -553,17 +553,26 @@ def hits_frame(idx_col: str, idx_dtype, pieces: list[tuple]) -> pd.DataFrame:
 
 
 def topk_per_query(
-    hits: DataFrame, k: int, idx_col: str = "query_idx", row_col: str = "row_id"
+    hits: DataFrame,
+    k: int,
+    idx_col: str = "query_idx",
+    row_col: str = "row_id",
+    nq: int | None = None,
 ) -> DataFrame:
     """Exact global top-k per query from partial top-ks, ties by
     ``row_col`` — the one reduce side of every index search.
 
     Only ``nq * k * n_partitions`` candidate rows reach this shuffle — the
     merge of the reference's per-chunk result lists
-    (``src/ann_search.cpp:560-685``)."""
-    w = Window.partitionBy(idx_col).orderBy(
-        F.col("_distance").asc(), F.col(row_col).asc()
-    )
+    (``src/ann_search.cpp:560-685``).  A caller that knows it holds one
+    query (``nq == 1``) gets the same k rows from one limit-sort
+    (``TakeOrderedAndProject``: no per-query ``Exchange`` and window) — the
+    same order and tie-break, so the two keep the same rows, a ``row_col``
+    repeated among the hits included."""
+    order = [F.col("_distance").asc(), F.col(row_col).asc()]
+    if nq == 1:
+        return hits.orderBy(*order).limit(k)
+    w = Window.partitionBy(idx_col).orderBy(*order)
     return (
         hits.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= k)

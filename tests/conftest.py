@@ -1,6 +1,8 @@
+import contextlib
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 
@@ -41,3 +43,17 @@ def make_vectors_df(spark, rows, dim=3, id_col="id", vec_col="embedding"):
     )
     data = [(int(i), [float(x) for x in v] if v is not None else None) for i, v in rows]
     return spark.createDataFrame(data, schema)
+
+
+@contextlib.contextmanager
+def job_count(spark):
+    """Count the Spark jobs submitted inside the block (one job group)."""
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    box = []
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        yield box
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        box.append(len(sc.statusTracker().getJobIdsForGroup(group)))

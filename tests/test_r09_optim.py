@@ -5,12 +5,11 @@ These guard the three mechanisms the r9 optimization round introduced;
 the *results* of every affected operator are separately pinned by the
 oracle selfcheck and the existing operator tests."""
 
-import contextlib
-import uuid
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import job_count
 
 
 def test_bind_evaluates_once_and_matches_inline(spark):
@@ -60,20 +59,6 @@ def test_fan_out_small_fires_only_below_core_count(spark):
     assert fan_out_small(wide) is wide
 
 
-@contextlib.contextmanager
-def _job_count(spark):
-    """Count the Spark jobs submitted inside the block (one job group)."""
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    box = []
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        yield box
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        box.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-
-
 def _small_scans(spark, tmp_path):
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     spark.range(200).selectExpr("id", "cast(id AS string) t").coalesce(1).write.parquet(a)
@@ -96,7 +81,7 @@ def test_fan_out_small_fans_post_shuffle_input_without_a_job(spark, tmp_path):
 
     a, b = _small_scans(spark, tmp_path)
     joined = a.join(b, "id")
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         fanned = fan_out_small(joined)
     assert jobs == [0]
     assert fanned is not joined and _round_robins(fanned) == 1
@@ -125,7 +110,7 @@ def test_fan_out_small_leaves_large_estimates_untouched(spark):
         F.col("id") == F.col("id2"),
     )
     assert estimated_bytes(big) > 1 << 30
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         assert fan_out_small(big) is big
     assert jobs == [0]
 
@@ -143,7 +128,7 @@ def test_dedup_construct_job_budget(spark, sf_dir, query, budget):
     here."""
     import __spark_entry__ as entry
 
-    with _job_count(spark) as jobs:
+    with job_count(spark) as jobs:
         entry.queries()[query](spark, sf_dir)
     assert jobs[0] <= budget
 

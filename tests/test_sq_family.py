@@ -279,3 +279,30 @@ def test_topk_filtered_through_quantized_index_is_exact(engine):
     np.testing.assert_allclose(
         [r["_distance"] for r in got], [dd for _, dd in even[:5]], rtol=1e-5
     )
+
+
+def test_sq8_graph_empty_table_build_and_vacuum(engine):
+    """An SQ8 graph builds over zero rows (the collected vectors keep their
+    (0, dim) shape for the per-dimension encode), and a vacuum after
+    deleting every row of an SQ8 graph rebuilds through the same path."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType()),
+            T.StructField("v", T.ArrayType(T.FloatType())),
+        ]
+    )
+    engine.register_table("eg8", engine.spark.createDataFrame([], schema), row_id="id")
+    engine.create_index("eg8_g", "eg8", "v", engine="diskann", quantization="sq8", dim=4)
+    assert engine.catalog.load("eg8_g").num_vectors == 0
+    assert engine.ann_search("eg8", "eg8_g", [0.0] * 4, k=3).count() == 0
+
+    rows = [(i, [float(i)] * 4) for i in range(12)]
+    engine.register_table("fg8", engine.spark.createDataFrame(rows, schema), row_id="id")
+    engine.create_index("fg8_g", "fg8", "v", engine="diskann", quantization="sq8")
+    engine.delete("fg8", [r[0] for r in rows])
+    engine.vacuum("fg8_g")
+    meta = engine.catalog.load("fg8_g")
+    assert meta.quantized and meta.num_vectors == 0 and meta.num_deleted == 0
+    assert engine.ann_search("fg8", "fg8_g", [5.0] * 4, k=3).count() == 0
