@@ -14,7 +14,17 @@ prefix on a cluster):
 Deletes are tombstones, exactly like the reference's ``deleted_labels_``
 (``src/diskann_index.cpp:363-385``): search compensates by over-fetching and
 anti-joining, ``vacuum`` compacts by rebuilding without deleted rows
-(``src/diskann_index.cpp:701-741``).
+(``src/diskann_index.cpp:701-741``).  The tombstone directory holds distinct
+ids, because each write appends only ids not already tombstoned, so
+``num_deleted`` is the size of that set, as the reference's count is the
+size of ``deleted_labels_``.
+
+The counts the catalog keeps (``num_vectors`` of Flat/IVF builds,
+``num_deleted``, ``extra["delta_rows"]``) come from the parquet footers of
+the files a write just added (``write_parquet``), read on the driver: no
+Spark job re-counts what the engine just wrote.  Every read of a directory
+the engine wrote passes a schema (``read_parquet``), so no read submits a
+schema-inference job either.
 """
 
 from __future__ import annotations
@@ -26,6 +36,8 @@ import time
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -182,28 +194,88 @@ class Catalog:
     def for_table(self, table_name: str) -> list[IndexMeta]:
         return [m for m in self.all() if m.table_name == table_name]
 
+    # ---- engine-written parquet ----
+    def write_parquet(
+        self,
+        df: DataFrame,
+        path: str,
+        mode: str = "append",
+        partition_by: str | None = None,
+    ) -> int:
+        """Write ``df`` to the parquet directory ``path``; returns the rows
+        written, summed on the driver from the footers of the files this
+        write added (pyarrow, no Spark job)."""
+        import pyarrow.parquet as pq
+
+        before = _data_files(path)
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(path)
+        return sum(
+            pq.read_metadata(f).num_rows for f in _data_files(path) - before
+        )
+
+    def read_parquet(self, path: str, schema: T.StructType | None = None) -> DataFrame:
+        """Read a parquet directory the engine wrote, with a known schema:
+        ``schema`` where the caller has the frame it wrote, else the one in
+        the footers (driver-side pyarrow, hive partition columns such as
+        IVF's ``cluster_id`` kept), so Spark submits no schema-inference
+        job."""
+        if schema is None:
+            import pyarrow.dataset as ds
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            schema = from_arrow_schema(
+                ds.dataset(path, format="parquet", partitioning="hive").schema
+            )
+        return self.spark.read.schema(schema).parquet(path)
+
     # ---- tombstones ----
     def tombstones(self, name: str) -> DataFrame:
         path = self.tombstone_path(name)
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(path)
+        if _data_files(path):
+            return self.read_parquet(path, TOMBSTONE_SCHEMA)
         return self.spark.createDataFrame([], TOMBSTONE_SCHEMA)
 
+    def tombstone_ids(self, name: str) -> np.ndarray:
+        """Tombstoned row_ids on the driver (pyarrow, no Spark job)."""
+        import pyarrow.parquet as pq
+
+        path = self.tombstone_path(name)
+        if not _data_files(path):
+            return np.empty(0, dtype=np.int64)
+        ids = pq.read_table(path, columns=["row_id"]).column("row_id")
+        return np.asarray(ids.to_numpy(), dtype=np.int64)
+
     def add_tombstones(self, name: str, row_ids: DataFrame | list[int]) -> int:
+        """Tombstone the ids not already tombstoned; returns ``num_deleted``,
+        the number of distinct tombstoned ids.  A driver list is
+        de-duplicated on the driver and written as one file, a DataFrame
+        through ``distinct()``; both anti-join a broadcast of the existing
+        tombstones, so the count only adds the rows written."""
         meta = self.load(name)
+        path = self.tombstone_path(name)
         if isinstance(row_ids, list):
+            # from pandas: with Arrow on, the rows reach the JVM as Arrow
+            # batches, and the one-partition write needs no Python worker
+            ids = np.unique(np.asarray([int(r) for r in row_ids], dtype=np.int64))
             df = self.spark.createDataFrame(
-                [(int(r),) for r in row_ids], TOMBSTONE_SCHEMA
-            )
+                pd.DataFrame({"row_id": ids}), TOMBSTONE_SCHEMA
+            ).coalesce(1)
         else:
-            df = row_ids.select(F.col(row_ids.columns[0]).cast("long").alias("row_id"))
-        df.write.mode("append").parquet(self.tombstone_path(name))
-        n = self.tombstones(name).distinct().count()
-        meta.num_deleted = n
+            df = (
+                row_ids.select(
+                    F.col(row_ids.columns[0]).cast("long").alias("row_id")
+                )
+                .where(F.col("row_id").isNotNull())
+                .distinct()
+            )
+        if _data_files(path):
+            df = df.join(F.broadcast(self.tombstones(name)), "row_id", "left_anti")
+        meta.num_deleted += self.write_parquet(df, path)
         self.save(meta)
-        return n
+        return meta.num_deleted
 
     # ---- delta (incremental appends, reference D3 ``BoundIndex::Append``) ----
     def delta(self, name: str) -> DataFrame | None:
@@ -211,19 +283,34 @@ class Catalog:
         Read with the fixed schema ``add_delta`` writes: no footer-reading
         job per read."""
         path = self.delta_path(name)
-        if os.path.isdir(path) and any(
-            f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            return self.spark.read.schema(DELTA_SCHEMA).parquet(path)
+        if _data_files(path):
+            return self.read_parquet(path, DELTA_SCHEMA)
         return None
 
     def add_delta(self, name: str, rows: DataFrame) -> int:
         """Append (row_id, vector) rows; returns new delta row count."""
         meta = self.load(name)
-        rows.select(
-            F.col("row_id").cast("long"), F.col("vector").cast("array<float>")
-        ).write.mode("append").parquet(self.delta_path(name))
-        n = self.delta(name).count()
+        n = int(meta.extra.get("delta_rows") or 0) + self.write_parquet(
+            rows.select(
+                F.col("row_id").cast("long"), F.col("vector").cast("array<float>")
+            ),
+            self.delta_path(name),
+        )
         meta.extra["delta_rows"] = n
         self.save(meta)
         return n
+
+
+def _data_files(path: str) -> set[str]:
+    """Parquet data files under ``path``, hive partition directories
+    included; ``_``/``.``-prefixed names (sidecars, ``_temporary``, CRCs)
+    are skipped, as Spark and pyarrow skip them."""
+    out = set()
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out.update(
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        )
+    return out

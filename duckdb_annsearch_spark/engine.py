@@ -527,8 +527,7 @@ class AnnEngine:
 
         path = os.path.join(self.catalog.root, "_staging", f"{name}-{uuid.uuid4().hex}")
         rows.write.mode("overwrite").parquet(path)
-        staged = self.spark.read.parquet(path)
-        return staged, path
+        return self.catalog.read_parquet(path, rows.schema), path
 
     @staticmethod
     def _unstage(path: str) -> None:
@@ -605,7 +604,7 @@ class AnnEngine:
             # the vacuum; serving will name attach_covering as the remedy
             return None
         live_cov = (
-            self.spark.read.parquet(self.catalog.covering_path(meta.name))
+            self.catalog.read_parquet(self.catalog.covering_path(meta.name))
             .join(self.catalog.tombstones(meta.name), "row_id", "left_anti")
             .dropDuplicates(["row_id"])
         )
@@ -662,10 +661,10 @@ class AnnEngine:
                     f"attach_covering({source!r}, {tgt_cov}) first"
                 )
             cov_union = (
-                self.spark.read.parquet(self.catalog.covering_path(target))
+                self.catalog.read_parquet(self.catalog.covering_path(target))
                 .join(self.catalog.tombstones(target), "row_id", "left_anti")
                 .unionByName(
-                    self.spark.read.parquet(self.catalog.covering_path(source))
+                    self.catalog.read_parquet(self.catalog.covering_path(source))
                     .join(
                         self.catalog.tombstones(source), "row_id", "left_anti"
                     )
@@ -905,7 +904,7 @@ class AnnEngine:
         base = self.catalog.data_path(name)
         postings.write.mode("overwrite").parquet(os.path.join(base, "postings"))
         doclens.write.mode("overwrite").parquet(os.path.join(base, "doclens"))
-        dl = self.spark.read.parquet(os.path.join(base, "doclens"))
+        dl = self.catalog.read_parquet(os.path.join(base, "doclens"), doclens.schema)
         agg = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
         meta.extra["n_docs"] = int(agg["n"])
         meta.extra["avgdl"] = float(agg["avgdl"] or 0.0)
@@ -972,8 +971,8 @@ class AnnEngine:
         terms = tokenize_py(query_text or "")
         if fts is not None and terms:
             base = self.catalog.data_path(fts.name)
-            postings = self.spark.read.parquet(os.path.join(base, "postings"))
-            doclens = self.spark.read.parquet(os.path.join(base, "doclens"))
+            postings = self.catalog.read_parquet(os.path.join(base, "postings"))
+            doclens = self.catalog.read_parquet(os.path.join(base, "doclens"))
             scores = bm25_scores(
                 postings, doclens, fts.extra["n_docs"], fts.extra["avgdl"], terms
             )
@@ -1307,10 +1306,7 @@ class AnnEngine:
             ids = np.concatenate([ids, d_ids])
             x = np.concatenate([x, d_x])
         if sig[2]:  # tombstones
-            tomb = pa_pq.read_table(
-                self.catalog.tombstone_path(name), columns=["row_id"]
-            ).column("row_id").to_numpy()
-            keep = ~np.isin(ids, np.asarray(tomb, dtype=np.int64))
+            keep = ~np.isin(ids, self.catalog.tombstone_ids(name))
             ids, x = ids[keep], np.ascontiguousarray(x[keep])
         cov = None
         if cov_sig and idx.meta.extra.get("covering"):

@@ -129,7 +129,7 @@ class BaseIndex:
 
     # ---- artifact access ----
     def artifact(self) -> DataFrame:
-        return self.spark.read.parquet(self.catalog.data_path(self.meta.name))
+        return self.catalog.read_parquet(self.catalog.data_path(self.meta.name))
 
     def live_artifact(self) -> DataFrame:
         """Artifact minus tombstoned rows (reference over-fetch+filter,
@@ -246,8 +246,7 @@ class BaseIndex:
         the closure-side rendering of over-fetch + filter compensation."""
         if self.meta.num_deleted <= 0:
             return np.empty(0, dtype=np.int64)
-        rows = self.catalog.tombstones(self.meta.name).collect()
-        return np.asarray([r["row_id"] for r in rows], dtype=np.int64)
+        return self.catalog.tombstone_ids(self.meta.name)
 
     def _delta_dequant_args(self) -> dict | None:
         """Dequant dict for probing the FULL-PRECISION delta tail.  None for

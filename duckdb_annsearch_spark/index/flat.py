@@ -35,12 +35,10 @@ class FlatIndex(BaseIndex):
     ) -> "FlatIndex":
         path = catalog.data_path(meta.name)
         art, dq = quant.quantize(meta, with_labels(df, row_id_col, vector_col))
-        art.write.mode("overwrite").parquet(path)
+        meta.num_vectors = catalog.write_parquet(art, path, mode="overwrite")
         quant.save(path, meta, dq)
-        idx = cls(catalog, meta)
-        meta.num_vectors = idx.artifact().count()
         catalog.save(meta)
-        return idx
+        return cls(catalog, meta)
 
     def _search_batch_impl(self, queries: list[Sequence[float]], k: int, **kw) -> DataFrame:
         dq = self._dequant_args()

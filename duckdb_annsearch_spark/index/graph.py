@@ -569,7 +569,7 @@ class GraphIndex(BaseIndex):
             row_ids.astype("<i8").tofile(os.path.join(path, "_row_ids.bin"))
 
     def artifact(self) -> DataFrame:
-        return self.spark.read.parquet(self.catalog.data_path(self.meta.name))
+        return self.catalog.read_parquet(self.catalog.data_path(self.meta.name))
 
     # ---- search ----
     def _beam(self) -> int:

@@ -555,15 +555,15 @@ class IvfFlatIndex(BaseIndex):
             meta, assigned, stats_from=art, centroids=centroids
         )
         path = catalog.data_path(meta.name)
-        assigned.write.mode("overwrite").partitionBy("cluster_id").parquet(path)
+        meta.num_vectors = catalog.write_parquet(
+            assigned, path, mode="overwrite", partition_by="cluster_id"
+        )
         art.unpersist()
         quant.save(path, meta, dq)
         _write_centroids(path, centroids)
         meta.extra["nlist"] = int(centroids.shape[0])
-        idx = cls(catalog, meta)
-        meta.num_vectors = idx.artifact().count()
         catalog.save(meta)
-        return idx
+        return cls(catalog, meta)
 
     # ---- search ----
     def _centroids(self) -> np.ndarray:

@@ -220,7 +220,7 @@ def sharded_build(
     # written artifact); grouping on (shard, entry) is equivalent because
     # entry is constant within a shard by construction
     shard_rows = (
-        spark.read.parquet(path)
+        catalog.read_parquet(path)
         .groupBy("shard", "entry")
         .agg(F.count("*").alias("cnt"))
         .collect()

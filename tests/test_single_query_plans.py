@@ -3,6 +3,8 @@ limit-sort (``TakeOrderedAndProject``), not a per-query window behind a
 hash exchange plus a range-partitioned global sort, and the rows stay the
 ones the batch (window) plan picks, ties included."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import types as T
@@ -60,6 +62,17 @@ def test_single_query_plan_and_job_budget(engine):
     _register(engine, x)
     for name, kw, _ in INDEXES:
         engine.create_index(name, "sq", "emb", **kw)
+    # reading an artifact passes its footer schema: no Spark job, also on
+    # an IVF artifact at the 32 cell directories Spark still lists serially
+    engine.create_index(
+        "sq_ivf32", "sq", "emb", engine="faiss", index_type="IVFFlat", ivf_nlist=32
+    )
+    cells = os.listdir(engine.catalog.data_path("sq_ivf32"))
+    assert sum(c.startswith("cluster_id=") for c in cells) == 32
+    for name in ("sq_flat", "sq_ivf32"):
+        with job_count(spark) as jobs:
+            engine.get_index(name).artifact()
+        assert jobs[0] == 0, name
     q = (x[41] + 0.01).tolist()
 
     def search_all(budget):
@@ -77,7 +90,7 @@ def test_single_query_plan_and_job_budget(engine):
             out[name] = rows
         return out
 
-    got = search_all(lambda name: 2 if name == "sq_graph" else 3)
+    got = search_all(lambda name: 2)
     ids, dist = _brute(x, np.arange(N), q, K)
     assert [r["id"] for r in got["sq_flat"]] == ids
     np.testing.assert_allclose(
@@ -90,7 +103,7 @@ def test_single_query_plan_and_job_budget(engine):
     )
     gone = ids[:3]
     engine.delete("sq", gone)
-    got = search_all(lambda name: 5)
+    got = search_all(lambda name: 4)
     live = [i for i in range(N + 1) if i not in gone]
     xs = np.vstack([x, new[None, :]])[live]
     ids, dist = _brute(xs, np.asarray(live), q, K)
