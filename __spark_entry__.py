@@ -711,11 +711,13 @@ def q_ivf_partial_probe(spark, sf_dir):
     )[0]
     # the probed cells hold ~75% of the table — export executor-side
     # (one coalesced write task), never through the driver
+    members = idx.artifact().where(F.col("cluster_id").isin([int(c) for c in cells]))
+    if idx.meta.num_deleted > 0:  # the probe drops tombstoned members too
+        members = members.join(
+            eng.catalog.tombstones("emb_ivf"), "row_id", "left_anti"
+        )
     _export_oracle_ids_spark(
-        IVF_PROBE_MEMBERS,
-        idx.live_artifact()
-        .where(F.col("cluster_id").isin([int(c) for c in cells]))
-        .select(F.col("row_id").alias("vec_id")),
+        IVF_PROBE_MEMBERS, members.select(F.col("row_id").alias("vec_id"))
     )
     hits = eng.ann_search("embeddings", "emb_ivf", q, k=10, nprobe=6)
     # the replay hash is deliberately blind to pruning QUALITY (the oracle

@@ -251,15 +251,22 @@ class Catalog:
     def add_tombstones(self, name: str, row_ids: DataFrame | list[int]) -> int:
         """Tombstone the ids not already tombstoned; returns ``num_deleted``,
         the number of distinct tombstoned ids.  A driver list is
-        de-duplicated on the driver and written as one file, a DataFrame
-        through ``distinct()``; both anti-join a broadcast of the existing
-        tombstones, so the count only adds the rows written."""
+        de-duplicated against the existing tombstones on the driver
+        (``tombstone_ids``, pyarrow) and written as one file, or not at all
+        when nothing is new; a DataFrame goes through ``distinct()`` and an
+        anti-join against a broadcast of the existing tombstones.  Either
+        way the count only adds the rows written."""
         meta = self.load(name)
         path = self.tombstone_path(name)
         if isinstance(row_ids, list):
+            ids = np.setdiff1d(
+                np.asarray([int(r) for r in row_ids], dtype=np.int64),
+                self.tombstone_ids(name),
+            )
+            if not ids.size:
+                return meta.num_deleted
             # from pandas: with Arrow on, the rows reach the JVM as Arrow
             # batches, and the one-partition write needs no Python worker
-            ids = np.unique(np.asarray([int(r) for r in row_ids], dtype=np.int64))
             df = self.spark.createDataFrame(
                 pd.DataFrame({"row_id": ids}), TOMBSTONE_SCHEMA
             ).coalesce(1)
@@ -271,8 +278,10 @@ class Catalog:
                 .where(F.col("row_id").isNotNull())
                 .distinct()
             )
-        if _data_files(path):
-            df = df.join(F.broadcast(self.tombstones(name)), "row_id", "left_anti")
+            if _data_files(path):
+                df = df.join(
+                    F.broadcast(self.tombstones(name)), "row_id", "left_anti"
+                )
         meta.num_deleted += self.write_parquet(df, path)
         self.save(meta)
         return meta.num_deleted

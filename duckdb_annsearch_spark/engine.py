@@ -13,11 +13,13 @@ never the data.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 from collections.abc import Sequence
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -176,11 +178,24 @@ def _normalize_metric(metric: str) -> str:
     raise ValueError(f"Unsupported metric: {metric} (expected L2, IP, or cosine)")
 
 
+# helper columns of the registered view's delete join
+_PART, _DEL_ID, _DEL_UPTO = "__ann_part", "__ann_del_id", "__ann_del_upto"
+
+
 class RegisteredTable:
     def __init__(self, name: str, df: DataFrame, row_id: str):
         self.name = name
-        self.df = df
         self.row_id = row_id
+        # the registered frame, then one frame per insert; ``df`` is their
+        # union minus the deleted rows (``rebind``), the relation every
+        # search reads
+        self.parts = [df]
+        self.df = df
+        # a delete hides the rows of the parts that exist when it runs:
+        # driver-list ids map to that part count, DataFrame deletes carry
+        # it as a column
+        self.deleted_ids: dict[int, int] = {}
+        self.deleted_frames: list[DataFrame] = []
         # column -> validated vector dimension (r10): every create_index /
         # streaming_build on one table paid its own probe job + full
         # dim-consistency scan — a 20-index warm-up re-validated the same
@@ -193,6 +208,66 @@ class RegisteredTable:
 
         self.dim_cache: dict[str, int] = {}
         self.dim_lock = threading.Lock()
+
+    def delete(self, row_ids: Sequence[int] | DataFrame) -> None:
+        upto = len(self.parts)
+        if isinstance(row_ids, DataFrame):
+            self.deleted_frames.append(
+                row_ids.select(
+                    F.col(row_ids.columns[0]).cast("long").alias(_DEL_ID),
+                    F.lit(upto).alias(_DEL_UPTO),
+                )
+            )
+        else:
+            self.deleted_ids.update(dict.fromkeys(map(int, row_ids), upto))
+        self.rebind()
+
+    def rebind(self) -> None:
+        """``df`` = the union of ``parts`` minus the deleted rows, by ONE
+        join however many inserts and deletes came before.  A deleted
+        id hides only the rows of the parts that existed when it was
+        deleted, so a row inserted later with that id is visible, as in
+        the reference's table.  Driver-list ids go in as one pandas frame
+        (Arrow batches into a local relation), broadcast unless a
+        DataFrame delete, of unknown size, is part of the union."""
+        if not (self.deleted_ids or self.deleted_frames):
+            df = functools.reduce(DataFrame.unionByName, self.parts)
+        else:
+            rows = functools.reduce(
+                DataFrame.unionByName,
+                [p.withColumn(_PART, F.lit(i)) for i, p in enumerate(self.parts)],
+            )
+            dels = list(self.deleted_frames)
+            if self.deleted_ids:
+                n = len(self.deleted_ids)
+                dels.append(
+                    rows.sparkSession.createDataFrame(
+                        pd.DataFrame({
+                            _DEL_ID: np.fromiter(self.deleted_ids, np.int64, n),
+                            _DEL_UPTO: np.fromiter(
+                                self.deleted_ids.values(), np.int32, n
+                            ),
+                        }),
+                        f"{_DEL_ID} long, {_DEL_UPTO} int",
+                    )
+                )
+            union = functools.reduce(DataFrame.unionByName, dels)
+            if not self.deleted_frames:
+                union = F.broadcast(union)
+            hidden = (F.col(self.row_id) == F.col(_DEL_ID)) & (
+                F.col(_PART) < F.col(_DEL_UPTO)
+            )
+            # an outer join + null filter, not "left_anti": the optimizer
+            # pushes an anti-join into every part of the union, folds the
+            # part's tag into its build side, and so broadcasts one
+            # filtered copy of the ids per part instead of one for all
+            df = (
+                rows.join(union, hidden, "left")
+                .where(F.col(_DEL_ID).isNull())
+                .drop(_PART, _DEL_ID, _DEL_UPTO)
+            )
+        self.df = df
+        self.dim_cache.clear()  # df rebound: a later probe must see it
 
 
 class AnnEngine:
@@ -473,8 +548,8 @@ class AnnEngine:
         ``rows`` must carry the table's full schema (the reference's INSERT
         grows the table and its indexes together)."""
         t = self.table(table)
-        t.df = t.df.unionByName(rows.select(*t.df.columns))
-        t.dim_cache.clear()  # new rows: dim must be re-validated
+        t.parts.append(rows.select(*t.parts[0].columns))
+        t.rebind()
         for meta in self.catalog.for_table(table):
             if meta.engine == "fts":
                 continue
@@ -499,21 +574,20 @@ class AnnEngine:
         (``src/diskann_index.cpp:363-385``). Both must happen — index paths
         compensate via tombstones, but brute-force paths (cost-gated topk,
         vector_distances, unrewritten SQL) read the relation directly and
-        would otherwise resurrect deleted rows."""
+        would otherwise resurrect deleted rows.
+
+        The relation is every registered or inserted row minus ONE
+        join against every id deleted so far (``RegisteredTable.
+        rebind``), so a later search pays the same one join after any
+        number of deletes.  A delete hides the rows that exist when it
+        runs; a row a later ``insert`` brings with a deleted id is visible
+        in the relation.  (An index hides such a row while its tombstones,
+        which are by id, hold the id; its fetch then returns other rows,
+        never fewer.)"""
         t = self.table(table)
-        if isinstance(row_ids, DataFrame):
-            ids_df = row_ids.select(F.col(row_ids.columns[0]).alias(t.row_id))
-        else:
-            # a driver list is small: broadcast it, or every later plan
-            # over the view shuffles both sides of a sort-merge anti-join
+        if not isinstance(row_ids, DataFrame):
             row_ids = list(row_ids)
-            ids_df = F.broadcast(
-                self.spark.createDataFrame(
-                    [(int(r),) for r in row_ids], f"{t.row_id} long"
-                )
-            )
-        t.df = t.df.join(ids_df, on=t.row_id, how="left_anti")
-        t.dim_cache.clear()  # df rebound; a later probe must see the new relation
+        t.delete(row_ids)
         for meta in self.catalog.for_table(table):
             self.catalog.add_tombstones(meta.name, row_ids)
 
@@ -1186,7 +1260,9 @@ class AnnEngine:
             t, t.df, idx, hits, query, k if rerank else k * oversample, rerank
         )
 
-    def _fetch(self, t, base, idx, hits, query, n, rerank) -> DataFrame:
+    def _fetch(
+        self, t, base, idx, hits, query, n, rerank, batch_k=None
+    ) -> DataFrame:
         """Broadcast row fetch of the index ``hits`` from ``base`` (the
         table, or a filtered view of it): table columns + ``_distance``
         ascending with a row-key tie-break, cut to ``n`` rows by one
@@ -1195,22 +1271,28 @@ class AnnEngine:
         row only when a ``row_id`` repeats in the table.  ``rerank``
         re-scores the fetched rows EXACTLY from their full-precision
         vectors (JVM-side ``metric_distance``, no extra probe) in place of
-        the index's own, possibly lossy, distance."""
+        the index's own, possibly lossy, distance.
+
+        A batch (``batch_k`` set) keeps ``query_idx`` as the leading column
+        and sort key, re-scores against each hit's ``__qvec`` column, and
+        keeps the best ``batch_k`` per query before the cut."""
+        keys = ["query_idx"] if batch_k else []
         dist = F.col("_distance")
         if rerank:
+            qv = F.col("__qvec") if batch_k else [float(x) for x in query]
             dist = metric_distance(
-                F.col(idx.meta.column), [float(x) for x in query], idx.meta.metric
+                F.col(idx.meta.column), qv, idx.meta.metric
             ).alias("_distance")
-        return (
-            base.join(
-                F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
-                on=t.row_id,
-                how="inner",
-            )
-            .select(*t.df.columns, dist)
-            .orderBy(F.col("_distance").asc(), F.col(t.row_id).asc())
-            .limit(n)
-        )
+        rows = base.join(
+            F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
+            on=t.row_id,
+            how="inner",
+        ).select(*keys, *t.df.columns, dist)
+        if rerank and batch_k:
+            rows = topk_per_query(rows, batch_k, row_col=t.row_id)
+        return rows.orderBy(
+            *[F.col(c).asc() for c in (*keys, "_distance", t.row_id)]
+        ).limit(n)
 
     @staticmethod
     def _search_kw(idx, rescored: bool, params: dict) -> dict:
@@ -1310,7 +1392,6 @@ class AnnEngine:
             ids, x = ids[keep], np.ascontiguousarray(x[keep])
         cov = None
         if cov_sig and idx.meta.extra.get("covering"):
-            import pandas as pd
             import pyarrow as pa
 
             # UNSORTED read + numpy argsort permutation, per the pyarrow-16
@@ -1525,9 +1606,17 @@ class AnnEngine:
         """Multi-query batch: ``query_idx INT`` + table columns + ``_distance``
         (``src/ann_search.cpp:202-388``).
 
+        The rows are fetched like :meth:`ann_search`'s: the index hits
+        (at most ``k * oversample`` per query) are broadcast into a join
+        with the table and the result is cut by ONE limit-sort
+        (``TakeOrderedAndProject``) on ``(query_idx, _distance, row_id)``
+        to the hit count, ``nq * k * oversample`` — no range-partitioned
+        global sort.  The cut drops rows only when a ``row_id`` repeats in
+        the table, and then from the highest ``query_idx``.
+
         ``rerank``/``oversample`` follow :meth:`ann_search`: candidates are
-        re-scored exactly per query (broadcast join of the tiny query list,
-        one window per query_idx) and the best ``k`` per query returned.
+        re-scored exactly per query (broadcast join of the tiny query list)
+        and the best ``k`` per query kept, so the cut is ``nq * k``.
 
         ``local=True`` follows :meth:`ann_search`: every query probes the
         driver-cached snapshot (one GEMM for the whole batch) and the
@@ -1560,9 +1649,6 @@ class AnnEngine:
             search_complexity=search_complexity,
             **self._search_kw(idx, rerank, search_params),
         )
-        joined = t.df.join(
-            hits.withColumnRenamed("row_id", t.row_id), on=t.row_id, how="inner"
-        )
         if rerank:
             qdf = self.spark.createDataFrame(
                 [
@@ -1571,18 +1657,9 @@ class AnnEngine:
                 ],
                 "query_idx int, __qvec array<float>",
             )
-            exact = metric_distance(
-                F.col(idx.meta.column), F.col("__qvec"), idx.meta.metric
-            )
-            rescored = joined.join(F.broadcast(qdf), "query_idx").select(
-                "query_idx", *t.df.columns, exact.alias("_distance")
-            )
-            return topk_per_query(rescored, k, row_col=t.row_id).orderBy(
-                F.col("query_idx").asc(), F.col("_distance").asc(), F.col(t.row_id).asc()
-            )
-        return joined.select("query_idx", *t.df.columns, "_distance").orderBy(
-            F.col("query_idx").asc(), F.col("_distance").asc(), F.col(t.row_id).asc()
-        )
+            hits = hits.join(F.broadcast(qdf), "query_idx")
+        n = len(queries) * k * (1 if rerank else oversample)
+        return self._fetch(t, t.df, idx, hits, None, n, rerank, batch_k=k)
 
     def ann_search_table(
         self,

@@ -131,18 +131,10 @@ class BaseIndex:
     def artifact(self) -> DataFrame:
         return self.catalog.read_parquet(self.catalog.data_path(self.meta.name))
 
-    def live_artifact(self) -> DataFrame:
-        """Artifact minus tombstoned rows (reference over-fetch+filter,
-        ``src/diskann_index.cpp:558-592``, expressed as an anti-join)."""
-        art = self.artifact()
-        if self.meta.num_deleted > 0:
-            tomb = self.catalog.tombstones(self.meta.name)
-            art = art.join(F.broadcast(tomb), on="row_id", how="left_anti")
-        return art
-
     def refresh(self) -> None:
         self.meta = self.catalog.load(self.meta.name)
         self.__dict__.pop("_dq", None)
+        self.__dict__.pop("_deleted", None)
 
     def live_rows(self) -> DataFrame:
         """All live (row_id, vector) rows: artifact ∪ delta, minus
@@ -171,9 +163,6 @@ class BaseIndex:
         d = self.catalog.delta(self.meta.name)
         if d is None:
             return hits
-        if self.meta.num_deleted > 0:
-            tomb = self.catalog.tombstones(self.meta.name)
-            d = d.join(F.broadcast(tomb), on="row_id", how="left_anti")
         extra = kernels.probe_partitions(
             d,
             [(i, [float(x) for x in q]) for i, q in enumerate(queries)],
@@ -181,6 +170,7 @@ class BaseIndex:
             self.meta.metric,
             self.meta.dim,
             dequantize=self._delta_dequant_args(),
+            deleted=self._deleted_rowid_array(),
         )
         combined = hits.unionByName(extra)
         if kw.get("merge_k") == 0:
@@ -242,11 +232,21 @@ class BaseIndex:
         raise NotImplementedError
 
     def _deleted_rowid_array(self) -> "np.ndarray":
-        """Tombstoned row_ids as a (small, broadcastable) numpy array —
-        the closure-side rendering of over-fetch + filter compensation."""
-        if self.meta.num_deleted <= 0:
-            return np.empty(0, dtype=np.int64)
-        return self.catalog.tombstone_ids(self.meta.name)
+        """Tombstoned row_ids as a numpy array, read on the driver through
+        pyarrow (no Spark job).  The one tombstone compensation of every
+        serving probe — ``kernels.probe_partitions`` (Flat, the delta
+        tail), the IVF cell probes, ``scan.probe_path_df`` and the graph
+        beams all drop these ids inside their closures: the reference's
+        over-fetch + filter (``src/diskann_index.cpp:558-592``) without an
+        anti-join job.  Read once per index object, so the artifact probe
+        and the delta probe of one search share it."""
+        if "_deleted" not in self.__dict__:
+            self._deleted = (
+                self.catalog.tombstone_ids(self.meta.name)
+                if self.meta.num_deleted > 0
+                else np.empty(0, dtype=np.int64)
+            )
+        return self._deleted
 
     def _delta_dequant_args(self) -> dict | None:
         """Dequant dict for probing the FULL-PRECISION delta tail.  None for

@@ -43,13 +43,14 @@ class FlatIndex(BaseIndex):
     def _search_batch_impl(self, queries: list[Sequence[float]], k: int, **kw) -> DataFrame:
         dq = self._dequant_args()
         return kernels.probe_partitions(
-            self.live_artifact(),
+            self.artifact(),
             [(i, list(q)) for i, q in enumerate(queries)],
             k,
             self.meta.metric,
             self.meta.dim,
             vector_col="codes" if dq else "vector",
             dequantize=dq,
+            deleted=self._deleted_rowid_array(),
         )
 
     def _search_batch_df_impl(

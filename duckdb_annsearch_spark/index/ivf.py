@@ -603,7 +603,8 @@ class IvfFlatIndex(BaseIndex):
             for c in cc:
                 cell_queries.setdefault(int(c), []).append(qi)
 
-        art = self.live_artifact().where(F.col("cluster_id").isin(all_cells))
+        art = self.artifact().where(F.col("cluster_id").isin(all_cells))
+        deleted = self._deleted_rowid_array()
         dim, metric, k_ = self.meta.dim, self.meta.metric, k
         dq = self._dequant_args()
         vcol = "codes" if dq else "vector"
@@ -623,6 +624,8 @@ class IvfFlatIndex(BaseIndex):
             # built once per cell instead of once per (cell, Arrow batch)
             adc_tabs: dict[int, tuple] = {}
             for pdf in batches:
+                if deleted.size:
+                    pdf = pdf[~np.isin(pdf["row_id"].to_numpy(), deleted)]
                 if len(pdf) == 0:
                     continue
                 for c, grp in pdf.groupby("cluster_id"):

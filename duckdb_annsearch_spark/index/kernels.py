@@ -476,15 +476,20 @@ def probe_partitions(
     vector_col: str = "vector",
     row_id_col: str = "row_id",
     dequantize: dict | None = None,
+    deleted: np.ndarray | None = None,
 ) -> DataFrame:
     """Distributed batch brute-force top-k.
 
-    Map side: per Arrow batch, one GEMM for all queries, local top-k per query
-    (bounded memory: ``nq*k`` rows out per batch).  Reduce side:
+    Map side: per Arrow batch, drop the rows whose id is in ``deleted``
+    (the tombstoned row_ids — the reference's over-fetch + filter,
+    ``src/diskann_index.cpp:558-592``, done where the rows are read, so no
+    anti-join job), then one GEMM for all queries and a local top-k per
+    query (bounded memory: ``nq*k`` rows out per batch).  Reduce side:
     :func:`topk_per_query` — only ``nq * k * n_partitions`` rows shuffle,
     never the data.  Returns (query_idx, row_id, _distance) with exactly the
-    global top-k per query, ties broken by row_id.
+    global top-k per query over the live rows, ties broken by row_id.
     """
+    dele = deleted if deleted is not None and deleted.size else None
     qarr = np.asarray([q for _, q in queries], dtype=np.float32)
     qarr = transform_queries(qarr, dequantize)
     qidx = np.asarray([i for i, _ in queries], dtype=np.int32)
@@ -497,6 +502,8 @@ def probe_partitions(
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            if dele is not None:
+                pdf = pdf[~np.isin(pdf[row_id_col].to_numpy(), dele)]
             if len(pdf) == 0:
                 continue
             if use_adc:

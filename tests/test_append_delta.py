@@ -60,6 +60,51 @@ def test_vacuum_folds_delta_in(engine):
     assert res[0]["row_id"] == 10
 
 
+def _ids(df, col="id"):
+    return sorted(r[col] for r in df.collect())
+
+
+def test_reinsert_after_delete_and_vacuum_is_served(engine):
+    """A row inserted with an id deleted before a vacuum is a new row: the
+    table view, the distributed Flat search, its batch and the local
+    snapshot all return it (the index's tombstones died with the vacuum,
+    so the view must not keep hiding the id either)."""
+    _setup(engine)
+    engine.delete("docs", [2])
+    engine.vacuum("idx")
+    engine.insert(
+        "docs", make_vectors_df(engine.spark, [(2, [0.9, 0.1, 0.0])])
+    )
+    assert _ids(engine.table("docs").df) == [1, 2, 3]
+    q = [0.9, 0.1, 0.0]
+    for local in (False, True):
+        rows = engine.ann_search("docs", "idx", q, k=3, local=local).collect()
+        assert [r["id"] for r in rows] == [2, 1, 3], local
+    batch = engine.ann_search_batch("docs", "idx", [q, q], k=3).collect()
+    assert [r["id"] for r in batch] == [2, 1, 3] * 2
+
+
+def test_delete_hides_only_rows_present_when_it_ran(engine):
+    """Each delete hides the rows that exist when it runs, also through
+    later deletes of other ids and DataFrame deletes; an index that still
+    tombstones a re-inserted id leaves it out of its hits, and the fetch
+    still returns k rows."""
+    _setup(engine)
+    engine.delete("docs", [2])
+    engine.insert(
+        "docs", make_vectors_df(engine.spark, [(2, [0.9, 0.1, 0.0])])
+    )
+    engine.delete("docs", [3])
+    assert _ids(engine.table("docs").df) == [1, 2]
+    engine.insert("docs", make_vectors_df(engine.spark, NEW))
+    engine.delete("docs", engine.spark.createDataFrame([(1,)], "x int"))
+    engine.insert(
+        "docs", make_vectors_df(engine.spark, [(1, [1.0, 0.0, 0.0])])
+    )
+    assert _ids(engine.table("docs").df) == [1, 2, 10, 11]
+    rows = engine.ann_search("docs", "idx", [0.9, 0.1, 0.0], k=2).collect()
+    assert [r["id"] for r in rows] == [10, 11]  # 1 and 2 stay tombstoned
+
 def test_gpu_info_stub(engine):
     row = engine.faiss_gpu_info().collect()[0]
     assert row["available"] is False and row["device"].startswith("cpu[")

@@ -1,7 +1,8 @@
 """Write-path counts come from the footers of the files each write adds,
 not from Spark jobs that re-read them.  ``insert`` and ``delete`` submit
 one job per index (the write itself), a tombstone write appends only ids
-not already tombstoned, and the counts keep their meanings:
+not already tombstoned (a list delete of nothing new submits no job), and
+the counts keep their meanings:
 ``num_deleted`` is the number of distinct tombstoned ids, ``delta_rows``
 the delta's row count and ``num_vectors`` the artifact's row count."""
 
@@ -45,13 +46,16 @@ def test_write_path_jobs_and_counts(engine):
     assert jobs[0] == len(INDEXES)
     assert {m.num_deleted for m in _metas(engine).values()} == {2}
 
-    # after a delete: at most the broadcast of the old tombstones + the write
+    # after a delete: the old tombstones are read on the driver, the write
+    # of the new ids is still the only job
     with job_count(spark) as jobs:
         engine.delete("w", [2, 3])
-    assert jobs[0] <= 2 * len(INDEXES)
+    assert jobs[0] == len(INDEXES)
     assert {m.num_deleted for m in _metas(engine).values()} == {3}
 
-    engine.delete("w", [3])  # already tombstoned: nothing new
+    with job_count(spark) as jobs:
+        engine.delete("w", [3])  # already tombstoned: nothing to write
+    assert jobs[0] == 0
     assert {m.num_deleted for m in _metas(engine).values()} == {3}
     engine.delete("w", spark.createDataFrame([(4,), (4,), (3,)], "id long"))
     assert {m.num_deleted for m in _metas(engine).values()} == {4}
