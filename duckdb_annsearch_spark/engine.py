@@ -1009,11 +1009,15 @@ class AnnEngine:
         search_complexity: int | None = None,
     ) -> DataFrame:
         """BM25 + vector + weighted RRF (``src/ann_search.cpp:894-1163``).
-        Output: table columns + _rrf_score, _bm25_rank, _vector_rank.
+        Output: table columns + _rrf_score, _bm25_rank, _vector_rank,
+        ``_rrf_score`` descending.
 
         The fusion joins BM25 doc ids with vector-index row ids, so both
         must live in the registered table's row_id space; mismatches are
-        rejected rather than silently fused wrong."""
+        rejected rather than silently fused wrong.  The at most ``k`` fused
+        ids are fetched like every bounded search (:meth:`_fetch`: broadcast
+        join, one limit-sort to ``k`` rows), so a ``row_id`` repeated in the
+        table drops its lowest-scored rows at that cut."""
         from duckdb_annsearch_spark.operators.fts import bm25_scores, tokenize_py
         from duckdb_annsearch_spark.operators.hybrid import rank_by, rrf_fuse
 
@@ -1060,12 +1064,10 @@ class AnnEngine:
             ).select("row_id", "_bm25_rank")
 
         fused = rrf_fuse(bm25_ranked, vec_ranked, k, bm25_weight, vector_weight)
-        out = t.df.join(
-            F.broadcast(fused.withColumnRenamed("row_id", t.row_id)), on=t.row_id, how="inner"
+        return self._fetch(
+            t.df, t.row_id, fused, k, [],
+            ["_rrf_score", "_bm25_rank", "_vector_rank"], [F.col("_rrf_score").desc()],
         )
-        return out.select(
-            *t.df.columns, "_rrf_score", "_bm25_rank", "_vector_rank"
-        ).orderBy(F.col("_rrf_score").desc(), F.col(t.row_id).asc())
 
     # --------------------------------------------------------------- listing
     def ann_list(self) -> DataFrame:
@@ -1246,10 +1248,9 @@ class AnnEngine:
                     # auto: ineligible (wide table / over cap) or a
                     # concurrent lifecycle op raced the snapshot scan
                     # -> distributed
-        oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
-        hits = idx.search(
-            list(query), k * oversample, search_complexity=search_complexity,
-            **self._search_kw(idx, rerank, search_params),
+        hits, rerank, n = self._probe(
+            idx, query, k, oversample, rerank,
+            search_complexity=search_complexity, **search_params,
         )
         if capture is not None:
             # persist so the audit export and the served result both read
@@ -1257,42 +1258,58 @@ class AnnEngine:
             hits = hits.persist()
             capture["candidates"] = hits
         return self._fetch(
-            t, t.df, idx, hits, query, k if rerank else k * oversample, rerank
+            t.df, t.row_id, hits, n, [],
+            [self._distance(idx, rerank, [float(x) for x in query])], ["_distance"],
         )
 
-    def _fetch(
-        self, t, base, idx, hits, query, n, rerank, batch_k=None
-    ) -> DataFrame:
-        """Broadcast row fetch of the index ``hits`` from ``base`` (the
-        table, or a filtered view of it): table columns + ``_distance``
-        ascending with a row-key tie-break, cut to ``n`` rows by one
-        limit-sort (``TakeOrderedAndProject``, no range-partitioned global
-        sort).  Without rerank ``n`` is the hit count, so the cut drops a
-        row only when a ``row_id`` repeats in the table.  ``rerank``
-        re-scores the fetched rows EXACTLY from their full-precision
-        vectors (JVM-side ``metric_distance``, no extra probe) in place of
-        the index's own, possibly lossy, distance.
+    @staticmethod
+    def _fetch(base, key, hits, n, lead, scores, order, per_query_k=None):
+        """The one join from index hits to table rows, and its cut.
 
-        A batch (``batch_k`` set) keeps ``query_idx`` as the leading column
-        and sort key, re-scores against each hit's ``__qvec`` column, and
-        keeps the best ``batch_k`` per query before the cut."""
-        keys = ["query_idx"] if batch_k else []
-        dist = F.col("_distance")
-        if rerank:
-            qv = F.col("__qvec") if batch_k else [float(x) for x in query]
-            dist = metric_distance(
-                F.col(idx.meta.column), qv, idx.meta.metric
-            ).alias("_distance")
+        ``hits`` carries ``row_id`` (matched to ``base``'s ``key`` column)
+        and the hit-side ``lead`` columns.  The result is ``lead`` ++
+        ``base``'s columns ++ ``scores`` (columns over the joined row: the
+        index ``_distance``, an exact re-score, an ordering expression,
+        fusion scores), sorted by ``order`` then ``key``.  ``per_query_k``
+        first keeps the best that many rows by ``_distance`` per
+        ``lead[0]`` value.
+
+        One rule, from the input: with a known hit bound ``n`` the hits are
+        broadcast and one limit-sort (``TakeOrderedAndProject``, no
+        range-partitioned global sort) cuts to ``n`` rows, so a row drops
+        only when ``key`` repeats in ``base``; with ``n=None`` the join is
+        sized by the planner and the output is globally sorted."""
+        right = hits.withColumnRenamed("row_id", key)
         rows = base.join(
-            F.broadcast(hits.withColumnRenamed("row_id", t.row_id)),
-            on=t.row_id,
-            how="inner",
-        ).select(*keys, *t.df.columns, dist)
-        if rerank and batch_k:
-            rows = topk_per_query(rows, batch_k, row_col=t.row_id)
-        return rows.orderBy(
-            *[F.col(c).asc() for c in (*keys, "_distance", t.row_id)]
-        ).limit(n)
+            right if n is None else F.broadcast(right), on=key, how="inner"
+        ).select(*lead, *base.columns, *scores)
+        if per_query_k is not None:
+            rows = topk_per_query(rows, per_query_k, idx_col=lead[0], row_col=key)
+        rows = rows.orderBy(*order, F.col(key).asc())
+        return rows if n is None else rows.limit(n)
+
+    @staticmethod
+    def _distance(idx, rerank: bool, query, column: str | None = None):
+        """The fetched rows' ``_distance``: the index's own or, with
+        ``rerank``, an EXACT JVM-side re-score of the full-precision
+        ``column`` (default: the indexed one) against ``query`` (a vector,
+        or a column holding each row's query vector)."""
+        if not rerank:
+            return F.col("_distance")
+        return metric_distance(
+            F.col(column or idx.meta.column), query, idx.meta.metric
+        ).alias("_distance")
+
+    def _probe(self, idx, query, k, oversample=None, rerank=None, **params):
+        """One query's index probe with the rerank defaults resolved:
+        ``(hits, rerank, n)``, ``n`` the fetch's hit bound — ``k`` when the
+        candidates are re-scored, else every one of the ``k * oversample``
+        hits."""
+        oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
+        hits = idx.search(
+            list(query), k * oversample, **self._search_kw(idx, rerank, params)
+        )
+        return hits, rerank, k if rerank else k * oversample
 
     @staticmethod
     def _search_kw(idx, rescored: bool, params: dict) -> dict:
@@ -1658,8 +1675,11 @@ class AnnEngine:
                 "query_idx int, __qvec array<float>",
             )
             hits = hits.join(F.broadcast(qdf), "query_idx")
-        n = len(queries) * k * (1 if rerank else oversample)
-        return self._fetch(t, t.df, idx, hits, None, n, rerank, batch_k=k)
+        return self._fetch(
+            t.df, t.row_id, hits, len(queries) * k * (1 if rerank else oversample),
+            ["query_idx"], [self._distance(idx, rerank, F.col("__qvec"))],
+            ["query_idx", "_distance"], per_query_k=k if rerank else None,
+        )
 
     def ann_search_table(
         self,
@@ -1674,17 +1694,21 @@ class AnnEngine:
     ) -> DataFrame:
         """Table-in/table-out search (``src/ann_search.cpp:390-691``):
         output = input columns ++ base columns (name collisions prefixed
-        ``<table>_``) ++ ``_distance``.
+        ``<table>_``) ++ ``_distance``, ordered by input row then
+        ``_distance``.
 
-        ``rerank``/``oversample`` follow :meth:`ann_search`: the join-back
-        already co-locates each hit with its query vector, so the exact
-        re-score is one JVM expression + a per-query window — no extra
-        probe, shuffle stays k*oversample rows per query.
+        The SURVEY §3.2 translation: tag the input rows, run the
+        query-distributed batch probe (``search_batch_df``), join the hits
+        to their tagged input rows, and fetch the base rows through
+        :meth:`_fetch`.  The query table's size is not known, so the hits
+        carry no bound: the planner sizes the base join and the output is
+        globally sorted.  Scales with both the query count and the base
+        table — no driver materialization.
 
-        Implemented as the SURVEY §3.2 translation: tag input rows, run the
-        distributed batch probe, join hits back to input rows and base rows.
-        Scales with both the query count and the base table — no driver
-        materialization."""
+        ``rerank``/``oversample`` follow :meth:`ann_search`: each hit
+        travels with its query vector, so the exact re-score is one JVM
+        expression plus the per-query top-k of the fetch — no extra
+        probe."""
         t = self.table(table)
         idx = self.get_index(index)
         oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
@@ -1692,74 +1716,42 @@ class AnnEngine:
 
         # the query set never reaches the driver: tag rows, run the
         # query-distributed probe (wrong-dim / null queries yield no hits —
-        # faiss_basic.test:262-269 — enforced inside the probe).
+        # faiss_basic.test:262-269 — enforced inside the probe). Input
+        # columns travel under internal names, so an input row_id or
+        # _distance column cannot make the fetch ambiguous.
         # monotonically_increasing_id depends on partition layout, and the
         # tagged plan feeds TWO consumers (the probe and the join-back): a
         # nondeterministic source recomputed per branch could pair hits with
         # the wrong query rows. The lazy localCheckpoint pins one
         # materialization shared by both branches.
-        tagged = queries_df.withColumn(
-            "__query_idx", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        qnames = [f"__q{i}" for i in range(len(queries_df.columns))]
+        qvec = F.col(qnames[queries_df.columns.index(qcol)]).cast("array<float>")
+        tagged = (
+            queries_df.toDF(*qnames)
+            .withColumn("__query_idx", F.monotonically_increasing_id())
+            .localCheckpoint(eager=False)
+        )
         # volume note for sharded graphs: the exact re-score's uncut
-        # per-shard union (_search_kw) multiplies the join-back input by the
-        # shard count; rerank=False keeps the lean k*oversample-per-query
-        # shuffle when raw code distances are acceptable
+        # per-shard union (_search_kw) multiplies the fetch input by the
+        # shard count; rerank=False keeps k*oversample rows per query
         hits = idx.search_batch_df(
-            tagged.select("__query_idx", F.col(qcol).cast("array<float>").alias("query")),
+            tagged.select("__query_idx", qvec.alias("query")),
             k * oversample,
             idx_col="__query_idx",
             search_complexity=search_complexity,
             **self._search_kw(idx, rerank, {}),
-        ).select(
-            # internal names: a queries_df/base table carrying its own
-            # row_id or _distance column must not make these ambiguous
-            F.col("__query_idx"),
-            F.col("row_id").alias("__hit_row_id"),
-            F.col("_distance").alias("__hit_distance"),
         )
-
-        base = t.df
-        base_cols = []
-        used = set(queries_df.columns) | {"__query_idx", "_distance"}
-        for c in base.columns:
-            out_name = f"{table}_{c}" if c in used else c
-            base_cols.append(F.col(f"__base.{c}").alias(out_name))
-            used.add(out_name)
-
-        joined = (
-            tagged.alias("__q")
-            .join(hits, on="__query_idx", how="inner")
-            .join(
-                base.alias("__base"),
-                F.col("__hit_row_id") == F.col(f"__base.{t.row_id}"),
-                "inner",
-            )
-        )
-        if rerank:
-            exact = metric_distance(
-                F.col(f"__base.{idx.meta.column}"),
-                F.col(f"__q.{qcol}").cast("array<float>"),
-                idx.meta.metric,
-            )
-            rescored = joined.select(
-                F.col("__query_idx"),
-                *[F.col(f"__q.{c}") for c in queries_df.columns],
-                *base_cols,
-                exact.alias("_distance"),
-                F.col(f"__base.{t.row_id}").alias("__rrk_rid"),
-            )
-            return (
-                topk_per_query(rescored, k, idx_col="__query_idx", row_col="__rrk_rid")
-                .orderBy(F.col("__query_idx").asc(), F.col("_distance").asc())
-                .drop("__rrk_rid", "__query_idx")
-            )
-        out = joined.select(
-            *[F.col(f"__q.{c}") for c in queries_df.columns],
-            *base_cols,
-            F.col("__hit_distance").alias("_distance"),
-        ).orderBy(F.col("__query_idx").asc(), F.col("__hit_distance").asc())
-        return out
+        names, used = [], set(queries_df.columns) | {"__query_idx", "_distance"}
+        for c in t.df.columns:
+            names.append(f"{table}_{c}" if c in used else c)
+            used.add(names[-1])
+        rename = dict(zip(t.df.columns, names))
+        return self._fetch(
+            t.df.toDF(*names), rename[t.row_id], tagged.join(hits, "__query_idx"),
+            None, ["__query_idx", *qnames],
+            [self._distance(idx, rerank, qvec, rename[idx.meta.column])],
+            ["__query_idx", "_distance"], per_query_k=k if rerank else None,
+        ).drop("__query_idx").toDF(*queries_df.columns, *names, "_distance")
 
     def vector_distances(
         self, df: DataFrame, query: Sequence[float], metric: str = "l2", vector_col: str | None = None
@@ -1798,7 +1790,7 @@ class AnnEngine:
             # ",RFlat" serving shape; only the candidate set stays
             # approximate, matching the reference's own approximate-index
             # rewrite semantics)
-            return self.ann_search(table, m.name, query, k, rerank=m.quantized).limit(k)
+            return self.ann_search(table, m.name, query, k, rerank=m.quantized)
         if explain is not None:
             explain.update(decision)
         return topk_brute_force(t.df, column, query, k, metric, tie_break=t.row_id)
@@ -1909,12 +1901,21 @@ class AnnEngine:
                 cols = base.columns  # original projection order, pre-join
                 if meta is not None:
                     # index path: probe for k row ids, fetch rows, sort k
-                    # rows — shared with engine.accelerate. Reference IP
-                    # convention: index order = descending raw dot product
-                    # (negated-IP distance ascending)
-                    out = self._serve_index_topk(
-                        meta, base, cols, tie, dist, alias, m.k,
-                        m.query_vector, descending=(m.metric == "ip"),
+                    # rows by the query's own expression. A quantized index
+                    # ranks by lossy code distance, so its probe over-fetches
+                    # like the rerank recipe (only the candidate set stays
+                    # approximate). Reference IP convention: index order =
+                    # descending raw dot product (negated-IP distance
+                    # ascending)
+                    hits = self._probe(
+                        self.get_index(meta.name), m.query_vector, m.k,
+                        rerank=meta.quantized,
+                    )[0].select("row_id")
+                    out = self._fetch(
+                        base, tie, hits, m.k, [],
+                        [dist.alias(alias)],
+                        [F.col(alias).desc_nulls_last() if m.metric == "ip"
+                         else F.col(alias).asc_nulls_last()],
                     )
                 else:
                     # matched but unrewritten: brute force via the Column API
@@ -1992,11 +1993,17 @@ class AnnEngine:
         t = self._tables[m.table]
         dist = _build_probe(m.fn_name, F.col(m.column), m.query_vector)
         alias = m.alias or "__ann_order"
-        # faithful direction: the matcher only admits orderings an index
-        # serves literally (sqrt/squared L2 asc, raw IP desc, neg-IP asc)
-        out = self._serve_index_topk(
-            meta, t.df, t.df.columns, t.row_id, dist, alias, m.k,
-            m.query_vector, descending=(m.fn_name == "array_inner_product"),
+        # the probe and fetch of engine.sql's index path; faithful
+        # direction: the matcher only admits orderings an index serves
+        # literally (sqrt/squared L2 asc, raw IP desc, neg-IP asc)
+        hits = self._probe(
+            self.get_index(meta.name), m.query_vector, m.k, rerank=meta.quantized
+        )[0].select("row_id")
+        out = self._fetch(
+            t.df, t.row_id, hits, m.k, [],
+            [dist.alias(alias)],
+            [F.col(alias).desc_nulls_last() if m.fn_name == "array_inner_product"
+             else F.col(alias).asc_nulls_last()],
         )
         if m.alias is None:
             out = out.select(*t.df.columns)
@@ -2023,40 +2030,6 @@ class AnnEngine:
         from duckdb_annsearch_spark.plans import auto
 
         auto.disable()
-
-    def _serve_index_topk(
-        self, meta, base, cols, tie, dist, alias, k, query_vector, descending
-    ) -> DataFrame:
-        """The rewrite-serving plan both transparent rewrites share
-        (``engine.sql`` and ``engine.accelerate``): index probe for k row
-        ids -> broadcast row fetch -> recompute the ordering expression on
-        the k rows -> sort k rows only. Changes to the probe path (delta
-        compensation, oversample, tombstones) live here once."""
-        idx = self.get_index(meta.name)
-        # a quantized index ranks candidates by lossy code distance — the
-        # ordering expression is recomputed exactly on the fetched rows
-        # below, so the quantized probe over-fetches like the rerank recipe
-        # (only the candidate set stays approximate, as with any index
-        # rewrite)
-        oversample, rescored = self._resolve_rerank(idx, None, meta.quantized)
-        hits = idx.search(
-            list(query_vector), k * oversample, **self._search_kw(idx, rescored, {})
-        )
-        fetched = base.join(
-            F.broadcast(hits.select(F.col("row_id").alias(tie))),
-            on=tie,
-            how="inner",
-        ).select(*cols)
-        order = (
-            F.col(alias).desc_nulls_last()
-            if descending
-            else F.col(alias).asc_nulls_last()
-        )
-        return (
-            fetched.withColumn(alias, dist)
-            .orderBy(order, F.col(tie).asc())
-            .limit(k)
-        )
 
     def explain_sql(self, sql_text: str) -> str:
         """EXPLAIN with the rewrite decision — parity with the reference's
@@ -2109,5 +2082,8 @@ class AnnEngine:
                 list(query), k * overfetch_multiplier + OVERFETCH_BONUS,
                 **self._search_kw(idx, rerank, {}),
             )
-            return self._fetch(t, filtered, idx, hits, query, k, rerank)
+            return self._fetch(
+                filtered, t.row_id, hits, k, [],
+                [self._distance(idx, rerank, [float(x) for x in query])], ["_distance"],
+            )
         return topk_brute_force(filtered, column, query, k, metric, tie_break=t.row_id)

@@ -14,7 +14,8 @@ Parity with ``/root/reference/src/ann_search.cpp:894-1163``:
 
 Spark shape (SURVEY §2.2 S7): two small ranked DataFrames (each at most
 ``*_candidates`` rows) -> full outer join on row_id -> fused-score
-expression -> orderBy desc limit k -> broadcast join back to the base table.
+expression -> orderBy desc limit k -> the engine's bounded row fetch
+(broadcast join back to the base table, one limit-sort to k rows).
 The only large-data work is the BM25 postings filter and the index probe,
 both distributed.
 """

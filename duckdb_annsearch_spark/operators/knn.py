@@ -10,8 +10,8 @@ top-k is complete within its own task).
 
 A right side above ``max_broadcast_rows`` never reaches the driver: the
 join auto-routes to a temp Flat index + the query-distributed artifact
-probe (``AnnEngine.ann_search_table`` shape) — still exact, each task
-streams the artifact for its own slice of left rows.
+probe (``BaseIndex.search_batch_df``) — still exact, each task streams the
+artifact for its own slice of left rows.
 """
 
 from __future__ import annotations
@@ -72,7 +72,8 @@ def _knn_join_indexed(
 ) -> DataFrame:
     """Scale path: temp Flat index on the right side (distributed build, no
     driver materialization) + query-distributed exact probe. Same output
-    contract as the broadcast path.
+    contract as the broadcast path: k rows per left ROW, also when two
+    rows share a ``left_id``.
 
     Artifact lifecycle: with ``engine=None`` the temp workdir is removed at
     process exit (atexit); with ``engine=`` passed, the temp entries THIS
@@ -121,13 +122,20 @@ def _knn_join_indexed(
     if engine is not None:
         _TEMP_ARTIFACTS.setdefault(eng, []).append((tbl, idx))
     out_r = right_id if right_id != left_id else f"r_{right_id}"
-    hits = eng.ann_search_table(
-        left.select(left_id, left_vec), tbl, idx, k=k, query_col=left_vec
-    )
-    # the join-back emits rows unordered; restore the broadcast path's
-    # per-query (distance, id) ascending contract — nq*k rows, tiny sort
+    # one query per left ROW (two rows may share an id); the lazy
+    # localCheckpoint pins the partition-dependent tag for both consumers
+    tagged = left.select(
+        F.col(left_id).alias("__lid"),
+        F.col(left_vec).cast("array<float>").alias("query"),
+        F.monotonically_increasing_id().alias("query_idx"),
+    ).localCheckpoint(eager=False)
+    hits = eng.get_index(idx).search_batch_df(tagged.select("query_idx", "query"), k)
+    # the hits carry the right ids: join back to the tags only, in the
+    # broadcast path's per-query (distance, id) ascending order
     return (
-        hits.select(F.col(left_id), F.col("__rid").alias(out_r), F.col("_distance"))
+        tagged.select("query_idx", "__lid")
+        .join(hits, "query_idx")
+        .select(F.col("__lid").alias(left_id), F.col("row_id").alias(out_r), "_distance")
         .orderBy(F.col(left_id).asc(), F.col("_distance").asc(), F.col(out_r).asc())
     )
 

@@ -122,8 +122,11 @@ def test_knn_join_cap_routes_to_index_and_matches_broadcast(engine):
     spark = engine.spark
     rng = np.random.RandomState(31)
     nl, nr, dim = 20, 50, 6
+    # the last two left rows share a lid with different vectors: each row
+    # is its own query, so the routed probe must not key hits by lid
     left = spark.createDataFrame(
-        [(i, rng.rand(dim).astype("float32").tolist()) for i in range(nl)],
+        [(i, rng.rand(dim).astype("float32").tolist()) for i in range(nl)]
+        + [(nl, rng.rand(dim).astype("float32").tolist()) for _ in range(2)],
         "lid long, v array<float>",
     )
     right = spark.createDataFrame(
@@ -144,6 +147,7 @@ def test_knn_join_cap_routes_to_index_and_matches_broadcast(engine):
             for r in df.collect()
         )
     assert norm(fast) == norm(routed)
+    assert sum(r[0] == nl for r in norm(routed)) == 6  # k per row, not per lid
 
     # temp artifacts are tracked per-engine: a user index sharing the
     # __knn_ prefix survives the next routed call AND explicit cleanup;

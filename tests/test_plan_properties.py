@@ -92,18 +92,49 @@ def test_text_analysis_stays_jvm_side(docs):
         assert marker not in plan, marker
 
 
-def test_ann_row_fetch_is_broadcast_join(engine):
-    """ann_search's row fetch joins k hit rows against the base table —
-    it must plan as a broadcast join (k rows vs the table), never a
-    shuffle of the base table."""
+def _bounded_fetch(engine, entry, q):
+    from duckdb_annsearch_spark.functions.distance import array_distance
+
+    arr = "array(" + ", ".join(f"CAST({x} AS FLOAT)" for x in q) + ")"
+    exp = {}
+    df = {
+        "ann_search": lambda: engine.ann_search("pp", "pp_flat", q, k=5),
+        "ann_search_batch": lambda: engine.ann_search_batch("pp", "pp_flat", [q, q[::-1]], k=5),
+        "topk_filtered": lambda: engine.topk_filtered("pp", F.col("id") > 3, q, k=5),
+        "sql": lambda: engine.sql(
+            f"SELECT * FROM pp ORDER BY array_distance(embedding, {arr}) LIMIT 5",
+            explain=exp,
+        ),
+        "accelerate": lambda: engine.accelerate(
+            engine.table("pp").df.orderBy(array_distance("embedding", q)).limit(5),
+            explain=exp,
+        ),
+        "hybrid_search": lambda: engine.hybrid_search(
+            "pp", "pp_flat", "embedding", "id", q, "", k=5
+        ),
+    }[entry]()
+    assert exp.get("rewritten", entry not in ("sql", "accelerate")), exp
+    return df
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["ann_search", "ann_search_batch", "topk_filtered", "sql", "accelerate", "hybrid_search"],
+)
+def test_bounded_row_fetch_is_broadcast_limit_sort(engine, entry):
+    """Every entry point that knows its hit count fetches rows one way:
+    the hits broadcast into the join with the table (never a shuffle of
+    the base table) and one limit-sort cuts the result (no
+    range-partitioned global sort)."""
     rng = np.random.RandomState(5)
     rows = [(i, rng.rand(4).astype(np.float32).tolist()) for i in range(80)]
     engine.register_table("pp", make_vectors_df(engine.spark, rows, dim=4), row_id="id")
     engine.create_index("pp_flat", "pp", engine="faiss", index_type="Flat")
-    df = engine.ann_search("pp", "pp_flat", rows[0][1], k=5)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan
+    plan = _plan(_bounded_fetch(engine, entry, rows[0][1]))
+    assert "BroadcastHashJoin" in plan, plan
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_decontaminate_benchmark_side_broadcasts(spark, docs):
