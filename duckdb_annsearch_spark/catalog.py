@@ -216,12 +216,19 @@ class Catalog:
             pq.read_metadata(f).num_rows for f in _data_files(path) - before
         )
 
-    def read_parquet(self, path: str, schema: T.StructType | None = None) -> DataFrame:
+    def read_parquet(
+        self,
+        path: str,
+        schema: T.StructType | None = None,
+        parts: list[str] | None = None,
+    ) -> DataFrame:
         """Read a parquet directory the engine wrote, with a known schema:
         ``schema`` where the caller has the frame it wrote, else the one in
         the footers (driver-side pyarrow, hive partition columns such as
         IVF's ``cluster_id`` kept), so Spark submits no schema-inference
-        job."""
+        job.  ``parts`` names hive partition directories under ``path``
+        (``cluster_id=3``): only those that exist are listed and read, with
+        ``path`` as the base path so the partition column is kept."""
         if schema is None:
             import pyarrow.dataset as ds
             from pyspark.sql.pandas.types import from_arrow_schema
@@ -229,7 +236,14 @@ class Catalog:
             schema = from_arrow_schema(
                 ds.dataset(path, format="parquet", partitioning="hive").schema
             )
-        return self.spark.read.schema(schema).parquet(path)
+        reader = self.spark.read.schema(schema)
+        if parts is None:
+            return reader.parquet(path)
+        dirs = [os.path.join(path, p) for p in parts]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        if not dirs:
+            return self.spark.createDataFrame([], schema)
+        return reader.option("basePath", path).parquet(*dirs)
 
     # ---- tombstones ----
     def tombstones(self, name: str) -> DataFrame:

@@ -16,6 +16,7 @@ from __future__ import annotations
 import functools
 import os
 import tempfile
+import time
 from collections.abc import Sequence
 
 import numpy as np
@@ -178,6 +179,13 @@ def _normalize_metric(metric: str) -> str:
     raise ValueError(f"Unsupported metric: {metric} (expected L2, IP, or cosine)")
 
 
+# the most driver-list ids a view hides with literal NOT IN filters
+# before it takes the delete join (RegisteredTable.rebind).  Measured on a
+# 200,000 x 32 table (local[4]): at 1,000 ids a search over the filtered
+# view is as fast as over the join and runs one job fewer; from 4,000 the
+# join is faster, and at 100,000 the literal list (parsed on every rebind,
+# shipped in every task) makes the search about 4x slower.
+_LITERAL_DELETE_MAX_IDS = 1_000
 # helper columns of the registered view's delete join
 _PART, _DEL_ID, _DEL_UPTO = "__ann_part", "__ann_del_id", "__ann_del_upto"
 
@@ -196,6 +204,10 @@ class RegisteredTable:
         # it as a column
         self.deleted_ids: dict[int, int] = {}
         self.deleted_frames: list[DataFrame] = []
+        # when this registration replaced an earlier one of the same name
+        # in this engine (0.0: it did not); an index created before then
+        # may hold rows the view no longer has (``AnnEngine._covered``)
+        self.replaced_at = 0.0
         # column -> validated vector dimension (r10): every create_index /
         # streaming_build on one table paid its own probe job + full
         # dim-consistency scan — a 20-index warm-up re-validated the same
@@ -223,34 +235,51 @@ class RegisteredTable:
         self.rebind()
 
     def rebind(self) -> None:
-        """``df`` = the union of ``parts`` minus the deleted rows, by ONE
-        join however many inserts and deletes came before.  A deleted
-        id hides only the rows of the parts that existed when it was
-        deleted, so a row inserted later with that id is visible, as in
-        the reference's table.  Driver-list ids go in as one pandas frame
-        (Arrow batches into a local relation), broadcast unless a
-        DataFrame delete, of unknown size, is part of the union."""
-        if not (self.deleted_ids or self.deleted_frames):
-            df = functools.reduce(DataFrame.unionByName, self.parts)
-        else:
-            rows = functools.reduce(
-                DataFrame.unionByName,
-                [p.withColumn(_PART, F.lit(i)) for i, p in enumerate(self.parts)],
-            )
-            dels = list(self.deleted_frames)
-            if self.deleted_ids:
-                n = len(self.deleted_ids)
+        """``df`` = the union of ``parts`` minus the deleted rows.  A
+        deleted id hides only the rows of the parts that existed when it
+        was deleted, so a row inserted later with that id is visible, as
+        in the reference's table.
+
+        Up to ``_LITERAL_DELETE_MAX_IDS`` driver-list ids, each part is
+        filtered by a literal ``NOT IN`` of the ids that hide it — an
+        ``InSet``, which runs no job.  Past that count, or once a
+        DataFrame delete (of unknown size) is part of the union, the rows
+        take ONE join against every deleted id, however many inserts and
+        deletes came before; driver-list ids go into it as one pandas
+        frame (Arrow batches into a local relation)."""
+        parts = self.parts
+        dels = list(self.deleted_frames)
+        if self.deleted_ids:
+            n = len(self.deleted_ids)
+            ids = np.fromiter(self.deleted_ids, np.int64, n)
+            upto = np.fromiter(self.deleted_ids.values(), np.int32, n)
+            if not dels and n <= _LITERAL_DELETE_MAX_IDS:
+                key = f"`{self.row_id}`"
+                # one SQL string, not Column.isin: one py4j call for the
+                # whole list, which the optimizer turns into an InSet
+                parts = [
+                    p.where(
+                        f"{key} IS NULL OR {key} NOT IN "
+                        f"({','.join(map(str, ids[upto > i]))})"
+                    )
+                    if (upto > i).any()
+                    else p
+                    for i, p in enumerate(parts)
+                ]
+            else:
                 dels.append(
-                    rows.sparkSession.createDataFrame(
-                        pd.DataFrame({
-                            _DEL_ID: np.fromiter(self.deleted_ids, np.int64, n),
-                            _DEL_UPTO: np.fromiter(
-                                self.deleted_ids.values(), np.int32, n
-                            ),
-                        }),
+                    parts[0].sparkSession.createDataFrame(
+                        pd.DataFrame({_DEL_ID: ids, _DEL_UPTO: upto}),
                         f"{_DEL_ID} long, {_DEL_UPTO} int",
                     )
                 )
+        if not dels:
+            df = functools.reduce(DataFrame.unionByName, parts)
+        else:
+            rows = functools.reduce(
+                DataFrame.unionByName,
+                [p.withColumn(_PART, F.lit(i)) for i, p in enumerate(parts)],
+            )
             union = functools.reduce(DataFrame.unionByName, dels)
             if not self.deleted_frames:
                 union = F.broadcast(union)
@@ -318,7 +347,10 @@ class AnnEngine:
         if row_id is None:
             df = df.withColumn(ROW_ID, F.monotonically_increasing_id())
             row_id = ROW_ID
-        self._tables[name] = RegisteredTable(name, df, row_id)
+        t = RegisteredTable(name, df, row_id)
+        if name in self._tables:
+            t.replaced_at = time.time()
+        self._tables[name] = t
         return df
 
     def table(self, name: str) -> RegisteredTable:
@@ -576,9 +608,11 @@ class AnnEngine:
         vector_distances, unrewritten SQL) read the relation directly and
         would otherwise resurrect deleted rows.
 
-        The relation is every registered or inserted row minus ONE
-        join against every id deleted so far (``RegisteredTable.
-        rebind``), so a later search pays the same one join after any
+        The relation is every registered or inserted row minus the ids
+        deleted so far (``RegisteredTable.rebind``): literal ``NOT IN``
+        filters while the driver-list ids number at most
+        ``_LITERAL_DELETE_MAX_IDS``, else ONE join against every deleted
+        id, so a later search pays no job or the same one join after any
         number of deletes.  A delete hides the rows that exist when it
         runs; a row a later ``insert`` brings with a deleted id is visible
         in the relation.  (An index hides such a row while its tombstones,
@@ -616,11 +650,20 @@ class AnnEngine:
         live = idx.live_rows()  # artifact ∪ delta, minus tombstones
         return self._rebuild(idx.meta, live, self._stage_covering(idx.meta), "vacuum")
 
-    def _rebuild(self, meta, rows: DataFrame, cov_staged: tuple | None, op: str):
+    def _rebuild(
+        self, meta, rows: DataFrame, cov_staged: tuple | None, op: str,
+        merged_tables: list[str] | None = None,
+    ):
         """Rebuild index ``meta`` from (row_id, vector) ``rows`` — the
         vacuum / merge compaction: stage the rows durably, drop the old
         index (its tombstones and delta go with it), build the same index
-        class under fresh metadata, restore the staged covering payload."""
+        class under fresh metadata, restore the staged covering payload.
+        The rebuilt index keeps ``meta``'s creation time and the other
+        tables its rows came from (``merged_tables``, by default
+        ``meta``'s), which decide whether it covers its table
+        (:meth:`_covered`)."""
+        if merged_tables is None:
+            merged_tables = meta.extra.get("merged_tables")
         new_meta = IndexMeta(
             name=meta.name,
             engine=meta.engine,
@@ -630,6 +673,7 @@ class AnnEngine:
             dim=meta.dim,
             metric=meta.metric,
             params=meta.params,
+            created_at=meta.created_at,
         )
         staged, stage_path = self._stage_rows(meta.name, rows)
         self.catalog.drop(meta.name)
@@ -663,6 +707,11 @@ class AnnEngine:
                 f"{stage_path}{cov_note}"
             ) from e
         self._restore_covering(meta, cov_staged)
+        if merged_tables:
+            m2 = self.catalog.load(meta.name)
+            m2.extra["merged_tables"] = merged_tables
+            self.catalog.save(m2)
+            rebuilt = self.get_index(meta.name)
         self._unstage(stage_path)
         return rebuilt
 
@@ -699,7 +748,10 @@ class AnnEngine:
 
     def merge_index(self, target: str, source: str):
         """Merge source index's live vectors into target and rebuild
-        (``src/diskann_index.cpp:655-699``)."""
+        (``src/diskann_index.cpp:655-699``).  A source over another table
+        is recorded in the target's ``merged_tables``: the target then
+        holds rows its own table's view does not, so its searches fetch
+        their rows from the view (:meth:`_covered`)."""
         tgt, src = self.get_index(target), self.get_index(source)
         if tgt.meta.dim != src.meta.dim or tgt.meta.metric != src.meta.metric:
             raise ValueError("cannot merge indexes with different dim/metric")
@@ -748,7 +800,10 @@ class AnnEngine:
             cov_staged = (
                 tgt_cov, *self._stage_rows(target + "-covering", cov_union),
             )
-        return self._rebuild(meta, union, cov_staged, "merge")
+        merged = set(meta.extra.get("merged_tables") or ())
+        merged |= set(src.meta.extra.get("merged_tables") or ())
+        merged |= {src.meta.table_name} - {meta.table_name}
+        return self._rebuild(meta, union, cov_staged, "merge", sorted(merged))
 
     def streaming_build(
         self,
@@ -1151,11 +1206,19 @@ class AnnEngine:
         capture: dict | None = None,
         **search_params,
     ) -> DataFrame:
-        """k-NN + row fetch: all table columns + ``_distance``, ascending.
+        """k-NN with its rows: all table columns + ``_distance``, ascending.
+
+        Where the rows come from: when the table's columns are exactly
+        the row key and the indexed ``array<float>`` column and the index
+        is unquantized (a *covered* search, :meth:`_covered`), the probe
+        returns each hit's raw vector and the result is built from the
+        hits alone — no table scan, no join.  Otherwise the hits are
+        joined to the table's rows (:meth:`_fetch`).
 
         ``capture``: an optional dict the distributed path fills with
         ``capture["candidates"]`` — the index's raw candidate frame
-        (``row_id``, ``_distance``), PERSISTED so that collecting it and
+        (``row_id``, ``_distance``, and ``vector`` on a covered search),
+        PERSISTED so that collecting it and
         collecting the returned result run the candidate search ONCE (the
         result plan reuses the cached frame).  Built for replay-style
         audit harnesses that must export the exact candidate set the
@@ -1249,7 +1312,7 @@ class AnnEngine:
                     # concurrent lifecycle op raced the snapshot scan
                     # -> distributed
         hits, rerank, n = self._probe(
-            idx, query, k, oversample, rerank,
+            t, idx, query, k, oversample, rerank,
             search_complexity=search_complexity, **search_params,
         )
         if capture is not None:
@@ -1278,11 +1341,23 @@ class AnnEngine:
         broadcast and one limit-sort (``TakeOrderedAndProject``, no
         range-partitioned global sort) cuts to ``n`` rows, so a row drops
         only when ``key`` repeats in ``base``; with ``n=None`` the join is
-        sized by the planner and the output is globally sorted."""
+        sized by the planner and the output is globally sorted.
+
+        Hits that carry a ``vector`` column come from a covered probe
+        (:meth:`_covered`): they are the rows.  The key is cast back to
+        ``base``'s type and the vector takes the name of ``base``'s other
+        column; no join runs and ``base`` is read for its schema only."""
         right = hits.withColumnRenamed("row_id", key)
-        rows = base.join(
-            right if n is None else F.broadcast(right), on=key, how="inner"
-        ).select(*lead, *base.columns, *scores)
+        if "vector" in hits.columns:
+            (column,) = (c for c in base.columns if c != key)
+            rows = right.withColumnRenamed("vector", column).withColumn(
+                key, F.col(key).cast(base.schema[key].dataType)
+            )
+        else:
+            rows = base.join(
+                right if n is None else F.broadcast(right), on=key, how="inner"
+            )
+        rows = rows.select(*lead, *base.columns, *scores)
         if per_query_k is not None:
             rows = topk_per_query(rows, per_query_k, idx_col=lead[0], row_col=key)
         rows = rows.orderBy(*order, F.col(key).asc())
@@ -1300,16 +1375,55 @@ class AnnEngine:
             F.col(column or idx.meta.column), query, idx.meta.metric
         ).alias("_distance")
 
-    def _probe(self, idx, query, k, oversample=None, rerank=None, **params):
-        """One query's index probe with the rerank defaults resolved:
-        ``(hits, rerank, n)``, ``n`` the fetch's hit bound — ``k`` when the
-        candidates are re-scored, else every one of the ``k * oversample``
-        hits."""
+    def _probe(self, t, idx, query, k, oversample=None, rerank=None, **params):
+        """One query's index probe over table ``t``'s unfiltered view, with
+        the rerank defaults resolved: ``(hits, rerank, n)``, ``n`` the
+        fetch's hit bound — ``k`` when the candidates are re-scored, else
+        every one of the ``k * oversample`` hits.  A covered search's hits
+        carry their vectors."""
         oversample, rerank = self._resolve_rerank(idx, oversample, rerank)
         hits = idx.search(
-            list(query), k * oversample, **self._search_kw(idx, rerank, params)
+            list(query), k * oversample, with_vectors=self._covered(t, idx),
+            **self._search_kw(idx, rerank, params),
         )
         return hits, rerank, k if rerank else k * oversample
+
+    @staticmethod
+    def _payload_columns(t, idx) -> set[str]:
+        """The view's columns an index probe does not return: all but the
+        row key and the indexed vector."""
+        return set(t.df.columns) - {t.row_id, idx.meta.column}
+
+    @staticmethod
+    def _covered(t, idx) -> bool:
+        """Whether a search of ``idx`` over ``t``'s unfiltered view is
+        answered from the probe's own rows — local serving's rule
+        (:meth:`_local_topk_rows_batch`) with no covering sidecar: the
+        view holds no payload column, the index is unquantized (its probe
+        reads the raw vectors, not codes), the key is integral (it
+        round-trips through the artifact's ``long``) and the indexed
+        column is ``array<float>`` (the artifact keeps its values bit for
+        bit).  The index must also hold only the view's rows: it is built
+        on this table (``table_name``), took no other table's rows by
+        ``merge_index`` (``merged_tables``) and is not older than a
+        re-registration of the table in this engine (``replaced_at``).
+        Its live rows are then the view's rows (tombstones hide by id, so
+        at most fewer), which makes the covered answer the fetched one.
+        An index built in an earlier engine on a table now registered
+        over different data is not detected, as in local serving."""
+        meta = idx.meta
+        types = {f.name: f.dataType for f in t.df.schema.fields}
+        vec = types.get(meta.column)
+        return (
+            meta.table_name == t.name
+            and not meta.extra.get("merged_tables")
+            and meta.created_at > t.replaced_at
+            and not meta.quantized
+            and not AnnEngine._payload_columns(t, idx)
+            and isinstance(types[t.row_id], T.IntegralType)
+            and isinstance(vec, T.ArrayType)
+            and isinstance(vec.elementType, T.FloatType)
+        )
 
     @staticmethod
     def _search_kw(idx, rescored: bool, params: dict) -> dict:
@@ -1473,7 +1587,7 @@ class AnnEngine:
         from duckdb_annsearch_spark.index import kernels
 
         cov_cols = set(idx.meta.extra.get("covering") or ())
-        extra = set(t.df.columns) - {t.row_id, idx.meta.column}
+        extra = self._payload_columns(t, idx)
         uncovered = extra - cov_cols
         if uncovered:
             raise ValueError(
@@ -1623,13 +1737,15 @@ class AnnEngine:
         """Multi-query batch: ``query_idx INT`` + table columns + ``_distance``
         (``src/ann_search.cpp:202-388``).
 
-        The rows are fetched like :meth:`ann_search`'s: the index hits
-        (at most ``k * oversample`` per query) are broadcast into a join
-        with the table and the result is cut by ONE limit-sort
+        The rows come from where :meth:`ann_search`'s do: on a covered
+        search (:meth:`_covered`) from the hits themselves, else from the
+        index hits (at most ``k * oversample`` per query) broadcast into a
+        join with the table.  Either way ONE limit-sort
         (``TakeOrderedAndProject``) on ``(query_idx, _distance, row_id)``
-        to the hit count, ``nq * k * oversample`` — no range-partitioned
-        global sort.  The cut drops rows only when a ``row_id`` repeats in
-        the table, and then from the highest ``query_idx``.
+        cuts the result to the hit count, ``nq * k * oversample`` — no
+        range-partitioned global sort.  The cut drops rows only when a
+        ``row_id`` repeats in the table, and then from the highest
+        ``query_idx``.
 
         ``rerank``/``oversample`` follow :meth:`ann_search`: candidates are
         re-scored exactly per query (broadcast join of the tiny query list)
@@ -1664,6 +1780,7 @@ class AnnEngine:
         hits = idx.search_batch(
             [list(q) for q in queries], k * oversample,
             search_complexity=search_complexity,
+            with_vectors=self._covered(t, idx),
             **self._search_kw(idx, rerank, search_params),
         )
         if rerank:
@@ -1908,9 +2025,9 @@ class AnnEngine:
                     # descending raw dot product (negated-IP distance
                     # ascending)
                     hits = self._probe(
-                        self.get_index(meta.name), m.query_vector, m.k,
+                        t, self.get_index(meta.name), m.query_vector, m.k,
                         rerank=meta.quantized,
-                    )[0].select("row_id")
+                    )[0].drop("_distance")
                     out = self._fetch(
                         base, tie, hits, m.k, [],
                         [dist.alias(alias)],
@@ -1959,8 +2076,10 @@ class AnnEngine:
         applied to (indexed column, constant vector), over a registered
         table, with only identity projections / one trailing withColumn
         alias in between. On a match that passes the cost gates, the sort
-        is answered by an index probe + broadcast row fetch and re-sorting
-        k rows; otherwise (including any Filter between sort and scan —
+        is answered by an index probe and a limit-sort of its k rows —
+        taken from the probe itself on a covered table (:meth:`_covered`),
+        else by a broadcast row fetch from the table; otherwise
+        (including any Filter between sort and scan —
         ``ann_optimizer.cpp:478-481``) the original ``df`` is returned
         unchanged, so ``accelerate`` is always semantics-preserving*.
 
@@ -1997,8 +2116,8 @@ class AnnEngine:
         # direction: the matcher only admits orderings an index serves
         # literally (sqrt/squared L2 asc, raw IP desc, neg-IP asc)
         hits = self._probe(
-            self.get_index(meta.name), m.query_vector, m.k, rerank=meta.quantized
-        )[0].select("row_id")
+            t, self.get_index(meta.name), m.query_vector, m.k, rerank=meta.quantized
+        )[0].drop("_distance")
         out = self._fetch(
             t.df, t.row_id, hits, m.k, [],
             [dist.alias(alias)],

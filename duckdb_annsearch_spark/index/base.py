@@ -154,12 +154,20 @@ class BaseIndex:
     # last build live in a side parquet and are brute-force searched and
     # merged into the top-k — the reference's "index delta = unindexed tail"
     # semantics for ``BoundIndex::Append`` (src/diskann_index.cpp:316-361).
+    #
+    # ``with_vectors=True`` makes a covered probe: every hit also carries
+    # its raw ``vector`` from the artifact or delta row the probe read, so
+    # a caller can build the row without reading the table.  Unquantized
+    # indexes only: a quantized probe reads the codes, not the vectors.
     def search(self, query: Sequence[float], k: int, **kw) -> DataFrame:
         """(row_id, _distance) of the k nearest, ascending."""
         return self.search_batch([list(query)], k, **kw).drop("query_idx")
 
-    def search_batch(self, queries: list[Sequence[float]], k: int, **kw) -> DataFrame:
-        hits = self._search_batch_impl(queries, k, **kw)
+    def search_batch(
+        self, queries: list[Sequence[float]], k: int, with_vectors: bool = False, **kw
+    ) -> DataFrame:
+        self._check_covered(with_vectors)
+        hits = self._search_batch_impl(queries, k, with_vectors=with_vectors, **kw)
         d = self.catalog.delta(self.meta.name)
         if d is None:
             return hits
@@ -171,6 +179,7 @@ class BaseIndex:
             self.meta.dim,
             dequantize=self._delta_dequant_args(),
             deleted=self._deleted_rowid_array(),
+            with_vectors=with_vectors,
         )
         combined = hits.unionByName(extra)
         if kw.get("merge_k") == 0:
@@ -186,6 +195,7 @@ class BaseIndex:
         k: int,
         query_col: str = "query",
         idx_col: str = "query_idx",
+        with_vectors: bool = False,
         **kw,
     ) -> DataFrame:
         """Distributed-batch search over a *DataFrame* of queries.
@@ -200,7 +210,10 @@ class BaseIndex:
         Wrong-dimension / null query vectors produce no output rows
         (``test/sql/edge_cases.test`` semantics).
         """
-        hits = self._search_batch_df_impl(queries_df, k, query_col, idx_col, **kw)
+        self._check_covered(with_vectors)
+        hits = self._search_batch_df_impl(
+            queries_df, k, query_col, idx_col, with_vectors=with_vectors, **kw
+        )
         if self.catalog.delta(self.meta.name) is None:
             return hits
         from duckdb_annsearch_spark.index import scan
@@ -215,6 +228,7 @@ class BaseIndex:
             deleted=self._deleted_rowid_array(),
             query_col=query_col,
             idx_col=idx_col,
+            with_vectors=with_vectors,
         )
         combined = hits.unionByName(extra)
         if kw.get("merge_k") == 0:  # rerank recipe: no code-distance cut
@@ -222,14 +236,27 @@ class BaseIndex:
         return kernels.topk_per_query(combined, k, idx_col=idx_col)
 
     def _search_batch_impl(
-        self, queries: list[Sequence[float]], k: int, **kw
+        self, queries: list[Sequence[float]], k: int, with_vectors: bool = False, **kw
     ) -> DataFrame:
         raise NotImplementedError
 
     def _search_batch_df_impl(
-        self, queries_df: DataFrame, k: int, query_col: str, idx_col: str, **kw
+        self,
+        queries_df: DataFrame,
+        k: int,
+        query_col: str,
+        idx_col: str,
+        with_vectors: bool = False,
+        **kw,
     ) -> DataFrame:
         raise NotImplementedError
+
+    def _check_covered(self, with_vectors: bool) -> None:
+        if with_vectors and self.meta.quantized:
+            raise ValueError(
+                f"index {self.meta.name!r} is quantized: its probe reads "
+                "codes, so its hits cannot carry the raw vectors"
+            )
 
     def _deleted_rowid_array(self) -> "np.ndarray":
         """Tombstoned row_ids as a numpy array, read on the driver through

@@ -40,7 +40,9 @@ class FlatIndex(BaseIndex):
         catalog.save(meta)
         return cls(catalog, meta)
 
-    def _search_batch_impl(self, queries: list[Sequence[float]], k: int, **kw) -> DataFrame:
+    def _search_batch_impl(
+        self, queries: list[Sequence[float]], k: int, with_vectors: bool = False, **kw
+    ) -> DataFrame:
         dq = self._dequant_args()
         return kernels.probe_partitions(
             self.artifact(),
@@ -51,6 +53,7 @@ class FlatIndex(BaseIndex):
             vector_col="codes" if dq else "vector",
             dequantize=dq,
             deleted=self._deleted_rowid_array(),
+            with_vectors=with_vectors,
         )
 
     def _search_batch_df_impl(
@@ -59,6 +62,7 @@ class FlatIndex(BaseIndex):
         k: int,
         query_col: str = "query",
         idx_col: str = "query_idx",
+        with_vectors: bool = False,
         **kw,
     ) -> DataFrame:
         """Query-distributed exact search: the artifact is one parquet
@@ -77,4 +81,5 @@ class FlatIndex(BaseIndex):
             deleted=self._deleted_rowid_array(),
             query_col=query_col,
             idx_col=idx_col,
+            with_vectors=with_vectors,
         )

@@ -430,21 +430,27 @@ def _load_shard(shard_dir: str, mmap: bool = True) -> tuple[VamanaGraph, np.ndar
     return VamanaGraph(vectors, neighbors, ep, side.get("metric", "l2"), row_ids), row_ids
 
 
-def _beam_hits(g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted) -> pd.DataFrame:
+def _beam_hits(
+    g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted, with_vectors=False
+) -> pd.DataFrame:
     """Top-k hit frame of ``pdf``'s valid queries on one (sub)graph: one
     lock-step beam search over-fetching by the tombstone count, tombstone
-    filter, cut to k — the map side of both graph probes."""
+    filter, cut to k — the map side of both graph probes.  ``with_vectors``
+    adds each hit's vector from the graph's own (unquantized) block."""
     orig_idx, qmat = kernels.valid_queries(pdf, query_col, idx_col, dim)
     overfetch = k + deleted.size
     results = g.beam_search_batch(qmat, overfetch, max(L, overfetch)) if len(qmat) else []
     pieces = []
     for i, (labels, dists) in zip(orig_idx, results):
-        rids = row_ids[labels]
         if deleted.size:
-            keep = ~np.isin(rids, deleted)
-            rids, dists = rids[keep], dists[keep]
-        pieces.append((i, rids[:k], dists[:k]))
-    return kernels.hits_frame(idx_col, np.int64, pieces)
+            keep = ~np.isin(row_ids[labels], deleted)
+            labels, dists = labels[keep], dists[keep]
+        labels = labels[:k]
+        pieces.append(
+            (i, row_ids[labels], dists[:k],
+             *([np.asarray(g.vectors[labels], dtype=np.float32)] if with_vectors else []))
+        )
+    return kernels.hits_frame(idx_col, np.int64, pieces, with_vectors)
 
 
 class GraphIndex(BaseIndex):
@@ -582,16 +588,22 @@ class GraphIndex(BaseIndex):
         query_col: str = "query",
         idx_col: str = "query_idx",
         search_complexity: int | None = None,
+        with_vectors: bool = False,
+        nq: int | None = None,
         **kw,
     ) -> DataFrame:
         """Query-distributed beam search: the graph loads once per python
         worker (process-level cache) and each task probes for its own slice
-        of queries.  Sharded artifacts fan out (query x shard) and merge."""
+        of queries.  Sharded artifacts fan out (query x shard) and merge;
+        ``nq``, the query count when the caller knows it, lets one query
+        merge with a limit-sort (``kernels.topk_per_query``)."""
         if self.meta.extra.get("shards"):
             return self._sharded_search_df(
                 queries_df, k, query_col, idx_col, search_complexity,
                 nprobe_shards=kw.get("nprobe_shards"),
                 merge_k=kw.get("merge_k"),
+                with_vectors=with_vectors,
+                nq=nq,
             )
         L = max(k, int(search_complexity or self._beam()))
         deleted = self._deleted_rowid_array()
@@ -606,10 +618,13 @@ class GraphIndex(BaseIndex):
             pdfs = [b for b in batches if len(b)]
             if pdfs:
                 pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-                yield _beam_hits(g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted)
+                yield _beam_hits(
+                    g, row_ids, pdf, query_col, idx_col, dim, k, L, deleted,
+                    with_vectors,
+                )
 
         return queries_df.select(idx_col, query_col).mapInPandas(
-            probe, f"{idx_col} long, row_id long, _distance float"
+            probe, kernels.probe_schema(f"{idx_col} long", with_vectors)
         )
 
     def _sharded_search_df(
@@ -621,12 +636,15 @@ class GraphIndex(BaseIndex):
         search_complexity: int | None,
         nprobe_shards: int | None = None,
         merge_k: int | None = None,
+        with_vectors: bool = False,
+        nq: int | None = None,
     ) -> DataFrame:
         """Shard fan-out: every (query, shard) pair probes that shard's
         subgraph (each task holds ONE shard in memory — graphs larger than
         any single worker's RAM stay searchable), then a per-query window
-        merges the per-shard top-ks.  Shuffle volume is nq * shards * k
-        candidate rows — never vectors.
+        merges the per-shard top-ks, or one limit-sort when ``nq == 1``.
+        Shuffle volume is nq * shards * k candidate rows (with their
+        vectors only on a covered probe).
 
         With kmeans-clustered shards, ``nprobe_shards`` prunes the fan-out
         to each query's closest shards by centroid (SPANN-style routing) —
@@ -682,17 +700,20 @@ class GraphIndex(BaseIndex):
             )
             # one lock-step batch per (shard, task): all of this shard's
             # queries advance together (R2 — provider.rs:243-440)
-            return _beam_hits(g, row_ids, grp, query_col, idx_col, dim, k, L, deleted)
+            return _beam_hits(
+                g, row_ids, grp, query_col, idx_col, dim, k, L, deleted,
+                with_vectors,
+            )
 
         # groupBy per shard (NOT repartition(n, "shard"): hash partitioning
         # collides shards into shared tasks and leaves others empty) — each
         # group call touches exactly one shard's graph
         partial = fan.groupBy("shard").applyInPandas(
-            probe_shard, f"{idx_col} long, row_id long, _distance float"
+            probe_shard, kernels.probe_schema(f"{idx_col} long", with_vectors)
         )
         if merge_k == 0:  # rerank recipe: exact re-score sees every candidate
             return partial
-        return kernels.topk_per_query(partial, k, idx_col=idx_col)
+        return kernels.topk_per_query(partial, k, idx_col=idx_col, nq=nq)
 
     def _search_batch_impl(
         self,
@@ -718,7 +739,7 @@ class GraphIndex(BaseIndex):
         return (
             self._search_batch_df_impl(
                 qdf, k, "query", "query_idx",
-                search_complexity=search_complexity, **kw,
+                search_complexity=search_complexity, nq=len(queries), **kw,
             )
             .withColumn("query_idx", F.col("query_idx").cast("int"))
         )

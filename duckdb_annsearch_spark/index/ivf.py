@@ -591,7 +591,12 @@ class IvfFlatIndex(BaseIndex):
         return [kernels.local_topk(d[i], nprobe) for i in range(d.shape[0])]
 
     def _search_batch_impl(
-        self, queries: list[Sequence[float]], k: int, nprobe: int | None = None, **kw
+        self,
+        queries: list[Sequence[float]],
+        k: int,
+        nprobe: int | None = None,
+        with_vectors: bool = False,
+        **kw,
     ) -> DataFrame:
         nprobe = int(nprobe or self.meta.params.get("nprobe", DEFAULT_NPROBE))
         qarr = np.asarray([list(q) for q in queries], dtype=np.float32)
@@ -603,7 +608,12 @@ class IvfFlatIndex(BaseIndex):
             for c in cc:
                 cell_queries.setdefault(int(c), []).append(qi)
 
-        art = self.artifact().where(F.col("cluster_id").isin(all_cells))
+        # only the probed cell directories: listing the whole artifact is a
+        # Spark job above 32 cells (parallelPartitionDiscovery.threshold)
+        art = self.catalog.read_parquet(
+            self.catalog.data_path(self.meta.name),
+            parts=[f"cluster_id={c}" for c in all_cells],
+        )
         deleted = self._deleted_rowid_array()
         dim, metric, k_ = self.meta.dim, self.meta.metric, k
         dq = self._dequant_args()
@@ -658,11 +668,16 @@ class IvfFlatIndex(BaseIndex):
                     pieces = []
                     for row, qi in enumerate(qids):
                         sel = kernels.local_topk(d[row], k_, ids=rid)
-                        pieces.append((qi, rid[sel], d[row, sel]))
-                    yield kernels.hits_frame("query_idx", np.int32, pieces)
+                        pieces.append(
+                            (qi, rid[sel], d[row, sel],
+                             *([x[sel]] if with_vectors else []))
+                        )
+                    yield kernels.hits_frame(
+                        "query_idx", np.int32, pieces, with_vectors
+                    )
 
         partial = art.select("row_id", vcol, "cluster_id").mapInPandas(
-            probe, kernels.PROBE_SCHEMA
+            probe, kernels.probe_schema("query_idx int", with_vectors)
         )
         return kernels.topk_per_query(partial, k, nq=len(queries))
 
@@ -673,6 +688,7 @@ class IvfFlatIndex(BaseIndex):
         query_col: str = "query",
         idx_col: str = "query_idx",
         nprobe: int | None = None,
+        with_vectors: bool = False,
         **kw,
     ) -> DataFrame:
         """Query-distributed IVF probe: each task resolves its queries' nprobe
@@ -712,7 +728,7 @@ class IvfFlatIndex(BaseIndex):
             for qi in range(len(orig_idx)):
                 for c in kernels.local_topk(dc[qi], nprobe):
                     cell_queries.setdefault(int(c), []).append(qi)
-            top = scan.RunningTopK(len(orig_idx), k)
+            top = scan.RunningTopK(len(orig_idx), k, dim if with_vectors else None)
             for rid, x, cid in _iter_cell_batches(
                 path, dim, sorted(cell_queries), dequantize=dq
             ):
@@ -724,15 +740,16 @@ class IvfFlatIndex(BaseIndex):
                     continue
                 d = kernels.pairwise_distances(qarr[qids], x, metric)
                 for row, qi in enumerate(qids):
-                    top.update(qi, d[row], rid)
+                    top.update(qi, d[row], rid, x)
             yield kernels.hits_frame(
                 idx_col,
                 np.int64,
                 [(i, *top.result(qi)) for qi, i in enumerate(orig_idx)],
+                with_vectors,
             )
 
         return queries_df.select(idx_col, query_col).mapInPandas(
-            probe, f"{idx_col} long, row_id long, _distance float"
+            probe, kernels.probe_schema(f"{idx_col} long", with_vectors)
         )
 
 

@@ -26,7 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-PROBE_SCHEMA = "query_idx int, row_id long, _distance float"
 
 # np.einsum's python wrapper re-parses the subscript string per call (~2 µs —
 # half the single-query small-n budget, BASELINE.md n=64,d=128). The C entry
@@ -477,6 +476,7 @@ def probe_partitions(
     row_id_col: str = "row_id",
     dequantize: dict | None = None,
     deleted: np.ndarray | None = None,
+    with_vectors: bool = False,
 ) -> DataFrame:
     """Distributed batch brute-force top-k.
 
@@ -487,7 +487,8 @@ def probe_partitions(
     query (bounded memory: ``nq*k`` rows out per batch).  Reduce side:
     :func:`topk_per_query` — only ``nq * k * n_partitions`` rows shuffle,
     never the data.  Returns (query_idx, row_id, _distance) with exactly the
-    global top-k per query over the live rows, ties broken by row_id.
+    global top-k per query over the live rows, ties broken by row_id, and
+    with ``with_vectors`` (unquantized rows only) each hit's ``vector``.
     """
     dele = deleted if deleted is not None and deleted.size else None
     qarr = np.asarray([q for _, q in queries], dtype=np.float32)
@@ -521,10 +522,14 @@ def probe_partitions(
             pieces = []
             for qi in range(d.shape[0]):
                 sel = local_topk(d[qi], k, ids=rid)
-                pieces.append((qidx[qi], rid[sel], d[qi, sel]))
-            yield hits_frame("query_idx", np.int32, pieces)
+                pieces.append(
+                    (qidx[qi], rid[sel], d[qi, sel], *([x[sel]] if with_vectors else []))
+                )
+            yield hits_frame("query_idx", np.int32, pieces, with_vectors)
 
-    partial = artifact.select(row_id_col, vector_col).mapInPandas(probe, PROBE_SCHEMA)
+    partial = artifact.select(row_id_col, vector_col).mapInPandas(
+        probe, probe_schema("query_idx int", with_vectors)
+    )
     return topk_per_query(partial, k, nq=len(queries))
 
 
@@ -541,11 +546,23 @@ def valid_queries(
     return pdf[idx_col].to_numpy()[keep].astype(np.int64), qmat.reshape(len(keep), dim)
 
 
-def hits_frame(idx_col: str, idx_dtype, pieces: list[tuple]) -> pd.DataFrame:
+def probe_schema(idx_field: str, with_vectors: bool = False) -> str:
+    """The DDL schema of a probe's hit frame: ``idx_field`` (name and
+    type), ``row_id``, ``_distance`` and, for a covered probe, ``vector``."""
+    return f"{idx_field}, row_id long, _distance float" + (
+        ", vector array<float>" if with_vectors else ""
+    )
+
+
+def hits_frame(
+    idx_col: str, idx_dtype, pieces: list[tuple], with_vectors: bool = False
+) -> pd.DataFrame:
     """The typed ``(idx_col, row_id int64, _distance float32)`` hit frame
     from ``(query index, row_ids, distances)`` pieces, one per query, in
-    order.  No pieces gives the typed empty frame."""
-    return pd.DataFrame(
+    order.  ``with_vectors`` adds the ``vector`` column from each piece's
+    fourth element, the hits' ``(n, dim)`` float32 rows.  No pieces gives
+    the typed empty frame."""
+    out = pd.DataFrame(
         {
             idx_col: np.repeat(
                 np.asarray([p[0] for p in pieces], dtype=idx_dtype),
@@ -557,6 +574,9 @@ def hits_frame(idx_col: str, idx_dtype, pieces: list[tuple]) -> pd.DataFrame:
             ),
         }
     )
+    if with_vectors:
+        out["vector"] = [v for p in pieces for v in p[3]]
+    return out
 
 
 def topk_per_query(

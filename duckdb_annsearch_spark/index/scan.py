@@ -99,12 +99,14 @@ def probe_path_df(
     deleted: np.ndarray | None = None,
     query_col: str = "query",
     idx_col: str = "query_idx",
+    with_vectors: bool = False,
 ):
     """Query-distributed exact probe of a parquet vector directory: each task
     streams the files through pyarrow for its slice of queries (one GEMM per
     batch pair).  Serves Flat's table search (the artifact, codes column on
     quantized indexes) and every index's insert-delta tail.  Returns
-    ``(idx_col long, row_id long, _distance float)``."""
+    ``(idx_col long, row_id long, _distance float)``, plus each hit's
+    ``vector`` with ``with_vectors`` (unquantized rows only)."""
     import pandas as pd
 
     dele = deleted if deleted is not None and deleted.size else None
@@ -123,46 +125,66 @@ def probe_path_df(
         if not len(orig_idx):
             return
         qarr = kernels.transform_queries(qarr, dequantize)
-        top = RunningTopK(len(orig_idx), k)
+        top = RunningTopK(len(orig_idx), k, dim if with_vectors else None)
         for rid, x in iter_vector_batches(path, dim, vector_col, dequantize):
             if dele is not None:
                 keep = ~np.isin(rid, dele)
                 rid, x = rid[keep], x[keep]
             if rid.size:
-                top.update_batch(kernels.pairwise_distances(qarr, x, metric), rid)
+                top.update_batch(kernels.pairwise_distances(qarr, x, metric), rid, x)
         yield kernels.hits_frame(
             idx_col,
             np.int64,
             [(i, *top.result(qi)) for qi, i in enumerate(orig_idx)],
+            with_vectors,
         )
 
     return queries_df.select(idx_col, query_col).mapInPandas(
-        probe, f"{idx_col} long, row_id long, _distance float"
+        probe, kernels.probe_schema(f"{idx_col} long", with_vectors)
     )
 
 
 class RunningTopK:
-    """Streaming per-query top-k merge across artifact batches."""
+    """Streaming per-query top-k merge across artifact batches; with a
+    ``dim`` it also keeps each kept hit's vector."""
 
-    def __init__(self, nq: int, k: int):
+    def __init__(self, nq: int, k: int, dim: int | None = None):
         self.k = k
         self.d = [np.empty(0, dtype=np.float32) for _ in range(nq)]
         self.r = [np.empty(0, dtype=np.int64) for _ in range(nq)]
+        self.v = None if dim is None else [
+            np.empty((0, dim), dtype=np.float32) for _ in range(nq)
+        ]
 
-    def update(self, qi: int, dists: np.ndarray, rids: np.ndarray) -> None:
+    def update(
+        self, qi: int, dists: np.ndarray, rids: np.ndarray, x: np.ndarray | None = None
+    ) -> None:
         from duckdb_annsearch_spark.index.kernels import local_topk
 
-        k = self.k
+        k, n0 = self.k, self.d[qi].size
         d = np.concatenate([self.d[qi], dists.astype(np.float32)])
         r = np.concatenate([self.r[qi], rids])
         # boundary-tie-exact selection sorted by (distance, row_id) — plain
         # argpartition keeps an arbitrary subset of ties at the k boundary
         sel = local_topk(d, k, ids=r)
         self.d[qi], self.r[qi] = d[sel], r[sel]
+        if self.v is not None:
+            # kept hits gathered from the old top-k and the new block, not
+            # from their concatenation (a copy of the block per query)
+            old = sel < n0
+            v = np.empty((sel.size, self.v[qi].shape[1]), dtype=np.float32)
+            v[old] = self.v[qi][sel[old]]
+            v[~old] = x[sel[~old] - n0]
+            self.v[qi] = v
 
-    def update_batch(self, d_matrix: np.ndarray, rids: np.ndarray) -> None:
+    def update_batch(
+        self, d_matrix: np.ndarray, rids: np.ndarray, x: np.ndarray | None = None
+    ) -> None:
         for qi in range(d_matrix.shape[0]):
-            self.update(qi, d_matrix[qi], rids)
+            self.update(qi, d_matrix[qi], rids, x)
 
-    def result(self, qi: int) -> tuple[np.ndarray, np.ndarray]:
-        return self.r[qi], self.d[qi]
+    def result(self, qi: int) -> tuple[np.ndarray, ...]:
+        """``(row_ids, distances)``, plus the vectors when kept."""
+        if self.v is None:
+            return self.r[qi], self.d[qi]
+        return self.r[qi], self.d[qi], self.v[qi]

@@ -125,10 +125,18 @@ def test_bounded_row_fetch_is_broadcast_limit_sort(engine, entry):
     """Every entry point that knows its hit count fetches rows one way:
     the hits broadcast into the join with the table (never a shuffle of
     the base table) and one limit-sort cuts the result (no
-    range-partitioned global sort)."""
+    range-partitioned global sort).  The table carries a payload column,
+    so no search of it is covered (answered from the probe's rows)."""
     rng = np.random.RandomState(5)
     rows = [(i, rng.rand(4).astype(np.float32).tolist()) for i in range(80)]
-    engine.register_table("pp", make_vectors_df(engine.spark, rows, dim=4), row_id="id")
+    engine.register_table(
+        "pp",
+        engine.spark.createDataFrame(
+            [(i, v, f"r{i}") for i, v in rows],
+            "id int, embedding array<float>, txt string",
+        ),
+        row_id="id",
+    )
     engine.create_index("pp_flat", "pp", engine="faiss", index_type="Flat")
     plan = _plan(_bounded_fetch(engine, entry, rows[0][1]))
     assert "BroadcastHashJoin" in plan, plan

@@ -140,7 +140,9 @@ def test_explain_sql_annotations(docs_engine, rows):
         f"SELECT * FROM docs ORDER BY array_distance(embedding, {_arr(q)}) LIMIT 5"
     )
     assert "ANN_INDEX_SCAN (index: docs_flat" in s.splitlines()[0]
-    assert "BroadcastHashJoin" in s  # row fetch by broadcast of k ids
+    # docs is (id, embedding): a covered search, whose rows come from the
+    # probe itself — no row-fetch join, one limit-sort
+    assert "BroadcastHashJoin" not in s and "TakeOrderedAndProject" in s
     s2 = docs_engine.explain_sql(
         f"SELECT * FROM docs WHERE id > 3 "
         f"ORDER BY array_distance(embedding, {_arr(q)}) LIMIT 5"
