@@ -206,7 +206,7 @@ class RegisteredTable:
         self.deleted_frames: list[DataFrame] = []
         # when this registration replaced an earlier one of the same name
         # in this engine (0.0: it did not); an index created before then
-        # may hold rows the view no longer has (``AnnEngine._covered``)
+        # may hold rows the view no longer has (``AnnEngine._foreign_rows``)
         self.replaced_at = 0.0
         # column -> validated vector dimension (r10): every create_index /
         # streaming_build on one table paid its own probe job + full
@@ -307,6 +307,8 @@ class AnnEngine:
         self._tables: dict[str, RegisteredTable] = {}
         # ann_search(local=True) snapshots: name -> (dir signature, ids, x)
         self._local_snapshots: dict[str, tuple] = {}
+        # (table, table) -> (frame, frame, same rows?) for _same_rows
+        self._same_rows_seen: dict[tuple[str, str], tuple] = {}
         # Arrow-accelerated createDataFrame/toPandas: the engine works without
         # it (all driver-side frames carry plain-Python values), but host
         # sessions often omit the conf and the non-Arrow path is both slower
@@ -751,7 +753,8 @@ class AnnEngine:
         (``src/diskann_index.cpp:655-699``).  A source over another table
         is recorded in the target's ``merged_tables``: the target then
         holds rows its own table's view does not, so its searches fetch
-        their rows from the view (:meth:`_covered`)."""
+        their rows from the view and local serving refuses it
+        (:meth:`_foreign_rows`)."""
         tgt, src = self.get_index(target), self.get_index(source)
         if tgt.meta.dim != src.meta.dim or tgt.meta.metric != src.meta.metric:
             raise ValueError("cannot merge indexes with different dim/metric")
@@ -1229,9 +1232,9 @@ class AnnEngine:
 
         ``local='auto'`` serves locally when eligible and silently takes
         the distributed path otherwise (wide table / artifact above the
-        cap, or any per-query parameter passed — see below) — the
-        serving-tier default: hot small indexes answer in ms, everything
-        else distributes.
+        cap, an index holding rows outside the table, or any per-query
+        parameter passed — see below) — the serving-tier default: hot
+        small indexes answer in ms, everything else distributes.
 
         The local path is EXACT and returns exactly ``k`` rows; it has no
         use for ``oversample`` / ``rerank`` / ``search_complexity`` / index
@@ -1394,36 +1397,65 @@ class AnnEngine:
         row key and the indexed vector."""
         return set(t.df.columns) - {t.row_id, idx.meta.column}
 
-    @staticmethod
-    def _covered(t, idx) -> bool:
+    def _covered(self, t, idx) -> bool:
         """Whether a search of ``idx`` over ``t``'s unfiltered view is
-        answered from the probe's own rows — local serving's rule
-        (:meth:`_local_topk_rows_batch`) with no covering sidecar: the
-        view holds no payload column, the index is unquantized (its probe
-        reads the raw vectors, not codes), the key is integral (it
+        answered from the probe's own rows — local serving's rule with no
+        covering sidecar: the index holds only the view's rows
+        (:meth:`_foreign_rows`; tombstones hide by id, so at most fewer),
+        the view holds no payload column, the index is unquantized (its
+        probe reads the raw vectors, not codes), the key is integral (it
         round-trips through the artifact's ``long``) and the indexed
         column is ``array<float>`` (the artifact keeps its values bit for
-        bit).  The index must also hold only the view's rows: it is built
-        on this table (``table_name``), took no other table's rows by
-        ``merge_index`` (``merged_tables``) and is not older than a
-        re-registration of the table in this engine (``replaced_at``).
-        Its live rows are then the view's rows (tombstones hide by id, so
-        at most fewer), which makes the covered answer the fetched one.
-        An index built in an earlier engine on a table now registered
-        over different data is not detected, as in local serving."""
+        bit)."""
         meta = idx.meta
         types = {f.name: f.dataType for f in t.df.schema.fields}
         vec = types.get(meta.column)
         return (
-            meta.table_name == t.name
-            and not meta.extra.get("merged_tables")
-            and meta.created_at > t.replaced_at
+            self._foreign_rows(t, idx) is None
             and not meta.quantized
             and not AnnEngine._payload_columns(t, idx)
             and isinstance(types[t.row_id], T.IntegralType)
             and isinstance(vec, T.ArrayType)
             and isinstance(vec.elementType, T.FloatType)
         )
+
+    def _foreign_rows(self, t, idx) -> str | None:
+        """Why ``idx`` may hold rows outside ``t``'s view (None: it holds
+        only the view's rows) — the one provenance rule of the paths that
+        answer from the index alone, covered and local serving.  The index
+        took no other table's rows (``merged_tables``), is not older than
+        a re-registration of its own table (``replaced_at``), and that
+        table is ``t`` or a view of the same rows.  An index built in an
+        earlier engine on a table since registered over other data is not
+        detected."""
+        meta = idx.meta
+        s = self._tables.get(meta.table_name)
+        if meta.extra.get("merged_tables"):
+            return f"it holds rows merged from {meta.extra['merged_tables']}"
+        if s is None or meta.created_at <= s.replaced_at:
+            return f"table {meta.table_name!r} is unregistered or registered anew"
+        if s is not t and not self._same_rows(s, t):
+            return f"it was built on table {s.name!r}"
+        return None
+
+    def _same_rows(self, s, t) -> bool:
+        """Whether views ``s`` and ``t`` hold the same rows under the same
+        key: equal analyzed plans below any column-only projection (``t`` a
+        ``select`` of ``s``, or two reads of the same files), compared once
+        per pair of frames."""
+        seen = self._same_rows_seen.get((s.name, t.name))
+        if seen is None or seen[0] is not s.df or seen[1] is not t.df:
+            plans = []
+            for df in (s.df, t.df):
+                p = df._jdf.queryExecution().analyzed()
+                while p.nodeName() in ("Project", "SubqueryAlias") and (
+                    p.outputSet().subsetOf(p.child().outputSet())
+                ):
+                    p = p.child()
+                plans.append(p)
+            same = s.row_id == t.row_id and plans[0].sameResult(plans[1])
+            seen = self._same_rows_seen[(s.name, t.name)] = (s.df, t.df, same)
+        return seen[2]
 
     @staticmethod
     def _search_kw(idx, rescored: bool, params: dict) -> dict:
@@ -1586,6 +1618,12 @@ class AnnEngine:
         the whole query block instead."""
         from duckdb_annsearch_spark.index import kernels
 
+        foreign = self._foreign_rows(t, idx)
+        if foreign is not None:
+            raise ValueError(
+                f"index {idx.meta.name!r} may hold rows outside table "
+                f"{t.name!r} ({foreign}) — use local=False or 'auto'"
+            )
         cov_cols = set(idx.meta.extra.get("covering") or ())
         extra = self._payload_columns(t, idx)
         uncovered = extra - cov_cols

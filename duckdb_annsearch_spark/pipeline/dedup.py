@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from duckdb_annsearch_spark.operators.fts import tokenize
 from duckdb_annsearch_spark.pipeline.fanout import fan_out_small
 from duckdb_annsearch_spark.pipeline.text import HASH_MOD, bind, token_hash
-from duckdb_annsearch_spark.session import estimated_bytes, job_label
+from duckdb_annsearch_spark.session import job_label
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -842,27 +842,6 @@ def dedup_fuzzy(
     )
 
 
-def _bloom_worth_it(right: DataFrame) -> bool:
-    """Whether a Bloom shuffle guard pays for itself against joining
-    ``right`` directly: below the session's own broadcast threshold the
-    guarded join is ALREADY map-side (Spark broadcasts the right side —
-    no shuffle for the Bloom to save), so the guard's build passes are
-    pure overhead.  The gate reuses the exact quantity the planner uses
-    (``spark.sql.autoBroadcastJoinThreshold`` vs the optimizer's size
-    estimate), so it is environment-derived, not tuned to any core
-    count; when either number is unavailable the guard stays on
-    (exactness never depends on this decision — the Bloom has no false
-    negatives either way)."""
-    est = estimated_bytes(right)
-    try:
-        thresh = int(
-            right.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        )
-    except Exception:
-        return True
-    return est is None or thresh < 0 or est > thresh
-
-
 def dedup_against(
     df: DataFrame,
     ref: DataFrame,
@@ -874,7 +853,6 @@ def dedup_against(
     bands: int = DEFAULT_BANDS,
     shingle_k: int = 3,
     max_bucket: int | None = None,
-    ref_bloom_fpp: float | None = None,
 ) -> DataFrame:
     """CROSS-corpus deduplication: drop from ``df`` every document already
     present in ``ref`` (the 'dedupe the new crawl against the existing
@@ -903,75 +881,13 @@ def dedup_against(
 
     Scale shape: two map-only signature passes + one equi-join keyed on
     (band, band_hash) + one verify join over candidates + one left-anti
-    join back — every stage bounded by bucket sizes, nothing driver-side.
-
-    ``ref_bloom_fpp``: optional EXACTNESS-PRESERVING shuffle guard (a
-    Bloom filter has no false negatives — ``pipeline/bloom.py``).  A
-    Bloom over the reference's content keys (and, in fuzzy mode, its
-    band-bucket keys) is built in one distributed pass and tested
-    map-side: df rows that are definitely NOT in the reference skip the
-    anti-join (kept outright), and band rows that can't hit any
-    reference bucket never enter the candidate shuffle.  Only the
-    ~fpp false-positive sliver pays the joins, which then decide
-    exactly — results are IDENTICAL with or without the Bloom (pinned
-    by test and by the shared driver oracle).  Worth it when the new
-    crawl mostly does not overlap the reference — the realistic case.
-
-    The guard is additionally SELF-GATING (r10): when the reference
-    relation's optimizer estimate fits the session's broadcast
-    threshold, the joins it would guard are already map-side broadcast
-    joins and the Bloom build passes cannot save a shuffle — the guard
-    is skipped outright (``_bloom_worth_it``).  A session with
-    ``spark.sql.autoBroadcastJoinThreshold=-1`` never broadcasts, so
-    there the guard always engages."""
-    sc = df.sparkSession.sparkContext
+    join back — every stage bounded by bucket sizes, nothing driver-side."""
     if mode == "exact":
         ref_keys = (
             ref.where(F.col(text_col).isNotNull())
             .select(F.md5(F.col(text_col)).alias("__k"))
             .distinct()
         )
-        # r10: the guard engages only when the anti-join's right side is
-        # too big to broadcast (_bloom_worth_it) — below that threshold
-        # the anti-join is already map-side and the Bloom build passes
-        # are pure overhead.  Survivors are IDENTICAL either way.
-        if ref_bloom_fpp and _bloom_worth_it(ref):
-            from duckdb_annsearch_spark.pipeline.bloom import (
-                bloom_filter_df,
-                bloom_from_df,
-            )
-
-            # 60-bit key from the md5 prefix: equal md5 => equal key, so
-            # a bloom miss proves the full-key anti-join would keep the
-            # row (NULL texts key NULL -> 'definitely not', kept — the
-            # same 'never a duplicate' semantics as the join path).
-            # Built over the NON-distinct key stream (r10): Bloom inserts
-            # are idempotent, so the pre-distinct exchange bought nothing,
-            # and the implicit sizing count becomes a map-only pass whose
-            # row count upper-bounds the distinct count (a bigger bitmap
-            # only lowers fpp).
-            key64 = F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10).cast(
-                "long"
-            )
-            with job_label(sc, "dedup_against: content bloom"):
-                bf = bloom_from_df(
-                    ref.where(F.col(text_col).isNotNull()).select(
-                        F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10)
-                        .cast("long")
-                        .alias("__k64")
-                    ),
-                    "__k64",
-                    fpp=ref_bloom_fpp,
-                )
-            keyed = df.withColumn("__k64", key64)
-            sure = bloom_filter_df(keyed, "__k64", bf, "definitely_not")
-            maybe = bloom_filter_df(keyed, "__k64", bf, "maybe")
-            checked = maybe.join(
-                ref_keys,
-                _content_key(text_col, id_col) == F.col("__k"),
-                "left_anti",
-            )
-            return sure.drop("__k64").unionByName(checked.drop("__k64"))
         return df.join(
             ref_keys,
             _content_key(text_col, id_col) == F.col("__k"),
@@ -981,11 +897,9 @@ def dedup_against(
         raise ValueError(f"unknown dedup_against mode {mode!r}")
 
     # exact pre-pass (see docstring: what makes max_bucket safe)
-    df = dedup_against(
-        df, ref, text_col, id_col, mode="exact",
-        ref_bloom_fpp=ref_bloom_fpp,
-    )
+    df = dedup_against(df, ref, text_col, id_col, mode="exact")
 
+    sc = df.sparkSession.sparkContext
     nonempty = F.size(word_shingles(F.col(text_col), shingle_k)) > 0
     with job_label(sc, "dedup_against: signatures"):
         left = band_buckets(
@@ -1002,26 +916,6 @@ def dedup_against(
             .select("band", "band_hash")
         )
         right = right.join(keep, ["band", "band_hash"])
-    if ref_bloom_fpp and _bloom_worth_it(ref):
-        from duckdb_annsearch_spark.pipeline.bloom import (
-            bloom_filter_df,
-            bloom_from_df,
-        )
-
-        # band rows that can't hit ANY (capped) reference bucket never
-        # enter the candidate shuffle; false positives just join to
-        # nothing (exactness preserved).  Same r10 gate as the exact
-        # pre-pass: when the reference band relation would broadcast,
-        # the candidate equi-join is already map-side and the guard
-        # cannot save a shuffle.
-        bkey = F.xxhash64("band", "band_hash")
-        with job_label(sc, "dedup_against: band bloom"):
-            bf = bloom_from_df(
-                right.select(bkey.alias("__bk")), "__bk", fpp=ref_bloom_fpp
-            )
-        left = bloom_filter_df(
-            left.withColumn("__bk", bkey), "__bk", bf, "maybe"
-        ).drop("__bk")
     cand = (
         left.join(right, ["band", "band_hash"])
         .select("doc_id", "ref_id")

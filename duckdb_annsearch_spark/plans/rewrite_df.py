@@ -16,7 +16,7 @@ matching is impossible. This module matches the reference's rewrite shape
       LocalLimit(k)
         Sort([single sort key])
           [identity Project / SubqueryAlias / (Filter -> refuse)]*
-            LogicalRelation  == a registered engine table (sameResult)
+            a registered engine table's plan (sameResult)
 
 and verifies the sort key IS one of our distance builders by extracting the
 (column attribute, literal query vector) candidates and comparing the key
@@ -169,13 +169,20 @@ def _match(engine, df) -> TopKMatch | None:
     direction = str(so.direction())
     key = so.child()
 
-    # descend to the relation: identity projects + at most one trailing
-    # Alias (the withColumn shape); Filter marks the match as refused
+    # descend to a registered view: identity projects + at most one
+    # trailing Alias (the withColumn shape); Filter marks the match as
+    # refused.  Each node is compared with the views BEFORE descending, so
+    # a view whose own plan ends in a Project or Filter (a withColumn
+    # view, a view after a delete) is recognised as itself
+    views = [(n, t.df._jdf.queryExecution().analyzed()) for n, t in engine._tables.items()]
     node = _children(sort)[0]
     alias_name = None
     alias_expr = None
     has_filter = False
     while True:
+        table = next((n for n, v in views if node.sameResult(v)), None)
+        if table is not None:
+            break
         c = _cls(node)
         if c == "SubqueryAlias":
             node = _children(node)[0]
@@ -207,21 +214,7 @@ def _match(engine, df) -> TopKMatch | None:
                     return None
             node = child
         else:
-            break
-
-    leaf = node
-    table = None
-    tie = None
-    for name, t in engine._tables.items():
-        try:
-            if leaf.sameResult(t.df._jdf.queryExecution().analyzed()):
-                table = name
-                tie = t.row_id
-                break
-        except Exception:
-            continue
-    if table is None:
-        return None
+            return None
 
     # resolve the sort key through the alias when it references one
     used_alias = None

@@ -269,3 +269,60 @@ def test_auto_acceleration_covers_every_action(eng, monkeypatch, tmp_path):
     assert plain.count() == 10
     assert not seen
     assert isinstance(type(eng.spark.range(1)).write, property)
+
+
+def _vec_table(engine, name, n=400, dim=8, payload=False):
+    import numpy as np
+
+    from tests.conftest import make_vectors_df
+
+    vecs = np.random.default_rng(0).standard_normal((n, dim)).astype("float32")
+    df = make_vectors_df(engine.spark, list(enumerate(vecs.tolist())), dim=dim)
+    if payload:
+        df = df.withColumn("txt", F.concat(F.lit("row "), F.col("id")))
+    engine.register_table(name, df, row_id="id")
+    engine.create_index(f"{name}_flat", name, "embedding", engine="faiss", index_type="Flat")
+    return [[float(x) for x in v] for v in vecs]
+
+
+def _accel(engine, plain):
+    exp = {}
+    out = engine.accelerate(plain, explain=exp)
+    return exp, out
+
+
+def test_view_after_delete_rewrites(engine):
+    # a list delete makes the view a Filter over its part; the walk must
+    # recognise that Filter as the view, not refuse it as a user filter
+    q = _vec_table(engine, "dl")[7]
+    exp, _ = _accel(
+        engine, engine.table("dl").df.orderBy(array_distance("embedding", q)).limit(5)
+    )
+    assert exp["rewritten"] is True
+    engine.delete("dl", [7])
+    df = engine.table("dl").df
+    plain = df.orderBy(array_distance("embedding", q)).limit(5)
+    exp, out = _accel(engine, plain)
+    assert exp["rewritten"] is True, exp
+    got = [r["id"] for r in out.collect()]
+    assert 7 not in got
+    assert got == [r["id"] for r in plain.collect()]
+    # a user filter above the deleted-from view still refuses
+    filtered = df.where(F.col("id") < 100).orderBy(array_distance("embedding", q)).limit(5)
+    exp, out = _accel(engine, filtered)
+    assert exp["rewritten"] is False
+    assert exp["reason"] == "filter between sort and scan"
+    assert out is filtered
+
+
+def test_withcolumn_view_rewrites(engine):
+    # a view whose own plan ends in a Project (withColumn) is matched
+    q = _vec_table(engine, "wc", payload=True)[3]
+    df = engine.table("wc").df
+    plain = df.orderBy(array_distance("embedding", q)).limit(5)
+    exp, out = _accel(engine, plain)
+    assert exp["rewritten"] is True, exp
+    assert out.columns == df.columns
+    assert [(r["id"], r["txt"]) for r in out.collect()] == [
+        (r["id"], r["txt"]) for r in plain.collect()
+    ]

@@ -321,9 +321,15 @@ def test_covering_merge_requires_matching_source(engine):
         engine.merge_index("mv_main", "mv_other")
     engine.attach_covering("mv_other", ["txt"])
     engine.merge_index("mv_main", "mv_other")
+    # the merged index holds mvb's rows, which are not mva's: local
+    # serving refuses to answer from it, 'auto' fetches from the view
     q = [float(v) for v in base[100][1]]
-    top = engine.ann_search("mva", "mv_main", q, k=1, local=True).first()
-    assert top["id"] == 100 and top["txt"] == "m100"
+    with pytest.raises(ValueError, match="outside table 'mva'"):
+        engine.ann_search("mva", "mv_main", q, k=5, local=True)
+    auto = engine.ann_search("mva", "mv_main", q, k=5, local="auto").collect()
+    dist = engine.ann_search("mva", "mv_main", q, k=5).collect()
+    assert auto and all(r["id"] < 80 for r in auto)
+    assert [r["id"] for r in auto] == [r["id"] for r in dist]
 
 
 def test_covering_counts_against_cap(covered_engine, monkeypatch):
