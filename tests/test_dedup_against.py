@@ -32,11 +32,6 @@ class TestExact:
         new = _df(spark, [(1, None), (2, BASE)])
         ref = _df(spark, [(100, None), (101, BASE)])
         assert _ids(dedup_against(new, ref, mode="exact")) == [1]
-        # a NULL text, a duplicate and a novel doc in ONE partition: the
-        # NULL neither shields nor drags down its partition-mates
-        new = _df(spark, [(1, None), (2, BASE), (3, OTHER)]).coalesce(1)
-        ref = _df(spark, [(9, BASE)])
-        assert _ids(dedup_against(new, ref, mode="exact")) == [1, 3]
 
     def test_within_df_duplicates_kept(self, spark):
         new = _df(spark, [(1, OTHER), (2, OTHER)])
